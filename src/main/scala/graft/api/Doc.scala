@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.css.{ArenaAccess, Engine, SelectorAst}
-import graft.model.{Arena, NodeRec}
+import graft.model.Arena
 import graft.ops.TreeOps
 import graft.sources.{HtmlParser, Serializer}
 
@@ -74,14 +74,11 @@ final class Doc(val arena: Arena) {
 
   def normalize(): Unit = TreeOps.normalize(arena, 0)
   def validate: Option[String] = TreeOps.validate(arena)
-
-  def toRecs: Array[NodeRec] = arena.toRecs
 }
 
 object Doc {
-  def parse(html: String): Doc = new Doc(graft.sources.Renumber.preorder(HtmlParser.parseDocument(html)))
-  def fragment(html: String): Doc = new Doc(graft.sources.Renumber.preorder(HtmlParser.parseFragment(html)))
-  def fromRecs(recs: Seq[NodeRec]): Doc = new Doc(Arena.fromRecs(recs))
+  def parse(html: String): Doc = new Doc(HtmlParser.parse(html, fragment = false))
+  def fragment(html: String): Doc = new Doc(HtmlParser.parse(html, fragment = true))
 }
 
 final class Sel(val doc: Doc, val ids: Seq[Int]) {

@@ -2,62 +2,6 @@ package graft.model
 
 import scala.collection.mutable
 
-/**
- * The canonical node record — one element of a document's `nodes` array.
- *
- * A dom_query document is an arena of tree nodes (`Tree { nodes: Vec<TreeNode> }`,
- * reference `src/dom_tree/tree.rs:20-22`); a node's identity is its array index
- * (`src/node.rs:24-27`) and each node carries five intra-tree pointers
- * (`src/node/inner.rs:8-23`). We keep exactly that relational encoding as a
- * Spark `ARRAY<STRUCT<...>>` per document row, plus derived structural columns
- * computed once at ingest so CSS structural pseudo-classes become integer
- * comparisons (SURVEY.md §1.4, §2.2 P7).
- *
- * `-1` encodes "no pointer" (reference `Option<NodeId>` = None).
- *
- * Derived columns (valid for preorder-numbered, freshly-ingested trees):
- *  - depth:              distance from root (root = 0); -1 for detached nodes
- *  - subtree_end:        largest arena index in this node's subtree (inclusive);
- *                        preorder numbering makes subtrees contiguous ranges
- *                        (reference ids are assigned in parse order,
- *                        `src/dom_tree/ops.rs:164-168`)
- *  - elem_pos_in_parent: 1-based position among *element* siblings (for :nth-child
- *                        semantics over elements, reference skips non-elements,
- *                        `src/node/selector.rs:59-67`); 0 for non-elements
- *  - elem_pos_from_end:  1-based position from the end among element siblings
- *  - type_pos_in_parent: 1-based position among element siblings with same tag name
- *  - n_elem_children:    number of element children
- *  - prev_elem_sib / next_elem_sib: nearest element sibling indices (-1 = none)
- */
-case class NodeRec(
-    kind: String, // document|fragment|doctype|element|text|comment|pi
-    name: String, // element tag (lowercase) or doctype name; null otherwise
-    attrs: Map[String, String],
-    class_list: Seq[String],
-    text: String, // text/comment/pi contents; null otherwise
-    media_ref: String, // opaque media pointer for interleaved media spans
-    parent: Int,
-    prev_sibling: Int,
-    next_sibling: Int,
-    first_child: Int,
-    last_child: Int,
-    template_contents: Int,
-    depth: Int,
-    subtree_end: Int,
-    elem_pos_in_parent: Int,
-    elem_pos_from_end: Int,
-    type_pos_in_parent: Int,
-    n_elem_children: Int,
-    prev_elem_sib: Int,
-    next_elem_sib: Int,
-    // stored element namespace — "html" | "svg" | "math"; null for
-    // non-elements. STATE, not structural inference (reference carries
-    // QualName per element, `src/node/node_data.rs:64`, `dom_tree/tree.rs:
-    // 41-64`): a reparented foreign subtree keeps its namespace, so
-    // serialization/void rules can't silently flip on a legal mutation.
-    ns: String = "html"
-)
-
 /** Canonical interchange span (BASELINE.json input_hint): one row of the
   * preorder-flattened document. `offset` == preorder position. */
 case class Span(kind: String, text: String, media_ref: String, offset: Int)
@@ -298,8 +242,9 @@ final class Arena {
     count
   }
 
-  /** Derived structural columns, computed in one pass (shared by the
-    * record materializer and the direct Catalyst converter). */
+  /** Derived structural columns, computed in one pass by
+    * [[graft.spark.NodeSchema.arenaToArrayData]] (contract on
+    * [[graft.spark.NodeSchema.nodeStruct]]). */
   final class Derived(n: Int) {
     val depth = Array.fill(n)(-1)
     val subtreeEnd = Array.tabulate(n)(identity)
@@ -409,64 +354,5 @@ final class Arena {
       p += 1
     }
     d
-  }
-
-  /** Finalize to the immutable record array with derived structural columns. */
-  def toRecs: Array[NodeRec] = {
-    val n = nodes.length
-    val d = computeDerived
-    import d._
-    Array.tabulate(n) { i =>
-      val nd = nodes(i)
-      NodeRec(
-        kind = nd.kind,
-        name = nd.name,
-        // VectorMap preserves attribute insertion order through Spark's map
-        // encoder (reference keeps attrs as an ordered Vec<Attr>,
-        // node_data.rs:66) — needed for byte-exact HTML serialization.
-        attrs =
-          if (nd.attrs == null) null
-          else scala.collection.immutable.VectorMap(nd.attrs.toSeq: _*),
-        class_list = if (nd.isElement) nd.classList else null,
-        text = nd.text,
-        media_ref = nd.mediaRef,
-        parent = nd.parent,
-        prev_sibling = nd.prev,
-        next_sibling = nd.next,
-        first_child = nd.firstChild,
-        last_child = nd.lastChild,
-        template_contents = nd.templateContents,
-        depth = depth(i),
-        subtree_end = subtreeEnd(i),
-        elem_pos_in_parent = elemPos(i),
-        elem_pos_from_end = elemPosEnd(i),
-        type_pos_in_parent = typePos(i),
-        n_elem_children = nElemChildren(i),
-        prev_elem_sib = prevElem(i),
-        next_elem_sib = nextElem(i),
-        ns = if (nd.isElement) nd.ns else null
-      )
-    }
-  }
-}
-
-object Arena {
-  /** Rebuild a mutable arena from the immutable record array (for mutation
-    * operators running inside expressions over stored node arrays). */
-  def fromRecs(recs: Seq[NodeRec]): Arena = {
-    val a = new Arena
-    recs.foreach { r =>
-      val n = new MutNode(r.kind, r.name, r.text, r.media_ref)
-      if (r.attrs != null) n.attrs = mutable.LinkedHashMap(r.attrs.toSeq: _*)
-      if (r.ns != null) n.ns = r.ns
-      n.parent = r.parent
-      n.prev = r.prev_sibling
-      n.next = r.next_sibling
-      n.firstChild = r.first_child
-      n.lastChild = r.last_child
-      n.templateContents = r.template_contents
-      a.nodes += n
-    }
-    a
   }
 }

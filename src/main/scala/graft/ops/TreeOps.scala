@@ -389,8 +389,19 @@ object TreeOps {
   def toFragment(src: Arena, srcId: Int): Arena = {
     // the root or the <html> element clone the WHOLE tree
     // (`node_ref.rs:744-749` returns `tree.clone()`)
-    if (srcId == 0 || (src(srcId).isElement && src(srcId).name == "html"))
-      return Arena.fromRecs(src.toRecs.toIndexedSeq)
+    if (srcId == 0 || (src(srcId).isElement && src(srcId).name == "html")) {
+      val out = new Arena
+      src.nodes.foreach { s =>
+        val m = s.deepCopyShallow()
+        m.parent = s.parent
+        m.prev = s.prev
+        m.next = s.next
+        m.firstChild = s.firstChild
+        m.lastChild = s.lastChild
+        out.nodes += m
+      }
+      return out
+    }
     // otherwise build the parser's fragment scaffold — root(0), html(1),
     // detached stray body(2) — and hang the clone under <html>
     // (`node_ref.rs:751-766`; layout matches parseFragment so merge/select

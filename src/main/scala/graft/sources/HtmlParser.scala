@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.model.{Arena, MutNode, NodeKind, NodeRec}
+import graft.model.{Arena, MutNode, NodeKind}
 import scala.collection.mutable
 
 /**
@@ -1273,11 +1273,10 @@ object HtmlParser {
     }
   }
 
-  /** Parse + finalize to immutable records (preorder renumbered). */
-  def parseToRecs(html: String, fragment: Boolean = false): Array[NodeRec] = {
-    val a = if (fragment) parseFragment(html) else parseDocument(html)
-    Renumber.preorder(a).toRecs
-  }
+  /** Parse a document or fragment and renumber it to preorder — the ingest
+    * path behind `parse_html`, `parse_html_meta` and `Doc.parse`. */
+  def parse(html: String, fragment: Boolean): Arena =
+    Renumber.preorder(build(html, fragment))
 }
 
 /**

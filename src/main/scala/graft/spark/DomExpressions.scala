@@ -5,6 +5,7 @@ import graft.model.Arena
 import graft.ops.TreeOps
 import graft.sources.{HtmlParser, Serializer}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -22,13 +23,27 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * The selector string must be a foldable literal — the plan compiles ONCE on
  * first evaluation (the reference's reusable-Matcher pattern,
- * `src/matcher.rs:24-33`, README.md:294-315).
+ * `src/matcher.rs:24-33`, README.md:294-315). Selector, op and mode literals
+ * are checked in `checkInputDataTypes`, so a bad one fails analysis before
+ * any task runs.
  */
 object DomExprUtil {
-  def compile(e: Expression): List[SelectorAst.Complex] = {
-    require(e.foldable, "selector must be a literal")
+  def compile(e: Expression): List[SelectorAst.Complex] =
     SelectorAst.parse(e.eval(InternalRow.empty).toString)
-  }
+
+  /** Analysis-time check of a literal string argument: foldable, non-null
+    * and accepted by `valid`. */
+  def checkLiteral(e: Expression, what: String)(valid: String => Boolean): TypeCheckResult =
+    if (!e.foldable) TypeCheckResult.TypeCheckFailure(s"$what must be a literal")
+    else e.eval(InternalRow.empty) match {
+      case null => TypeCheckResult.TypeCheckFailure(s"$what must not be null")
+      case v if valid(v.toString) => TypeCheckResult.TypeCheckSuccess
+      case v => TypeCheckResult.TypeCheckFailure(s"invalid $what '$v'")
+    }
+  def checkSelector(e: Expression): TypeCheckResult =
+    checkLiteral(e, "selector")(SelectorAst.tryParse(_).isDefined)
+  def firstFailure(checks: TypeCheckResult*): TypeCheckResult =
+    checks.find(_.isFailure).getOrElse(TypeCheckResult.TypeCheckSuccess)
   def intsToArray(xs: Array[Int]): GenericArrayData =
     new GenericArrayData(xs.map(x => x: Any))
   def idsFrom(a: ArrayData): Seq[Int] = {
@@ -42,10 +57,7 @@ case class ParseHtml(child: Expression, fragment: Boolean)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = NodeSchema.nodesArrayType
   override def nullSafeEval(html: Any): Any = {
-    val arena0 =
-      if (fragment) HtmlParser.parseFragment(html.toString)
-      else HtmlParser.parseDocument(html.toString)
-    NodeSchema.arenaToArrayData(graft.sources.Renumber.preorder(arena0))
+    NodeSchema.arenaToArrayData(HtmlParser.parse(html.toString, fragment))
   }
   override def prettyName: String = if (fragment) "parse_fragment" else "parse_html"
   override protected def withNewChildInternal(c: Expression): ParseHtml = copy(child = c)
@@ -55,6 +67,7 @@ case class ParseHtml(child: Expression, fragment: Boolean)
 case class CssSelect(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   @transient private lazy val plan = DomExprUtil.compile(right)
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(right)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, css: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -70,6 +83,7 @@ case class CssSelect(left: Expression, right: Expression)
 case class CssSelectFirst(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   @transient private lazy val plan = DomExprUtil.compile(right)
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(right)
   override def dataType: DataType = IntegerType
   override def nullSafeEval(nodes: Any, css: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -85,6 +99,7 @@ case class CssSelectFirst(left: Expression, right: Expression)
 case class CssSelectUnder(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
   @transient private lazy val plan = DomExprUtil.compile(third)
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any, css: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -100,6 +115,7 @@ case class CssSelectUnder(first: Expression, second: Expression, third: Expressi
 case class CssFilter(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
   @transient private lazy val plan = DomExprUtil.compile(third)
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any, css: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -115,6 +131,7 @@ case class CssFilter(first: Expression, second: Expression, third: Expression)
 case class CssIs(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
   @transient private lazy val plan = DomExprUtil.compile(third)
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = BooleanType
   override def nullSafeEval(nodes: Any, ids: Any, css: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -156,10 +173,7 @@ case class ParseHtmlMeta(child: Expression, fragment: Boolean)
     StructField("errors", ArrayType(StringType, containsNull = false), nullable = false),
     StructField("quirks_mode", StringType, nullable = false)))
   override def nullSafeEval(html: Any): Any = {
-    val arena0 =
-      if (fragment) HtmlParser.parseFragment(html.toString)
-      else HtmlParser.parseDocument(html.toString)
-    val arena = graft.sources.Renumber.preorder(arena0)
+    val arena = HtmlParser.parse(html.toString, fragment)
     InternalRow(
       NodeSchema.arenaToArrayData(arena),
       new GenericArrayData(arena.errors.map(e => UTF8String.fromString(e): Any).toArray),
@@ -180,6 +194,10 @@ case class DomCopySelection(children: Seq[Expression])
   @transient private lazy val targetPlan = DomExprUtil.compile(children(1))
   @transient private lazy val sourcePlan = DomExprUtil.compile(children(3))
   private lazy val mode = children(4).eval(InternalRow.empty).toString
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.firstFailure(
+    DomExprUtil.checkSelector(children(1)),
+    DomExprUtil.checkSelector(children(3)),
+    DomExprUtil.checkLiteral(children(4), "mode")(Set("append", "replace")))
   override def dataType: DataType = NodeSchema.nodesArrayType
   override def nullable: Boolean = children.head.nullable || children(2).nullable
   override def foldable: Boolean = false
@@ -447,114 +465,23 @@ case class DomNormCharCount(left: Expression, right: Expression)
 }
 
 /**
- * `dom_mutate(nodes, 'css', 'op', arg1, arg2)` → new nodes array with the
- * mutation applied to every node matching the selector (M1-M18 dispatch).
- * Ops: set_attr(k,v) remove_attr(k) add_class(c) remove_class(c) rename(n)
- * set_text(t) remove() append_html(h) prepend_html(h) set_html(h)
+ * `dom_mutate_ops(nodes, css1, op1, a1, a2, css2, op2, a1, a2, …)` →
+ * new nodes array with a whole mutation PIPELINE applied in one expression:
+ * ONE ArrayData→Arena decode and ONE rebuild per row regardless of op count.
+ * Each op re-selects against the current arena, so op N sees op N-1's result
+ * exactly like chained calls. `dom_mutate(nodes, 'css', 'op', arg1, arg2)` is
+ * the one-op form ([[DomMutateOps.single]]).
+ *
+ * Ops (M1-M18): set_attr(k,v) remove_attr(k) add_class(c) remove_class(c)
+ * rename(n) set_text(t) remove() append_html(h) prepend_html(h) set_html(h)
  * before_html(h) after_html(h) replace_with_html(h) wrap_html(h) unwrap()
  * strip_elements(names-csv) normalize() append_children(css)
  * prepend_children(css) reparent_children(dest-css) remove_children()
  * to_fragment().
  *
- * The rebuild goes ArrayData → Arena → pointer surgery → records → ArrayData;
- * derived structural columns are recomputed (post-mutation trees lose
- * preorder contiguity — ids stay stable like the reference, `ops.rs:350-383`).
- */
-case class DomMutate(children: Seq[Expression]) extends Expression with CodegenFallback {
-  require(children.length == 5, "dom_mutate(nodes, css, op, arg1, arg2)")
-  @transient private lazy val plan = DomExprUtil.compile(children(1))
-  private lazy val opName = children(2).eval(InternalRow.empty).toString
-  override def dataType: DataType = NodeSchema.nodesArrayType
-  override def nullable: Boolean = children.head.nullable
-  override def foldable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val nodesVal = children.head.eval(input)
-    if (nodesVal == null) return null
-    val a1 = children(3).eval(input)
-    val a2 = children(4).eval(input)
-    val arg1 = if (a1 == null) null else a1.toString
-    val arg2 = if (a2 == null) null else a2.toString
-    val arena = new ArrayDataAccess(nodesVal.asInstanceOf[ArrayData]).toArena
-    NodeSchema.arenaToArrayData(DomMutate.applyOp(arena, plan, opName, arg1, arg2))
-  }
-  override def prettyName: String = "dom_mutate"
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): DomMutate =
-    copy(children = cs)
-}
-
-object DomMutate {
-  /** Compiled plans for ops whose arg1 is itself a selector
-    * (append_children / prepend_children / reparent_children): the main css
-    * is a literal cached on the expression, but arg selectors arrive as data
-    * strings — cache per distinct text so hot loops never re-parse. */
-  private val argPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[String, List[SelectorAst.Complex]]()
-  private def argPlan(css: String): List[SelectorAst.Complex] =
-    argPlanCache.computeIfAbsent(css, c => SelectorAst.parse(c))
-
-  /** One selector-targeted mutation over a live arena (shared by the
-    * single-op and multi-op expressions). Returns the arena to continue
-    * with: the input for in-place pointer surgery, or a REPLACEMENT for the
-    * whole-document ops (to_fragment). */
-  def applyOp(arena: Arena, plan: List[SelectorAst.Complex], opName: String,
-      arg1: String, arg2: String): Arena = {
-    val targets = Engine.select(new graft.css.ArenaAccess(arena), Seq(0), plan)
-    if (opName == "to_fragment") {
-      // C3: the document becomes the standalone fragment clone of the FIRST
-      // target (`node_ref.rs:743-767` semantics via TreeOps.toFragment)
-      return targets.headOption.map(t => TreeOps.toFragment(arena, t)).getOrElse(arena)
-    }
-    // first match of an arg selector against the CURRENT arena state —
-    // resolved per target so op k sees op k-1's surgery, like chained calls
-    def firstMatch(css: String): Int =
-      Engine.select(new graft.css.ArenaAccess(arena), Seq(0), argPlan(css))
-        .headOption.getOrElse(-1)
-    targets.foreach { t =>
-      opName match {
-        case "append_children" =>
-          // M6: move the arg1-selected node AND its following siblings in
-          // as children of the target
-          val first = firstMatch(arg1)
-          if (first != -1) TreeOps.appendChildren(arena, t, first)
-        case "prepend_children" =>
-          val first = firstMatch(arg1)
-          if (first != -1) TreeOps.prependChildren(arena, t, first)
-        case "reparent_children" =>
-          // M8: move ALL children of the target under the arg1 first match
-          val to = firstMatch(arg1)
-          if (to != -1) TreeOps.reparentChildren(arena, t, to)
-        case "remove_children" => TreeOps.removeChildren(arena, t)
-        case "set_attr" => TreeOps.setAttr(arena, t, arg1, arg2)
-        case "remove_attr" => TreeOps.removeAttrs(arena, t, Seq(arg1))
-        case "add_class" => TreeOps.addClass(arena, t, arg1)
-        case "remove_class" => TreeOps.removeClass(arena, t, arg1)
-        case "rename" => TreeOps.rename(arena, t, arg1)
-        case "set_text" => TreeOps.setText(arena, t, arg1)
-        case "remove" => TreeOps.removeFromParent(arena, t)
-        case "append_html" => TreeOps.appendHtml(arena, t, arg1)
-        case "prepend_html" => TreeOps.prependHtml(arena, t, arg1)
-        case "set_html" => TreeOps.setHtml(arena, t, arg1)
-        case "before_html" => TreeOps.beforeHtml(arena, t, arg1)
-        case "after_html" => TreeOps.afterHtml(arena, t, arg1)
-        case "replace_with_html" => TreeOps.replaceWithHtml(arena, t, arg1)
-        case "wrap_html" => TreeOps.wrapHtml(arena, t, arg1)
-        case "unwrap" => TreeOps.unwrapNode(arena, t)
-        case "strip_elements" => TreeOps.stripElements(arena, t, arg1.split(",").toSet)
-        case "normalize" => TreeOps.normalize(arena, t)
-        case other => throw new IllegalArgumentException(s"unknown dom_mutate op '$other'")
-      }
-    }
-    arena
-  }
-}
-
-/**
- * `dom_mutate_ops(nodes, css1, op1, a1, a2, css2, op2, a1, a2, …)` →
- * a whole mutation PIPELINE in one expression: ONE ArrayData→Arena decode and
- * ONE rebuild per row regardless of op count (a chain of nested `dom_mutate`
- * calls pays the round-trip per op). Each op re-selects against the current
- * arena, so op N sees op N-1's result exactly like chained calls.
+ * The rebuild goes ArrayData → Arena → pointer surgery → ArrayData; derived
+ * structural columns are recomputed (post-mutation trees lose preorder
+ * contiguity — ids stay stable like the reference, `ops.rs:350-383`).
  */
 case class DomMutateOps(children: Seq[Expression]) extends Expression with CodegenFallback {
   require(children.length > 1 && (children.length - 1) % 4 == 0,
@@ -564,6 +491,11 @@ case class DomMutateOps(children: Seq[Expression]) extends Expression with Codeg
     (0 until opCount).map(i => DomExprUtil.compile(children(1 + 4 * i)))
   private lazy val opNames =
     (0 until opCount).map(i => children(2 + 4 * i).eval(InternalRow.empty).toString)
+  override def checkInputDataTypes(): TypeCheckResult =
+    DomExprUtil.firstFailure((0 until opCount).flatMap(i => Seq(
+      DomExprUtil.checkSelector(children(1 + 4 * i)),
+      DomExprUtil.checkLiteral(children(2 + 4 * i), "dom_mutate op")(DomMutateOps.knownOps)
+    )): _*)
   override def dataType: DataType = NodeSchema.nodesArrayType
   override def nullable: Boolean = children.head.nullable
   override def foldable: Boolean = false
@@ -575,16 +507,98 @@ case class DomMutateOps(children: Seq[Expression]) extends Expression with Codeg
     while (i < opCount) {
       val a1 = children(3 + 4 * i).eval(input)
       val a2 = children(4 + 4 * i).eval(input)
-      arena = DomMutate.applyOp(arena, plans(i), opNames(i),
+      arena = DomMutateOps.applyOp(arena, plans(i), opNames(i),
         if (a1 == null) null else a1.toString,
         if (a2 == null) null else a2.toString)
       i += 1
     }
     NodeSchema.arenaToArrayData(arena)
   }
-  override def prettyName: String = "dom_mutate_ops"
+  // the one-op form keeps its SQL name, so `dom_mutate(...)` columns read as written
+  override def prettyName: String = if (opCount == 1) "dom_mutate" else "dom_mutate_ops"
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): DomMutateOps =
     copy(children = cs)
+}
+
+object DomMutateOps {
+  /** `dom_mutate(nodes, css, op[, arg1[, arg2]])`: the one-op pipeline,
+    * missing args padded with NULL. */
+  def single(es: Seq[Expression]): DomMutateOps = {
+    require(es.length >= 3 && es.length <= 5, "dom_mutate(nodes, css, op[, arg1[, arg2]])")
+    DomMutateOps(es ++ Seq.fill(5 - es.length)(Literal(null)))
+  }
+
+  /** Compiled plans for ops whose arg1 is itself a selector
+    * (append_children / prepend_children / reparent_children): the main css
+    * is a literal cached on the expression, but arg selectors arrive as data
+    * strings — cache per distinct text so hot loops never re-parse. */
+  private val argPlanCache =
+    new java.util.concurrent.ConcurrentHashMap[String, List[SelectorAst.Complex]]()
+  private def argPlan(css: String): List[SelectorAst.Complex] =
+    argPlanCache.computeIfAbsent(css, c => SelectorAst.parse(c))
+
+  // first match of an arg selector against the CURRENT arena state —
+  // resolved per target so op k sees op k-1's surgery, like chained calls
+  private def firstMatch(arena: Arena, css: String): Int =
+    Engine.select(new graft.css.ArenaAccess(arena), Seq(0), argPlan(css))
+      .headOption.getOrElse(-1)
+
+  /** The in-place ops by name: (arena, target, arg1, arg2) → pointer surgery. */
+  private val inPlaceOps: Map[String, (Arena, Int, String, String) => Unit] = Map(
+    // M6: move the arg1-selected node AND its following siblings in as
+    // children of the target
+    "append_children" -> { (a, t, x, _) =>
+      val first = firstMatch(a, x)
+      if (first != -1) TreeOps.appendChildren(a, t, first)
+    },
+    "prepend_children" -> { (a, t, x, _) =>
+      val first = firstMatch(a, x)
+      if (first != -1) TreeOps.prependChildren(a, t, first)
+    },
+    // M8: move ALL children of the target under the arg1 first match
+    "reparent_children" -> { (a, t, x, _) =>
+      val to = firstMatch(a, x)
+      if (to != -1) TreeOps.reparentChildren(a, t, to)
+    },
+    "remove_children" -> ((a, t, _, _) => TreeOps.removeChildren(a, t)),
+    "set_attr" -> ((a, t, x, y) => TreeOps.setAttr(a, t, x, y)),
+    "remove_attr" -> ((a, t, x, _) => TreeOps.removeAttrs(a, t, Seq(x))),
+    "add_class" -> ((a, t, x, _) => TreeOps.addClass(a, t, x)),
+    "remove_class" -> ((a, t, x, _) => TreeOps.removeClass(a, t, x)),
+    "rename" -> ((a, t, x, _) => TreeOps.rename(a, t, x)),
+    "set_text" -> ((a, t, x, _) => TreeOps.setText(a, t, x)),
+    "remove" -> ((a, t, _, _) => TreeOps.removeFromParent(a, t)),
+    "append_html" -> ((a, t, x, _) => TreeOps.appendHtml(a, t, x)),
+    "prepend_html" -> ((a, t, x, _) => TreeOps.prependHtml(a, t, x)),
+    "set_html" -> ((a, t, x, _) => TreeOps.setHtml(a, t, x)),
+    "before_html" -> ((a, t, x, _) => TreeOps.beforeHtml(a, t, x)),
+    "after_html" -> ((a, t, x, _) => TreeOps.afterHtml(a, t, x)),
+    "replace_with_html" -> ((a, t, x, _) => TreeOps.replaceWithHtml(a, t, x)),
+    "wrap_html" -> ((a, t, x, _) => TreeOps.wrapHtml(a, t, x)),
+    "unwrap" -> ((a, t, _, _) => TreeOps.unwrapNode(a, t)),
+    "strip_elements" -> ((a, t, x, _) => TreeOps.stripElements(a, t, x.split(",").toSet)),
+    "normalize" -> ((a, t, _, _) => TreeOps.normalize(a, t))
+  )
+
+  /** Every op name `dom_mutate` / `dom_mutate_ops` accept. */
+  val knownOps: Set[String] = inPlaceOps.keySet + "to_fragment"
+
+  /** One selector-targeted mutation over a live arena. Returns the arena to
+    * continue with: the input for in-place pointer surgery, or a
+    * REPLACEMENT for the whole-document ops (to_fragment). */
+  def applyOp(arena: Arena, plan: List[SelectorAst.Complex], opName: String,
+      arg1: String, arg2: String): Arena = {
+    val targets = Engine.select(new graft.css.ArenaAccess(arena), Seq(0), plan)
+    if (opName == "to_fragment") {
+      // C3: the document becomes the standalone fragment clone of the FIRST
+      // target (`node_ref.rs:743-767` semantics via TreeOps.toFragment)
+      return targets.headOption.map(t => TreeOps.toFragment(arena, t)).getOrElse(arena)
+    }
+    val op = inPlaceOps.getOrElse(opName,
+      throw new IllegalArgumentException(s"unknown dom_mutate op '$opName'"))
+    targets.foreach(t => op(arena, t, arg1, arg2))
+    arena
+  }
 }
 
 /**

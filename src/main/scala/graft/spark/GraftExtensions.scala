@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
     def inject(name: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.spark", name), builder))
@@ -34,7 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("dom_formatted_text")(es => DomFormattedText(es(0), es(1)))
     inject("dom_md")(es => DomMd(es(0), es(1)))
     inject("dom_norm_char_count")(es => DomNormCharCount(es(0), es(1)))
-    inject("dom_mutate")(es => DomMutate(es ++ Seq.fill(5 - es.length)(Literal(null))))
+    inject("dom_mutate")(DomMutateOps.single)
     inject("dom_spans")(es => DomSpans(es.head))
     inject("dom_validate")(es => DomValidate(es.head))
     inject("dom_base_uri")(es => DomBaseUri(es.head))

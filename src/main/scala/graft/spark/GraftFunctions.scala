@@ -2,7 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /**
@@ -44,10 +44,7 @@ object GraftFunctions {
     add("dom_formatted_text")(es => DomFormattedText(es(0), es(1)))
     add("dom_md")(es => DomMd(es(0), es(1)))
     add("dom_norm_char_count")(es => DomNormCharCount(es(0), es(1)))
-    add("dom_mutate") { es =>
-      val padded = es ++ Seq.fill(5 - es.length)(Literal(null))
-      DomMutate(padded)
-    }
+    add("dom_mutate")(DomMutateOps.single)
     add("dom_mutate_ops")(es => DomMutateOps(es))
     add("dom_has_attr")(es => DomHasAttr(es(0), es(1), es(2)))
     add("dom_html_root")(es => DomHtmlRoot(es.head))

@@ -1,7 +1,6 @@
 package graft.spark
 
 import graft.css.NodeAccess
-import graft.model.NodeRec
 import graft.sources.AttrIterable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
@@ -10,18 +9,51 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Canonical Spark schema of the per-document `nodes` array — the columnar
- * encoding of the reference arena (SURVEY.md §1.4). Field order is the
- * contract for the expressions in [[DomExpressions]].
+ * encoding of the reference arena (SURVEY.md §1.4), and the one place the
+ * node layout is written out: [[nodeStruct]] declares it,
+ * [[arenaToArrayData]] writes it and [[ArrayDataAccess]] reads it.
  */
 object NodeSchema {
 
+  /**
+   * One element of a document's `nodes` array.
+   *
+   * A dom_query document is an arena of tree nodes (`Tree { nodes: Vec<TreeNode> }`,
+   * reference `src/dom_tree/tree.rs:20-22`); a node's identity is its array index
+   * (`src/node.rs:24-27`) and each node carries five intra-tree pointers
+   * (`src/node/inner.rs:8-23`). We keep exactly that relational encoding, plus
+   * derived structural columns computed once at encode time so CSS structural
+   * pseudo-classes become integer comparisons (SURVEY.md §1.4, §2.2 P7).
+   * Field order is the contract for the expressions in [[DomExpressions]].
+   *
+   * `-1` encodes "no pointer" (reference `Option<NodeId>` = None).
+   *
+   * Derived columns (valid for preorder-numbered, freshly-ingested trees):
+   *  - depth:              distance from root (root = 0); -1 for detached nodes
+   *  - subtree_end:        largest arena index in this node's subtree (inclusive);
+   *                        preorder numbering makes subtrees contiguous ranges
+   *                        (reference ids are assigned in parse order,
+   *                        `src/dom_tree/ops.rs:164-168`)
+   *  - elem_pos_in_parent: 1-based position among *element* siblings (for :nth-child
+   *                        semantics over elements, reference skips non-elements,
+   *                        `src/node/selector.rs:59-67`); 0 for non-elements
+   *  - elem_pos_from_end:  1-based position from the end among element siblings
+   *  - type_pos_in_parent: 1-based position among element siblings with same tag name
+   *  - n_elem_children:    number of element children
+   *  - prev_elem_sib / next_elem_sib: nearest element sibling indices (-1 = none)
+   *
+   * `attrs` keeps the attribute insertion order (reference keeps attrs as an
+   * ordered `Vec<Attr>`, `node_data.rs:66`) — needed for byte-exact HTML
+   * serialization. `class_list` holds the ASCII-whitespace-split tokens of
+   * the class attribute for elements, null otherwise.
+   */
   val nodeStruct: StructType = StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("name", StringType),
+    StructField("kind", StringType, nullable = false), // document|fragment|doctype|element|text|comment|pi
+    StructField("name", StringType), // element tag (lowercase) or doctype name; null otherwise
     StructField("attrs", MapType(StringType, StringType)),
     StructField("class_list", ArrayType(StringType)),
-    StructField("text", StringType),
-    StructField("media_ref", StringType),
+    StructField("text", StringType), // text/comment/pi contents; null otherwise
+    StructField("media_ref", StringType), // opaque media pointer for interleaved media spans
     StructField("parent", IntegerType, nullable = false),
     StructField("prev_sibling", IntegerType, nullable = false),
     StructField("next_sibling", IntegerType, nullable = false),
@@ -37,7 +69,10 @@ object NodeSchema {
     StructField("prev_elem_sib", IntegerType, nullable = false),
     StructField("next_elem_sib", IntegerType, nullable = false),
     // stored element namespace ("html"|"svg"|"math"; null for non-elements) —
-    // STATE, not structural inference (reference QualName, node_data.rs:64)
+    // STATE, not structural inference (reference carries QualName per
+    // element, `src/node/node_data.rs:64`): a reparented foreign subtree
+    // keeps its namespace, so serialization/void rules can't silently flip
+    // on a legal mutation
     StructField("ns", StringType)
   ))
 
@@ -58,6 +93,12 @@ object NodeSchema {
   final val TEMPLATE_CONTENTS = 11
   final val DEPTH = 12
   final val SUBTREE_END = 13
+  final val ELEM_POS_IN_PARENT = 14
+  final val ELEM_POS_FROM_END = 15
+  final val TYPE_POS_IN_PARENT = 16
+  final val N_ELEM_CHILDREN = 17
+  final val PREV_ELEM_SIB = 18
+  final val NEXT_ELEM_SIB = 19
   final val NS = 20
   final val N_FIELDS = 21
 
@@ -92,9 +133,8 @@ object NodeSchema {
   @inline private def box(i: Int): Any =
     if (i >= -1 && i < 65536) intBox(i + 1) else java.lang.Integer.valueOf(i)
 
-  /** Direct Arena → Catalyst conversion (the parse hot path): computes the
-    * derived columns and emits InternalRows without materializing NodeRec
-    * objects (VectorMaps and Seq wrappers were half the ingest allocation). */
+  /** Arena → Catalyst conversion (the parse hot path and the only encoder):
+    * computes the derived columns and emits one InternalRow per node. */
   def arenaToArrayData(a: graft.model.Arena): GenericArrayData = {
     val n = a.size
     val d = a.computeDerived
@@ -130,61 +170,15 @@ object NodeSchema {
       vals(TEMPLATE_CONTENTS) = box(nd.templateContents)
       vals(DEPTH) = box(d.depth(i))
       vals(SUBTREE_END) = box(d.subtreeEnd(i))
-      vals(14) = box(d.elemPos(i))
-      vals(15) = box(d.elemPosEnd(i))
-      vals(16) = box(d.typePos(i))
-      vals(17) = box(d.nElemChildren(i))
-      vals(18) = box(d.prevElem(i))
-      vals(19) = box(d.nextElem(i))
+      vals(ELEM_POS_IN_PARENT) = box(d.elemPos(i))
+      vals(ELEM_POS_FROM_END) = box(d.elemPosEnd(i))
+      vals(TYPE_POS_IN_PARENT) = box(d.typePos(i))
+      vals(N_ELEM_CHILDREN) = box(d.nElemChildren(i))
+      vals(PREV_ELEM_SIB) = box(d.prevElem(i))
+      vals(NEXT_ELEM_SIB) = box(d.nextElem(i))
       vals(NS) = if (nd.isElement) utf8(nd.ns) else null
       // GenericInternalRow wraps the array without copying (fromSeq copies)
       rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-      i += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  /** Convert engine records to Catalyst values (for ParseHtml & friends). */
-  def recsToArrayData(recs: Array[NodeRec]): GenericArrayData = {
-    val rows = new Array[Any](recs.length)
-    var i = 0
-    while (i < recs.length) {
-      val r = recs(i)
-      val vals = new Array[Any](N_FIELDS)
-      vals(KIND) = utf8(r.kind)
-      vals(NAME) = if (r.name == null) null else utf8(r.name)
-      vals(ATTRS) =
-        if (r.attrs == null) null
-        else {
-          val ks = new Array[Any](r.attrs.size)
-          val vs = new Array[Any](r.attrs.size)
-          var j = 0
-          r.attrs.foreach { case (k, v) =>
-            ks(j) = utf8(k); vs(j) = UTF8String.fromString(v); j += 1
-          }
-          new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
-        }
-      vals(CLASS_LIST) =
-        if (r.class_list == null) null
-        else new GenericArrayData(r.class_list.map(c => utf8(c)).toArray[Any])
-      vals(TEXT) = if (r.text == null) null else UTF8String.fromString(r.text)
-      vals(MEDIA_REF) = if (r.media_ref == null) null else UTF8String.fromString(r.media_ref)
-      vals(PARENT) = box(r.parent)
-      vals(PREV_SIBLING) = box(r.prev_sibling)
-      vals(NEXT_SIBLING) = box(r.next_sibling)
-      vals(FIRST_CHILD) = box(r.first_child)
-      vals(LAST_CHILD) = box(r.last_child)
-      vals(TEMPLATE_CONTENTS) = box(r.template_contents)
-      vals(DEPTH) = box(r.depth)
-      vals(SUBTREE_END) = box(r.subtree_end)
-      vals(14) = box(r.elem_pos_in_parent)
-      vals(15) = box(r.elem_pos_from_end)
-      vals(16) = box(r.type_pos_in_parent)
-      vals(17) = box(r.n_elem_children)
-      vals(18) = box(r.prev_elem_sib)
-      vals(19) = box(r.next_elem_sib)
-      vals(NS) = if (r.ns == null) null else utf8(r.ns)
-      rows(i) = InternalRow.fromSeq(vals.toSeq)
       i += 1
     }
     new GenericArrayData(rows)
@@ -333,10 +327,10 @@ final class ArrayDataAccess(arr: ArrayData) extends NodeAccess with AttrIterable
     }
   }
 
-  /** Direct ArrayData → mutable Arena decode for the mutation/validate/copy
-    * expressions: skips the NodeRec + VectorMap materialization per node
-    * that `Arena.fromRecs(toRecs)` paid (derived columns are recomputed on
-    * encode anyway, so only kind/name/payload/attrs/ns/pointers matter). */
+  /** ArrayData → mutable Arena decode for the mutation/validate/copy
+    * expressions (the inverse of [[NodeSchema.arenaToArrayData]]): derived
+    * columns are recomputed on encode, so only kind/name/payload/attrs/ns/
+    * pointers are read. */
   def toArena: graft.model.Arena = {
     val a = new graft.model.Arena
     var i = 0
@@ -367,30 +361,6 @@ final class ArrayDataAccess(arr: ArrayData) extends NodeAccess with AttrIterable
       i += 1
     }
     a
-  }
-
-  /** Rebuild engine records (for mutation expressions that need an Arena). */
-  def toRecs: Array[NodeRec] = Array.tabulate(n) { i =>
-    val r = row(i)
-    NodeRec(
-      kind = kind(i), name = name(i),
-      attrs = if (r.isNullAt(ATTRS)) null
-        else scala.collection.immutable.VectorMap(attrEntries(i): _*),
-      class_list = if (r.isNullAt(CLASS_LIST)) null
-        else {
-          val a = r.getArray(CLASS_LIST)
-          (0 until a.numElements()).map(j => a.getUTF8String(j).toString)
-        },
-      text = text(i), media_ref = mediaRef(i),
-      parent = parent(i), prev_sibling = prevSibling(i), next_sibling = nextSibling(i),
-      first_child = firstChild(i), last_child = lastChild(i),
-      template_contents = templateContents(i),
-      depth = r.getInt(DEPTH), subtree_end = subtreeEnd(i),
-      elem_pos_in_parent = r.getInt(14), elem_pos_from_end = r.getInt(15),
-      type_pos_in_parent = r.getInt(16), n_elem_children = r.getInt(17),
-      prev_elem_sib = r.getInt(18), next_elem_sib = r.getInt(19),
-      ns = if (r.isNullAt(NS)) null else r.getUTF8String(NS).toString
-    )
   }
 }
 

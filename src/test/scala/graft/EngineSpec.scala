@@ -356,15 +356,16 @@ class EngineSpec extends AnyFunSuite {
 
   test("span-sequence invariant: preorder ids & subtree_end contiguity") {
     val doc = Doc.parse(ANCESTORS)
-    val recs = doc.toRecs
+    val enc = Encoded(doc.arena)
+    assert(enc.size == doc.arena.size)
     // preorder-numbered: children ids always greater than parent
-    recs.zipWithIndex.foreach { case (r, i) =>
-      if (r.parent != -1) assert(r.parent < i)
-      assert(r.subtree_end >= i)
+    (0 until enc.size).foreach { i =>
+      if (enc.parent(i) != -1) assert(enc.parent(i) < i)
+      assert(enc.subtreeEnd(i) >= i)
     }
     // subtree of great-ancestor is the contiguous range (idx, subtree_end]
     val ga = doc.select("#great-ancestor").ids.head
-    val inRange = (ga + 1) to recs(ga).subtree_end
+    val inRange = (ga + 1) to enc.subtreeEnd(ga)
     val walked = doc.arena.descendants(ga).toList
     assert(walked.sorted == inRange.toList)
   }

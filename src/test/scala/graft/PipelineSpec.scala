@@ -453,6 +453,46 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("bad selector / op / mode literals fail at analysis, before any task runs") {
+    import graft.spark.{GraftFunctions => F}
+    import org.apache.spark.sql.{AnalysisException, Column}
+    F.register(spark)
+    val docs = spark.range(1).select(F.parse_html(lit("<p>x</p>")).as("nodes"),
+      lit("p").as("css"))
+    val nodes = col("nodes")
+    // DataFrame.select analyzes eagerly: no action is run here
+    def rejected(c: Column, msg: String): Unit = {
+      val e = intercept[AnalysisException](docs.select(c))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    // ops and modes are checked even when the selector matches nothing
+    rejected(F.dom_mutate(nodes, "p.none", "bogus_op"), "invalid dom_mutate op 'bogus_op'")
+    rejected(F.dom_mutate_ops(nodes, Seq(("p", "add_class", lit("a"), lit(null)),
+      ("p.none", "bogus_op", lit(null), lit(null)))), "invalid dom_mutate op 'bogus_op'")
+    rejected(F.dom_copy_selection(nodes, "p.none", nodes, "p", "bogus_mode"),
+      "invalid mode 'bogus_mode'")
+    rejected(F.dom_mutate(nodes, ":+ ^", "remove"), "invalid selector ':+ ^'")
+    rejected(F.dom_copy_selection(nodes, "p", nodes, "[[", "append"), "invalid selector '[['")
+    rejected(F.css_select(nodes, ":+ ^"), "invalid selector ':+ ^'")
+    rejected(F.css_select_first(nodes, "p:bogus"), "invalid selector 'p:bogus'")
+    rejected(F.css_select_under(nodes, F.css_select(nodes, "p"), "[["), "invalid selector '[['")
+    rejected(F.css_filter(nodes, F.css_select(nodes, "p"), "[["), "invalid selector '[['")
+    rejected(F.css_is(nodes, F.css_select(nodes, "p"), "[["), "invalid selector '[['")
+    rejected(call_function("css_select", nodes, col("css")), "selector must be a literal")
+    rejected(call_function("dom_mutate", nodes, lit("p"), lit(null)),
+      "dom_mutate op must not be null")
+    // the SQL surface gets the same check
+    docs.createOrReplaceTempView("bad_literal_docs")
+    val e = intercept[AnalysisException](
+      spark.sql("SELECT dom_mutate(nodes, 'p', 'bogus_op') FROM bad_literal_docs"))
+    assert(e.getMessage.contains("invalid dom_mutate op 'bogus_op'"), e.getMessage)
+    spark.catalog.dropTempView("bad_literal_docs")
+    // valid literals still analyze and run
+    val out = docs.select(size(F.css_select(
+      F.dom_mutate(nodes, "p", "add_class", lit("k")), "p.k"))).head().getInt(0)
+    assert(out == 1)
+  }
+
   test("structured streaming: dom expressions run inside a streaming plan") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.spark.{GraftFunctions => F}

@@ -110,15 +110,21 @@ class PropertySpec extends AnyFunSuite {
     } yield ps.mkString(" ")
   }
 
+  /** The encoded tree (arenaToArrayData → Unsafe → toArena) is valid and
+    * serializes byte-identically to the parsed one. */
+  def assertEncodeRoundTrip(doc: Doc, soup: String): Unit = {
+    val back = new Doc(Encoded(doc.arena).toArena)
+    assert(back.validate.isEmpty, s"encoded tree invalid for soup: $soup")
+    assert(back.html == doc.html, s"encode round trip changed the tree for soup: $soup")
+  }
+
   test("parser fuzz: token soup never throws, always yields a valid tree") {
     forAll(genSoup, 300) { soup =>
       for ((doc, reparse) <- Seq[(Doc, String => Doc)](
           (Doc.parse(soup), Doc.parse _),
           (Doc.fragment(soup), Doc.fragment _))) {
         assert(doc.validate.isEmpty, s"invalid tree for soup: $soup")
-        // every node reachable exactly once; derived columns computable
-        val recs = doc.toRecs
-        assert(recs.nonEmpty)
+        assertEncodeRoundTrip(doc, soup)
         // serialization fixpoint: reparse (same mode) serializes identically
         // (idempotent normal form — what makes stored HTML stable at rest)
         val once = doc.html
@@ -164,7 +170,7 @@ class PropertySpec extends AnyFunSuite {
     forAll(genRichSoup, 200) { soup =>
       for (doc <- Seq(Doc.parse(soup), Doc.fragment(soup))) {
         assert(doc.validate.isEmpty, s"invalid tree for soup: $soup")
-        assert(doc.toRecs.nonEmpty)
+        assertEncodeRoundTrip(doc, soup)
         // re-serialization of the reparse must itself be stable (even when
         // parse∘serialize isn't a fixpoint, serialize∘parse∘serialize is)
         val once = doc.html

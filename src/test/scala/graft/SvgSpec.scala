@@ -186,10 +186,10 @@ class SvgSpec extends AnyFunSuite {
     graft.ops.TreeOps.appendChild(d.arena, pId, areaId)
     assert(d.select("body").innerHtml.getOrElse("") ==
       """<p id="t"><area>x</area></p><svg></svg>""")
-    // the ns column survives the Catalyst round trip (recs → Tungsten rows →
-    // ArrayDataAccess) — the serialization the Spark expressions perform
-    val arr = graft.spark.NodeSchema.recsToArrayData(d.arena.toRecs)
-    val acc = new graft.spark.ArrayDataAccess(arr)
+    // the ns column survives the Catalyst round trip (arenaToArrayData →
+    // UnsafeArrayData → ArrayDataAccess) — the encoding the Spark
+    // expressions perform
+    val acc = Encoded(d.arena)
     val bodyId = (0 until acc.size).find(i => acc.name(i) == "body").get
     assert(graft.sources.Serializer.toHtml(acc, bodyId, includeRoot = false) ==
       """<p id="t"><area>x</area></p><svg></svg>""")

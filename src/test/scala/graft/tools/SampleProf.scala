@@ -18,7 +18,7 @@ object SampleProf {
         mode match {
           case "parse" => acc += HtmlParser.parseDocument(html).size
           case "full" =>
-            val a = graft.sources.Renumber.preorder(HtmlParser.parseDocument(html))
+            val a = HtmlParser.parse(html, fragment = false)
             acc += graft.spark.NodeSchema.arenaToArrayData(a).numElements()
         }
       }
