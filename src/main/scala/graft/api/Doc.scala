@@ -45,7 +45,7 @@ final class Doc(val arena: Arena) {
 
   /** `html>head>base[href]` fast path (F5, `tree.rs:86-95`). */
   def baseUri: Option[String] = {
-    val f = Engine.selectFirst(acc, Seq(0), SelectorAst.parseCached("html > head > base[href]"))
+    val f = acc.baseUriNode
     if (f == -1) None else Option(acc.attr(f, "href"))
   }
 
@@ -61,13 +61,14 @@ final class Doc(val arena: Arena) {
       }
   }
 
-  def htmlRoot: Option[Int] = arena.htmlRoot
+  /** First element child of root = the `<html>` node (`tree.rs:169-173`). */
+  def htmlRoot: Option[Int] = Some(acc.htmlRoot).filter(_ != -1)
   def body: Sel = selectSingle("html > body")
   def head: Sel = selectSingle("html > head")
 
   def html: String = Serializer.toHtml(acc, 0, includeRoot = true, tc)
   def innerHtml: String = Serializer.toHtml(acc, 0, includeRoot = false, tc)
-  def text: String = arena.textOf(0)
+  def text: String = acc.subtreeText(0)
   def formattedText: String = Serializer.formattedText(acc, 0, includeRoot = false)
   def mdText: String = Serializer.toMd(acc, 0, includeRoot = false)
   private def tc: Int => Int = id => arena(id).templateContents
@@ -175,12 +176,12 @@ final class Sel(val doc: Doc, val ids: Seq[Int]) {
   // --- T1-T8: traversals ------------------------------------------------------
 
   /** Element children of each node, deduped (`selection.rs:667-687`). */
-  def children: Sel = distinctSel(ids.flatMap(i => a.childIds(i).filter(a(_).isElement)))
+  def children: Sel = distinctElems(f => ids.foreach(acc.foreachChild(_)(f)))
 
   def parent: Sel = distinctSel(ids.map(i => a(i).parent).filter(p => p != -1 && a(p).isElement))
 
   def ancestors(maxDepth: Int = -1): Sel =
-    distinctSel(ids.flatMap(i => a.ancestors(i, maxDepth).filter(p => a(p).isElement)))
+    distinctElems(f => ids.foreach(acc.foreachAncestor(_, maxDepth)(f)))
 
   def nextSibling: Sel = distinctSel(ids.map(acc.nextElemSibling).filter(_ != -1))
   def prevSibling: Sel = distinctSel(ids.map(acc.prevElemSibling).filter(_ != -1))
@@ -188,6 +189,13 @@ final class Sel(val doc: Doc, val ids: Seq[Int]) {
   private def distinctSel(xs: Seq[Int]): Sel = {
     val seen = scala.collection.mutable.LinkedHashSet[Int]()
     xs.foreach(seen += _)
+    new Sel(doc, seen.toSeq)
+  }
+
+  /** The element ids a walk yields, deduped in first-seen order. */
+  private def distinctElems(walk: (Int => Unit) => Unit): Sel = {
+    val seen = scala.collection.mutable.LinkedHashSet[Int]()
+    walk(i => if (acc.isElement(i)) seen += i)
     new Sel(doc, seen.toSeq)
   }
 
@@ -204,11 +212,11 @@ final class Sel(val doc: Doc, val ids: Seq[Int]) {
   def hasClass(c: String): Boolean = ids.exists(i => acc.hasClass(i, c))
 
   /** Concatenated subtree text of ALL selected nodes (`selection.rs:204-206`). */
-  def text: String = ids.map(a.textOf).mkString("")
-  def immediateText: String = ids.map(a.immediateTextOf).mkString("")
+  def text: String = ids.map(acc.subtreeText).mkString("")
+  def immediateText: String = ids.map(acc.immediateText).mkString("")
   def formattedText: String =
     ids.map(i => Serializer.formattedText(acc, i, includeRoot = true)).mkString("")
-  def normalizedCharCount: Long = ids.map(a.normalizedCharCount).sum
+  def normalizedCharCount: Long = ids.map(acc.normCharCount).sum
 
   /** HTML of the FIRST selected node (`selection.rs:176-200`). */
   def html: Option[String] =

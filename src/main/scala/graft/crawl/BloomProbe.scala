@@ -48,27 +48,25 @@ case class BloomMightContainBc(child: Expression, bc: Broadcast[BloomFilter])
 }
 
 /**
- * Driver-side registry that carries [[Broadcast]] bloom handles into the
+ * Driver-side registry that carries [[Broadcast]] handles into the
  * function-registry builder: a registered SQL function builder only sees
  * child EXPRESSIONS, so the broadcast handle rides in keyed by a literal id
  * (`slot#broadcastId`). Analysis happens eagerly on the driver at DataFrame
  * construction, so the lookup always hits the entry installed just before.
  *
  * One live broadcast per `slot` (e.g. one per session's URL-seen filter):
- * installing a new round's filter releases the previous round's executor
+ * installing a new round's value releases the previous round's executor
  * copies — the multi-round crawl re-broadcasts the (mutated) filter each
  * round, and without the release a long crawl would accumulate one 2 MiB
  * executor block per round.
  */
-object BloomBroadcasts {
-  private val byKey =
-    new java.util.concurrent.ConcurrentHashMap[String, Broadcast[BloomFilter]]()
-  private val slotKey =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+class BroadcastSlots[T](what: String) {
+  private val byKey = new java.util.concurrent.ConcurrentHashMap[String, Broadcast[T]]()
+  private val slotKey = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Register `bc` under `slot`, releasing the slot's previous broadcast.
     * Returns the registry key to embed as the function's id literal. */
-  def install(slot: String, bc: Broadcast[BloomFilter]): String = {
+  def install(slot: String, bc: Broadcast[T]): String = {
     val key = s"$slot#${bc.id}"
     byKey.put(key, bc)
     val old = slotKey.put(slot, key)
@@ -79,9 +77,12 @@ object BloomBroadcasts {
     key
   }
 
-  def get(key: String): Broadcast[BloomFilter] = {
+  def get(key: String): Broadcast[T] = {
     val bc = byKey.get(key)
-    require(bc != null, s"no bloom broadcast registered under '$key'")
+    require(bc != null, s"no $what broadcast registered under '$key'")
     bc
   }
 }
+
+/** The URL-seen bloom filters behind `bloom_might_contain_bc`. */
+object BloomBroadcasts extends BroadcastSlots[BloomFilter]("bloom")

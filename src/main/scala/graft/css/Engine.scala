@@ -87,6 +87,105 @@ trait NodeAccess {
     false
   }
   private def isSelWs(c: Char) = c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f'
+
+  // --- read walks: the one implementation behind api/Doc, the Catalyst
+  //     expressions, the serializer and `:contains`. They yield raw ids;
+  //     callers apply their own element filters and dedup rules. ---
+
+  /** Push `i`'s children so that pops come out first-to-last. */
+  private[css] final def pushChildrenReversed(i: Int, st: IntStack): Unit = {
+    var c = lastChild(i)
+    while (c != -1) { st.push(c); c = prevSibling(c) }
+  }
+
+  /** Preorder visit of `root`'s subtree, `root` included (reference
+    * `DescendantNodes`, `src/node/iters.rs:142-200`). */
+  final def foreachPreorder(root: Int)(f: Int => Unit): Unit = {
+    val st = new IntStack()
+    st.push(root)
+    while (st.nonEmpty) {
+      val cur = st.pop()
+      f(cur)
+      pushChildrenReversed(cur, st)
+    }
+  }
+
+  /** Text nodes of `root`'s subtree in document order (`ops.rs:32-47`). */
+  final def foreachSubtreeText(root: Int)(f: Int => Unit): Unit =
+    foreachPreorder(root)(i => if (isText(i)) f(i))
+
+  /** `id` itself when it is text, then its text children (`ops.rs:85-99`). */
+  final def foreachImmediateText(id: Int)(f: Int => Unit): Unit = {
+    if (isText(id)) f(id)
+    foreachChild(id)(c => if (isText(c)) f(c))
+  }
+
+  /** Child ids of any kind, in order (reference `ChildNodes`,
+    * `src/node/iters.rs:64-94`). */
+  final def foreachChild(id: Int)(f: Int => Unit): Unit = {
+    var c = firstChild(id)
+    while (c != -1) { f(c); c = nextSibling(c) }
+  }
+
+  /** Ancestor ids nearest-first, the document node included; at most
+    * `maxDepth` of them, `maxDepth <= 0` = unbounded (reference
+    * `AncestorNodes`, `src/node/iters.rs:96-140`). */
+  final def foreachAncestor(id: Int, maxDepth: Int)(f: Int => Unit): Unit = {
+    var p = parent(id)
+    var d = 0
+    while (p != -1 && (maxDepth <= 0 || d < maxDepth)) { f(p); d += 1; p = parent(p) }
+  }
+
+  /** Concatenated subtree text. */
+  final def subtreeText(root: Int): String = joinText(foreachSubtreeText(root))
+  /** Own + direct-children text only. */
+  final def immediateText(id: Int): String = joinText(foreachImmediateText(id))
+  private def joinText(visit: (Int => Unit) => Unit): String = {
+    val sb = new java.lang.StringBuilder
+    visit { i => val t = text(i); if (t != null) sb.append(t) }
+    sb.toString
+  }
+
+  /** Whitespace-normalized char count of the subtree text, streamed without
+    * materializing it (reference `ops.rs:66-82`, `dom_tree/helpers.rs:1-13`). */
+  final def normCharCount(root: Int): Long = {
+    var count = 0L
+    var lastWasWs = true // leading whitespace is skipped
+    foreachSubtreeText(root) { i =>
+      val t = text(i)
+      if (t != null) {
+        var k = 0
+        while (k < t.length) {
+          val ch = t.charAt(k)
+          // Unicode White_Space (Rust char::is_whitespace includes U+00A0)
+          val ws = Character.isWhitespace(ch) || Character.isSpaceChar(ch)
+          if (!(lastWasWs && ws)) count += 1
+          lastWasWs = ws
+          k += 1
+        }
+      }
+    }
+    if (lastWasWs && count > 0) count -= 1 // trailing normalized space doesn't count
+    count
+  }
+
+  /** First element child of the root = the `<html>` node, -1 when there is
+    * none (reference `tree.rs:169-173`). */
+  final def htmlRoot: Int = {
+    if (size == 0) return -1
+    var c = firstChild(0)
+    while (c != -1 && !isElement(c)) c = nextSibling(c)
+    c
+  }
+
+  /** The `html > head > base[href]` node, -1 when there is none
+    * (F5, `tree.rs:86-95`). */
+  final def baseUriNode: Int =
+    if (size == 0) -1 else Engine.selectFirst(this, Seq(0), NodeAccess.baseUriPlan)
+}
+
+object NodeAccess {
+  private lazy val baseUriPlan = SelectorAst.parse("html > head > base[href]")
 }
 
 final class ArenaAccess(a: Arena) extends NodeAccess with graft.sources.AttrIterable {
@@ -132,12 +231,6 @@ private[graft] final class IntStack(initial: Int = 64) {
 object Engine {
   import SelectorAst._
 
-  /** Push `i`'s children so that pops come out first-to-last. */
-  @inline private def pushChildrenReversed(acc: NodeAccess, i: Int, st: IntStack): Unit = {
-    var c = acc.lastChild(i)
-    while (c != -1) { st.push(c); c = acc.prevSibling(c) }
-  }
-
   /** All strict descendants of `roots` matching the selector list, in
     * document order (Q1/Q3). Roots themselves never match
     * (`tests/selection-traversal.rs:26-30`). */
@@ -167,13 +260,13 @@ object Engine {
     val walk = new IntStack()
     roots.foreach { r =>
       walk.clear()
-      pushChildrenReversed(acc, r, walk)
+      acc.pushChildrenReversed(r, walk)
       while (walk.nonEmpty) {
         val cur = walk.pop()
         if (!seen.get(cur)) {
           seen.set(cur)
           if (acc.isElement(cur) && matches(acc, cur, list)) matched.set(cur)
-          pushChildrenReversed(acc, cur, walk)
+          acc.pushChildrenReversed(cur, walk)
         }
       }
     }
@@ -189,13 +282,13 @@ object Engine {
     roots.foreach { r =>
       if (res == -1) {
         walk.clear()
-        pushChildrenReversed(acc, r, walk)
+        acc.pushChildrenReversed(r, walk)
         while (res == -1 && walk.nonEmpty) {
           val cur = walk.pop()
           if (!seen.get(cur)) {
             seen.set(cur)
             if (acc.isElement(cur) && matches(acc, cur, list)) res = cur
-            else pushChildrenReversed(acc, cur, walk)
+            else acc.pushChildrenReversed(cur, walk)
           }
         }
       }
@@ -242,11 +335,11 @@ object Engine {
   def selectFirst(acc: NodeAccess, roots: Seq[Int], list: List[Complex]): Int = {
     if (roots == Seq(0)) {
       val stack = new IntStack()
-      pushChildrenReversed(acc, 0, stack)
+      acc.pushChildrenReversed(0, stack)
       while (stack.nonEmpty) {
         val cur = stack.pop()
         if (acc.isElement(cur) && matches(acc, cur, list)) return cur
-        pushChildrenReversed(acc, cur, stack)
+        acc.pushChildrenReversed(cur, stack)
       }
       -1
     } else {
@@ -275,13 +368,13 @@ object Engine {
           var f = frontier.nextSetBit(0)
           while (f >= 0) {
             walk.clear()
-            pushChildrenReversed(acc, f, walk)
+            acc.pushChildrenReversed(f, walk)
             while (walk.nonEmpty) {
               val cur = walk.pop()
               if (!seen.get(cur)) {
                 seen.set(cur)
                 if (acc.isElement(cur) && matchCompound(acc, cur, compound)) next.set(cur)
-                pushChildrenReversed(acc, cur, walk)
+                acc.pushChildrenReversed(cur, walk)
               }
             }
             f = frontier.nextSetBit(f + 1)
@@ -333,11 +426,11 @@ object Engine {
     val stack = new IntStack()
     roots.foreach { r =>
       stack.clear()
-      pushChildrenReversed(acc, r, stack)
+      acc.pushChildrenReversed(r, stack)
       while (stack.nonEmpty && n < total) {
         val cur = stack.pop()
         if (matched.get(cur) && !emitted.get(cur)) { emitted.set(cur); out(n) = cur; n += 1 }
-        pushChildrenReversed(acc, cur, stack)
+        acc.pushChildrenReversed(cur, stack)
       }
     }
     if (n == total) out else java.util.Arrays.copyOf(out, n)
@@ -452,7 +545,7 @@ object Engine {
       subtreeExists(acc, i, j => acc.isText(j) && acc.text(j) != null && acc.text(j).contains(s))
     case PContains(s) =>
       // merged subtree text contains s (selector.rs:144)
-      subtreeText(acc, i).contains(s)
+      acc.subtreeText(i).contains(s)
     case POnlyText =>
       // exactly one child, and it is a non-empty text node (node_ref.rs:643-659)
       val fc = acc.firstChild(i)
@@ -492,20 +585,8 @@ object Engine {
     while (stack.nonEmpty) {
       val cur = stack.pop()
       if (pred(cur)) return true
-      pushChildrenReversed(acc, cur, stack)
+      acc.pushChildrenReversed(cur, stack)
     }
     false
-  }
-
-  def subtreeText(acc: NodeAccess, root: Int): String = {
-    val sb = new java.lang.StringBuilder
-    val stack = new IntStack()
-    stack.push(root)
-    while (stack.nonEmpty) {
-      val cur = stack.pop()
-      if (acc.isText(cur) && acc.text(cur) != null) sb.append(acc.text(cur))
-      pushChildrenReversed(acc, cur, stack)
-    }
-    sb.toString
   }
 }

@@ -167,9 +167,6 @@ final class Arena {
 
   def root: Int = 0
 
-  /** First element child of root = the `<html>` node (reference `tree.rs:169-173`). */
-  def htmlRoot: Option[Int] = childIds(0).find(nodes(_).isElement)
-
   /** Preorder walk of the subtree rooted at `id` (inclusive), by pointers —
     * matches reference `DescendantNodes` (`src/node/iters.rs:142-200`). */
   def preorder(id: Int): Iterator[Int] = new Iterator[Int] {
@@ -189,58 +186,6 @@ final class Arena {
 
   /** Descendants of `id` (exclusive of `id` itself), document order. */
   def descendants(id: Int): Iterator[Int] = preorder(id).drop(1)
-
-  def ancestors(id: Int, maxDepth: Int = -1): List[Int] = {
-    val buf = mutable.ListBuffer[Int]()
-    var p = nodes(id).parent
-    var d = 0
-    while (p != -1 && (maxDepth <= 0 || d < maxDepth)) {
-      buf += p; d += 1; p = nodes(p).parent
-    }
-    buf.toList
-  }
-
-  /** Concatenated text of node + descendants, doc order (`ops.rs:32-47`). */
-  def textOf(id: Int): String = {
-    val sb = new java.lang.StringBuilder
-    preorder(id).foreach { i =>
-      val n = nodes(i)
-      if (n.isText && n.text != null) sb.append(n.text)
-    }
-    sb.toString
-  }
-
-  /** Own + direct-children text only (`ops.rs:85-99`). */
-  def immediateTextOf(id: Int): String = {
-    val sb = new java.lang.StringBuilder
-    val self = nodes(id)
-    if (self.isText && self.text != null) sb.append(self.text)
-    childIds(id).foreach { c =>
-      val n = nodes(c)
-      if (n.isText && n.text != null) sb.append(n.text)
-    }
-    sb.toString
-  }
-
-  /** Streaming whitespace-normalized char count, no string materialization
-    * (reference `ops.rs:66-82`, helper `dom_tree/helpers.rs:1-13`). */
-  def normalizedCharCount(id: Int): Long = {
-    var count = 0L
-    var lastWasWs = true // leading whitespace is skipped
-    preorder(id).foreach { i =>
-      val n = nodes(i)
-      if (n.isText && n.text != null) {
-        n.text.foreach { ch =>
-          // Unicode White_Space (Rust char::is_whitespace includes U+00A0)
-          if (Character.isWhitespace(ch) || Character.isSpaceChar(ch)) {
-            if (!lastWasWs) { count += 1; lastWasWs = true }
-          } else { count += 1; lastWasWs = false }
-        }
-      }
-    }
-    if (lastWasWs && count > 0) count -= 1 // trailing normalized space doesn't count
-    count
-  }
 
   /** Derived structural columns, computed in one pass by
     * [[graft.spark.NodeSchema.arenaToArrayData]] (contract on

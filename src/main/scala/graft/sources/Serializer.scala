@@ -165,7 +165,7 @@ object Serializer {
                 text.append('\n')
               stack = Close(name) :: stack
               if (name == "pre") {
-                text.append(graft.css.Engine.subtreeText(acc, id))
+                text.append(acc.subtreeText(id))
               } else {
                 stack = childOps(acc, id) ::: stack
               }
@@ -520,7 +520,7 @@ object Serializer {
       sb.append("\n```")
       findCodeLanguage(id).foreach(sb.append)
       sb.append('\n')
-      sb.append(graft.css.Engine.subtreeText(acc, id))
+      sb.append(acc.subtreeText(id))
       sb.append("\n```\n")
     }
 

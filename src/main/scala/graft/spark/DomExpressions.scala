@@ -148,10 +148,10 @@ case class CssIs(first: Expression, second: Expression, third: Expression)
   * benches show it ~5× faster than full CSS select for tag-only paths. */
 case class DomFind(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
-  @transient private lazy val path: Seq[String] = {
-    require(right.foldable, "find path must be a literal")
+  @transient private lazy val path: Seq[String] =
     right.eval(InternalRow.empty).toString.split(",").map(_.trim).toSeq
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    DomExprUtil.checkLiteral(right, "find path")(_ => true)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, names: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -236,52 +236,19 @@ case class DomText(left: Expression, right: Expression, immediate: Boolean = fal
   override def dataType: DataType = StringType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
-    val parts = new scala.collection.mutable.ArrayBuffer[UTF8String]()
     val idArr = ids.asInstanceOf[ArrayData]
-    val m = idArr.numElements()
-    var k = 0
-    while (k < m) {
-      val i = idArr.getInt(k)
-      if (immediate) {
-        if (acc.isText(i) && acc.textU(i) != null) parts += acc.textU(i)
-        var c = acc.firstChild(i)
-        while (c != -1) {
-          if (acc.isText(c) && acc.textU(c) != null) parts += acc.textU(c)
-          c = acc.nextSibling(c)
-        }
-      } else DomText.collectSubtreeText(acc, i, parts)
-      k += 1
+    acc.joinTextU { f =>
+      var k = 0
+      while (k < idArr.numElements()) {
+        val i = idArr.getInt(k)
+        if (immediate) acc.foreachImmediateText(i)(f) else acc.foreachSubtreeText(i)(f)
+        k += 1
+      }
     }
-    UTF8String.concat(parts.toSeq: _*)
   }
   override def prettyName: String = if (immediate) "dom_immediate_text" else "dom_text"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DomText =
     copy(left = l, right = r)
-}
-
-object DomText {
-  /** Preorder subtree text as raw UTF8String parts (≡ Engine.subtreeText's
-    * walk, without the String round-trip). */
-  private[spark] def collectSubtreeText(acc: ArrayDataAccess, root: Int,
-      parts: scala.collection.mutable.ArrayBuffer[UTF8String]): Unit = {
-    val stack = new graft.css.IntStack()
-    stack.push(root)
-    while (stack.nonEmpty) {
-      val cur = stack.pop()
-      if (acc.isText(cur)) {
-        val t = acc.textU(cur)
-        if (t != null) parts += t
-      }
-      var c = acc.lastChild(cur)
-      while (c != -1) { stack.push(c); c = acc.prevSibling(c) }
-    }
-  }
-
-  private[spark] def subtreeTextU(acc: ArrayDataAccess, root: Int): UTF8String = {
-    val parts = new scala.collection.mutable.ArrayBuffer[UTF8String]()
-    collectSubtreeText(acc, root, parts)
-    UTF8String.concat(parts.toSeq: _*)
-  }
 }
 
 /** `dom_text_each(nodes, ids)` → ARRAY<STRING>: subtree text per id (batched
@@ -296,7 +263,7 @@ case class DomTextEach(left: Expression, right: Expression)
     val out = new Array[Any](idArr.numElements())
     var i = 0
     while (i < out.length) {
-      out(i) = DomText.subtreeTextU(acc, idArr.getInt(i)) // byte-concat, no String round-trip
+      out(i) = acc.joinTextU(acc.foreachSubtreeText(idArr.getInt(i))) // no String round-trip
       i += 1
     }
     new GenericArrayData(out)
@@ -361,15 +328,12 @@ case class DomHasAttr(first: Expression, second: Expression, third: Expression)
 }
 
 /** `dom_html_root(nodes)` → id of the root's first element child (T8,
-  * ≡ `Arena.htmlRoot`/`Doc.htmlRoot`), -1 when the document has none. */
+  * ≡ `Doc.htmlRoot`, both [[graft.css.NodeAccess.htmlRoot]]), -1 when the
+  * document has none. */
 case class DomHtmlRoot(child: Expression) extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = IntegerType
-  override def nullSafeEval(nodes: Any): Any = {
-    val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
-    var c = acc.firstChild(0)
-    while (c != -1 && !acc.isElement(c)) c = acc.nextSibling(c)
-    c
-  }
+  override def nullSafeEval(nodes: Any): Any =
+    new ArrayDataAccess(nodes.asInstanceOf[ArrayData]).htmlRoot
   override def prettyName: String = "dom_html_root"
   override protected def withNewChildInternal(c: Expression): DomHtmlRoot = copy(child = c)
 }
@@ -433,31 +397,7 @@ case class DomNormCharCount(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
-    var total = 0L
-    DomExprUtil.idsFrom(ids.asInstanceOf[ArrayData]).foreach { root =>
-      var count = 0L
-      var lastWasWs = true
-      var stack: List[Int] = List(root)
-      while (stack.nonEmpty) {
-        val cur = stack.head
-        stack = stack.tail
-        if (acc.isText(cur)) {
-          val t = acc.text(cur)
-          if (t != null) t.foreach { ch =>
-            val ws = Character.isWhitespace(ch) || Character.isSpaceChar(ch)
-            if (!(lastWasWs && ws)) count += 1
-            lastWasWs = ws
-          }
-        }
-        var kids: List[Int] = Nil
-        var c = acc.lastChild(cur)
-        while (c != -1) { kids = c :: kids; c = acc.prevSibling(c) }
-        stack = kids ::: stack
-      }
-      if (lastWasWs && count > 0) count -= 1
-      total += count
-    }
-    total
+    DomExprUtil.idsFrom(ids.asInstanceOf[ArrayData]).map(acc.normCharCount).sum
   }
   override def prettyName: String = "dom_norm_char_count"
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
@@ -528,19 +468,11 @@ object DomMutateOps {
     DomMutateOps(es ++ Seq.fill(5 - es.length)(Literal(null)))
   }
 
-  /** Compiled plans for ops whose arg1 is itself a selector
-    * (append_children / prepend_children / reparent_children): the main css
-    * is a literal cached on the expression, but arg selectors arrive as data
-    * strings — cache per distinct text so hot loops never re-parse. */
-  private val argPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[String, List[SelectorAst.Complex]]()
-  private def argPlan(css: String): List[SelectorAst.Complex] =
-    argPlanCache.computeIfAbsent(css, c => SelectorAst.parse(c))
-
   // first match of an arg selector against the CURRENT arena state —
-  // resolved per target so op k sees op k-1's surgery, like chained calls
+  // resolved per target so op k sees op k-1's surgery, like chained calls.
+  // Arg selectors arrive as data strings: the shared plan cache is capped.
   private def firstMatch(arena: Arena, css: String): Int =
-    Engine.select(new graft.css.ArenaAccess(arena), Seq(0), argPlan(css))
+    Engine.select(new graft.css.ArenaAccess(arena), Seq(0), SelectorAst.parseCached(css))
       .headOption.getOrElse(-1)
 
   /** The in-place ops by name: (arena, target, arg1, arg2) → pointer surgery. */
@@ -623,11 +555,7 @@ case class DomSpans(child: Expression) extends UnaryExpression with CodegenFallb
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
     if (acc.size == 0) return new GenericArrayData(Array.empty[Any])
     val out = scala.collection.mutable.ArrayBuffer[Any]()
-    var offset = 0
-    var stack: List[Int] = List(0)
-    while (stack.nonEmpty) {
-      val cur = stack.head
-      stack = stack.tail
+    acc.foreachPreorder(0) { cur =>
       val kind = acc.kind(cur)
       val text = if (acc.isText(cur) || kind == "comment" || kind == "pi") acc.text(cur) else null
       val media =
@@ -637,12 +565,7 @@ case class DomSpans(child: Expression) extends UnaryExpression with CodegenFallb
         UTF8String.fromString(kind),
         if (text == null) null else UTF8String.fromString(text),
         if (media == null) null else UTF8String.fromString(media),
-        offset)
-      offset += 1
-      var kids: List[Int] = Nil
-      var c = acc.lastChild(cur)
-      while (c != -1) { kids = c :: kids; c = acc.prevSibling(c) }
-      stack = kids ::: stack
+        out.length)
     }
     new GenericArrayData(out.toArray)
   }
@@ -654,25 +577,20 @@ case class DomSpans(child: Expression) extends UnaryExpression with CodegenFallb
   * of the selection, per-node nearest-first, deduped in first-seen order —
   * the T2/T3 traversal surface (reference `ancestors(max_depth)`,
   * `src/node/node_ref.rs` via `AncestorNodes`, `src/node/iters.rs:96-140`;
-  * max_depth <= 0 = unbounded, mirroring `Option<usize>` None). Same pointer
-  * walk as [[graft.model.Arena.ancestors]], run directly on Tungsten data. */
+  * max_depth <= 0 = unbounded, mirroring `Option<usize>` None). Same walk as
+  * `Sel.ancestors` ([[graft.css.NodeAccess.foreachAncestor]]), but every id
+  * is kept, the document node included. */
 case class DomAncestors(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
-  private lazy val maxDepth: Int = {
-    require(third.foldable, "max_depth must be a literal")
-    third.eval(InternalRow.empty).asInstanceOf[Int]
-  }
+  private lazy val maxDepth: Int = third.eval(InternalRow.empty).asInstanceOf[Int]
+  override def checkInputDataTypes(): TypeCheckResult =
+    DomExprUtil.checkLiteral(third, "max_depth")(_ => third.dataType == IntegerType)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any, md: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
     val seen = new java.util.LinkedHashSet[Int]()
-    DomExprUtil.idsFrom(ids.asInstanceOf[ArrayData]).foreach { i =>
-      var p = acc.parent(i)
-      var d = 0
-      while (p != -1 && (maxDepth <= 0 || d < maxDepth)) {
-        seen.add(p); d += 1; p = acc.parent(p)
-      }
-    }
+    DomExprUtil.idsFrom(ids.asInstanceOf[ArrayData])
+      .foreach(acc.foreachAncestor(_, maxDepth)(seen.add(_)))
     val out = new Array[Int](seen.size)
     val it = seen.iterator()
     var j = 0
@@ -693,10 +611,7 @@ case class DomChildren(left: Expression, right: Expression)
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
     val out = scala.collection.mutable.ArrayBuffer[Int]()
-    DomExprUtil.idsFrom(ids.asInstanceOf[ArrayData]).foreach { i =>
-      var c = acc.firstChild(i)
-      while (c != -1) { out += c; c = acc.nextSibling(c) }
-    }
+    DomExprUtil.idsFrom(ids.asInstanceOf[ArrayData]).foreach(acc.foreachChild(_)(out += _))
     DomExprUtil.intsToArray(out.toArray)
   }
   override def prettyName: String = "dom_children"
@@ -720,15 +635,17 @@ case class DomValidate(child: Expression) extends UnaryExpression with CodegenFa
 
 /** `dom_base_uri(nodes)` → the cached `html>head>base[href]` walk (F5). */
 case class DomBaseUri(child: Expression) extends UnaryExpression with CodegenFallback {
-  @transient private lazy val plan = SelectorAst.parse("html > head > base[href]")
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
-    if (acc.size == 0) return null
-    val f = Engine.selectFirst(acc, Seq(0), plan)
-    if (f == -1) null else acc.attrU(f, UTF8String.fromString("href"))
+    val f = acc.baseUriNode
+    if (f == -1) null else acc.attrU(f, DomBaseUri.Href)
   }
   override def prettyName: String = "dom_base_uri"
   override protected def withNewChildInternal(c: Expression): DomBaseUri = copy(child = c)
+}
+
+object DomBaseUri {
+  private val Href = UTF8String.fromString("href")
 }

@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.{call_function, lit}
 
@@ -12,75 +13,83 @@ import org.apache.spark.sql.functions.{call_function, lit}
  * (`SELECT css_select(nodes, 'div.a') FROM docs`).
  *
  * Idempotent — call `GraftFunctions.register(spark)` at the top of every
- * entry point.
+ * entry point, or build the session with [[GraftExtensions]], which injects
+ * the same [[functions]] table.
  */
 object GraftFunctions {
 
   private def classic(spark: SparkSession): org.apache.spark.sql.classic.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
-  def register(spark: SparkSession): Unit = {
-    val reg = classic(spark).sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("css_select"))) return // idempotent
-    def add(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.spark", name),
-        builder)
+  /** The shape `SparkSessionExtensions.injectFunction` takes. */
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
 
-    add("parse_html")(es => ParseHtml(es.head, fragment = false))
-    add("parse_fragment")(es => ParseHtml(es.head, fragment = true))
-    add("css_select")(es => CssSelect(es(0), es(1)))
-    add("css_select_first")(es => CssSelectFirst(es(0), es(1)))
-    add("css_select_under")(es => CssSelectUnder(es(0), es(1), es(2)))
-    add("css_filter")(es => CssFilter(es(0), es(1), es(2)))
-    add("css_is")(es => CssIs(es(0), es(1), es(2)))
-    add("dom_text")(es => DomText(es(0), es(1)))
-    add("dom_immediate_text")(es => DomText(es(0), es(1), immediate = true))
-    add("dom_attr")(es => DomAttr(es(0), es(1), es(2)))
-    add("dom_text_each")(es => DomTextEach(es(0), es(1)))
-    add("dom_attr_each")(es => DomAttrEach(es(0), es(1), es(2)))
-    add("dom_html")(es => DomHtml(es(0), es(1), es(2)))
-    add("dom_formatted_text")(es => DomFormattedText(es(0), es(1)))
-    add("dom_md")(es => DomMd(es(0), es(1)))
-    add("dom_norm_char_count")(es => DomNormCharCount(es(0), es(1)))
-    add("dom_mutate")(DomMutateOps.single)
-    add("dom_mutate_ops")(es => DomMutateOps(es))
-    add("dom_has_attr")(es => DomHasAttr(es(0), es(1), es(2)))
-    add("dom_html_root")(es => DomHtmlRoot(es.head))
-    add("dom_find")(es => DomFind(es(0), es(1)))
-    add("dom_ancestors")(es => DomAncestors(es(0), es(1), es(2)))
-    add("dom_children")(es => DomChildren(es(0), es(1)))
-    add("lsh_bits")(es => LshBitsExpr(es(0), es(1), es(2)))
-    add("cos_sim")(es => CosSim(es(0), es(1)))
-    add("word_hashes")(es => WordHashes(es.head))
-    add("text_profile")(es => TextProfile(es.head))
-    add("minhash_sig")(es => MinhashSig(es.head))
-    add("simhash_bits")(es => SimhashBits(es.head))
-    add("norm_fingerprint")(es => NormFingerprint(es.head))
-    add("text_lang_stats")(es => TextLangStats(es.head))
-    add("parse_html_meta")(es => ParseHtmlMeta(es.head, fragment = false))
-    add("parse_fragment_meta")(es => ParseHtmlMeta(es.head, fragment = true))
-    add("dom_copy_selection")(es => DomCopySelection(es))
-    add("dom_spans")(es => DomSpans(es.head))
-    add("dom_validate")(es => DomValidate(es.head))
-    add("dom_base_uri")(es => DomBaseUri(es.head))
-    add("bloom_might_contain_bc")(es => graft.crawl.BloomMightContainBc(es(1),
+  private def fn(name: String)(builder: FunctionBuilder): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo("graft.spark", name), builder)
+
+  /** The one name → builder table of the dom_query SQL surface: [[register]]
+    * adds it to a live session, [[GraftExtensions]] injects it at session
+    * build. */
+  val functions: Seq[FunctionDescription] = Seq(
+    fn("parse_html")(es => ParseHtml(es.head, fragment = false)),
+    fn("parse_fragment")(es => ParseHtml(es.head, fragment = true)),
+    fn("css_select")(es => CssSelect(es(0), es(1))),
+    fn("css_select_first")(es => CssSelectFirst(es(0), es(1))),
+    fn("css_select_under")(es => CssSelectUnder(es(0), es(1), es(2))),
+    fn("css_filter")(es => CssFilter(es(0), es(1), es(2))),
+    fn("css_is")(es => CssIs(es(0), es(1), es(2))),
+    fn("dom_text")(es => DomText(es(0), es(1))),
+    fn("dom_immediate_text")(es => DomText(es(0), es(1), immediate = true)),
+    fn("dom_attr")(es => DomAttr(es(0), es(1), es(2))),
+    fn("dom_text_each")(es => DomTextEach(es(0), es(1))),
+    fn("dom_attr_each")(es => DomAttrEach(es(0), es(1), es(2))),
+    fn("dom_html")(es => DomHtml(es(0), es(1), es(2))),
+    fn("dom_formatted_text")(es => DomFormattedText(es(0), es(1))),
+    fn("dom_md")(es => DomMd(es(0), es(1))),
+    fn("dom_norm_char_count")(es => DomNormCharCount(es(0), es(1))),
+    fn("dom_mutate")(DomMutateOps.single),
+    fn("dom_mutate_ops")(es => DomMutateOps(es)),
+    fn("dom_has_attr")(es => DomHasAttr(es(0), es(1), es(2))),
+    fn("dom_html_root")(es => DomHtmlRoot(es.head)),
+    fn("dom_find")(es => DomFind(es(0), es(1))),
+    fn("dom_ancestors")(es => DomAncestors(es(0), es(1), es(2))),
+    fn("dom_children")(es => DomChildren(es(0), es(1))),
+    fn("lsh_bits")(es => LshBitsExpr(es(0), es(1), es(2))),
+    fn("cos_sim")(es => CosSim(es(0), es(1))),
+    fn("word_hashes")(es => WordHashes(es.head)),
+    fn("text_profile")(es => TextProfile(es.head)),
+    fn("minhash_sig")(es => MinhashSig(es.head)),
+    fn("simhash_bits")(es => SimhashBits(es.head)),
+    fn("norm_fingerprint")(es => NormFingerprint(es.head)),
+    fn("text_lang_stats")(es => TextLangStats(es.head)),
+    fn("parse_html_meta")(es => ParseHtmlMeta(es.head, fragment = false)),
+    fn("parse_fragment_meta")(es => ParseHtmlMeta(es.head, fragment = true)),
+    fn("dom_copy_selection")(es => DomCopySelection(es)),
+    fn("dom_spans")(es => DomSpans(es.head)),
+    fn("dom_validate")(es => DomValidate(es.head)),
+    fn("dom_base_uri")(es => DomBaseUri(es.head)),
+    fn("bloom_might_contain_bc")(es => graft.crawl.BloomMightContainBc(es(1),
       graft.crawl.BloomBroadcasts.get(
-        es(0).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString)))
-    add("ivf_assign_bc")(es => IvfAssignBc(es(1),
+        es(0).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString))),
+    fn("ivf_assign_bc")(es => IvfAssignBc(es(1),
       IvfBroadcasts.get(
-        es(0).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString)))
-    add("canonicalize_url")(es => graft.crawl.CanonicalizeUrl(es(0), es(1)))
-    add("url_host")(es => graft.crawl.UrlHostExpr(es.head))
+        es(0).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString))),
+    fn("canonicalize_url")(es => graft.crawl.CanonicalizeUrl(es(0), es(1))),
+    fn("url_host")(es => graft.crawl.UrlHostExpr(es.head)),
     // Spark's bloom-filter expressions exist in catalyst (used by runtime
     // join filters) but are not exposed in the public registry — expose them
     // for the URL-seen prefilter (north_rule scale path).
-    add("bloom_filter_agg")(es =>
+    fn("bloom_filter_agg")(es =>
       new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression())
-    add("might_contain")(es =>
+        es(0), es(1), es(2)).toAggregateExpression()),
+    fn("might_contain")(es =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
+  )
+
+  def register(spark: SparkSession): Unit = {
+    val reg = classic(spark).sessionState.functionRegistry
+    if (reg.functionExists(FunctionIdentifier("css_select"))) return // idempotent
+    functions.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
   }
 
   // --- typed Column wrappers --------------------------------------------------

@@ -292,6 +292,14 @@ final class ArrayDataAccess(arr: ArrayData) extends NodeAccess with AttrIterable
     val r = row(i)
     if (r.isNullAt(TEXT)) null else r.getUTF8String(TEXT)
   }
+  /** Text of the nodes a walk yields, byte-concatenated from the Tungsten
+    * values: the UTF8 form of [[graft.css.NodeAccess.subtreeText]], with no
+    * UTF8→String→UTF8 round trip. */
+  def joinTextU(walk: (Int => Unit) => Unit): UTF8String = {
+    val parts = new scala.collection.mutable.ArrayBuffer[UTF8String]()
+    walk { i => val t = textU(i); if (t != null) parts += t }
+    UTF8String.concat(parts.toSeq: _*)
+  }
   def attr(i: Int, key: String): String = {
     val u = attrU(i, keyU(key))
     if (u == null) null else u.toString

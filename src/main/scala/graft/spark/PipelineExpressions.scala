@@ -594,34 +594,9 @@ object IvfQuantizer {
   }
 }
 
-/** Driver-side registry carrying [[IvfQuantizer]] broadcast handles into
-  * the function-registry builder — same transport as the URL-seen bloom
-  * ([[graft.crawl.BloomBroadcasts]]): one live broadcast per slot, the
-  * previous quantizer's executor copies released on re-install. */
-object IvfBroadcasts {
-  private val byKey = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[IvfQuantizer]]()
-  private val slotKey =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def install(slot: String,
-      bc: org.apache.spark.broadcast.Broadcast[IvfQuantizer]): String = {
-    val key = s"$slot#${bc.id}"
-    byKey.put(key, bc)
-    val old = slotKey.put(slot, key)
-    if (old != null && old != key) {
-      val ob = byKey.remove(old)
-      if (ob != null) ob.unpersist(false)
-    }
-    key
-  }
-
-  def get(key: String): org.apache.spark.broadcast.Broadcast[IvfQuantizer] = {
-    val bc = byKey.get(key)
-    require(bc != null, s"no IVF quantizer broadcast registered under '$key'")
-    bc
-  }
-}
+/** The [[IvfQuantizer]] broadcasts behind `ivf_assign_bc` — same transport
+  * as the URL-seen bloom ([[graft.crawl.BroadcastSlots]]). */
+object IvfBroadcasts extends graft.crawl.BroadcastSlots[IvfQuantizer]("IVF quantizer")
 
 /** `ivf_assign_bc(key, embedding)` → argmax-cosine cell id over a
   * broadcast-carried quantizer — the IVF assignment as ONE codegen'd

@@ -15,7 +15,7 @@ class HtmlDomSpec extends AnyFunSuite {
   private def parseAndSerialize(input: String): String = {
     val d = Doc.fragment(input)
     assert(d.validate.isEmpty, s"invalid tree for: $input")
-    val htmlId = d.arena.htmlRoot.get
+    val htmlId = d.htmlRoot.get
     Serializer.toHtml(d.acc, htmlId, includeRoot = false,
       id => d.arena(id).templateContents)
   }

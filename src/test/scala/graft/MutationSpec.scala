@@ -266,7 +266,7 @@ class MutationSpec extends AnyFunSuite {
     assert(TreeOps.validate(frag).isEmpty)
     val fragDoc = new Doc(frag)
     assert(fragDoc.select("#inline").length == 1)
-    assert(fragDoc.arena.textOf(0) == "Something")
+    assert(fragDoc.acc.subtreeText(0) == "Something")
     // source untouched
     assert(doc.select("#origin #inline").exists)
     ok(doc)

@@ -50,10 +50,10 @@ class NodeTraversalSpec extends AnyFunSuite {
     assert(fec("#text-only") == -1)
     val first = fec("#multiple")
     assert(first != -1 && d.arena(first).isElement)
-    assert(d.arena.textOf(first) == "First")
+    assert(d.acc.subtreeText(first) == "First")
     val nested = fec("#nested")
     assert(nested != -1 && d.arena(nested).isElement)
-    assert(d.arena.textOf(TreeOps.firstElementChild(d.arena, nested)) == "Nested")
+    assert(d.acc.subtreeText(TreeOps.firstElementChild(d.arena, nested)) == "Nested")
   }
 
   // node-traversal.rs:135-160 test_descendants_bound — the subtree walk must

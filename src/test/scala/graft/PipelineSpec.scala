@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.api.Doc
 import graft.pipeline.{Multimodal, Similarity, TextPipeline}
 
 /** Pipeline-operator properties that the DuckDB oracle can't express:
@@ -458,7 +459,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.{AnalysisException, Column}
     F.register(spark)
     val docs = spark.range(1).select(F.parse_html(lit("<p>x</p>")).as("nodes"),
-      lit("p").as("css"))
+      lit("p").as("css"), lit(1).as("depth"))
     val nodes = col("nodes")
     // DataFrame.select analyzes eagerly: no action is run here
     def rejected(c: Column, msg: String): Unit = {
@@ -479,6 +480,9 @@ class PipelineSpec extends AnyFunSuite {
     rejected(F.css_filter(nodes, F.css_select(nodes, "p"), "[["), "invalid selector '[['")
     rejected(F.css_is(nodes, F.css_select(nodes, "p"), "[["), "invalid selector '[['")
     rejected(call_function("css_select", nodes, col("css")), "selector must be a literal")
+    rejected(call_function("dom_find", nodes, col("css")), "find path must be a literal")
+    rejected(call_function("dom_ancestors", nodes, F.css_select(nodes, "p"), col("depth")),
+      "max_depth must be a literal")
     rejected(call_function("dom_mutate", nodes, lit("p"), lit(null)),
       "dom_mutate op must not be null")
     // the SQL surface gets the same check
@@ -491,6 +495,76 @@ class PipelineSpec extends AnyFunSuite {
     val out = docs.select(size(F.css_select(
       F.dom_mutate(nodes, "p", "add_class", lit("k")), "p.k"))).head().getInt(0)
     assert(out == 1)
+  }
+
+  test("a GraftExtensions session resolves every function of the table") {
+    import graft.spark.{GraftExtensions, GraftFunctions => F}
+    // a second session on the shared context, built WITHOUT register: with
+    // an active or default session getOrCreate would hand that one back and
+    // ignore the extension, so both are cleared around the build and restored
+    val sc = spark.sparkContext
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      finally {
+        default.foreach(SparkSession.setDefaultSession)
+        active.foreach(SparkSession.setActiveSession)
+      }
+    assert(!(ext eq spark))
+    assert(ext.sparkContext eq sc)
+    val reg = ext.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val names = F.functions.map(_._1)
+    assert(names.length == names.distinct.length, "duplicate names in the function table")
+    val missing = names.filterNot(reg.functionExists)
+    assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
+    val row = ext.sql("""SELECT size(dom_find(n, 'body,p')),
+        parse_html_meta('<!DOCTYPE html><p>x').quirks_mode,
+        size(css_select(dom_mutate_ops(n, 'p', 'remove', NULL, NULL), 'p'))
+      FROM (SELECT parse_html('<p>a</p><p>b</p>') AS n)""").head()
+    assert(row.getInt(0) == 2)
+    assert(row.getString(1) == "no-quirks")
+    assert(row.getInt(2) == 0)
+  }
+
+  test("dom_has_attr, dom_html_root, dom_ancestors and dom_children: known answers") {
+    import graft.spark.{GraftFunctions => F}
+    F.register(spark)
+    // preorder ids: 0 document, 1 doctype, 2 html, 3 head, 4 body,
+    // 5 div#a, 6 p#p, 7 text, 8 div#b
+    val html = """<!DOCTYPE html><html><head></head><body>""" +
+      """<div id="a" data-x=""><p id="p">t</p></div><div id="b"></div></body></html>"""
+    val n = col("nodes")
+    val row = spark.range(1).select(F.parse_html(lit(html)).as("nodes")).select(
+      F.dom_has_attr(n, F.css_select(n, "#a"), "data-x"),
+      F.dom_has_attr(n, F.css_select(n, "#b"), "data-x"),
+      F.dom_has_attr(n, F.css_select(n, "span"), "data-x"),
+      F.dom_attr(n, F.css_select(n, "#a"), "data-x"),
+      F.dom_html_root(n),
+      // only the doctype is left: no element child of the document
+      F.dom_html_root(F.dom_mutate(n, "html", "remove")),
+      F.dom_ancestors(n, F.css_select(n, "#p"), 0),
+      F.dom_ancestors(n, F.css_select(n, "#p"), 2),
+      F.dom_ancestors(n, F.css_select(n, "#a, #p"), -1),
+      F.dom_children(n, array(lit(0), lit(5)))
+    ).head()
+    assert(row.getBoolean(0)) // attr="" is present
+    assert(!row.getBoolean(1)) // absent
+    assert(!row.getBoolean(2)) // empty selection
+    assert(row.getString(3) == "")
+    assert(row.getInt(4) == 2) // the doctype is skipped
+    assert(row.getInt(5) == -1)
+    // dom_ancestors keeps the document node (0); Sel.ancestors keeps elements only
+    assert(row.getSeq[Int](6) == Seq(5, 4, 2, 0))
+    assert(row.getSeq[Int](7) == Seq(5, 4))
+    assert(row.getSeq[Int](8) == Seq(4, 2, 0, 5)) // merged, first-seen order
+    assert(Doc.parse(html).select("#p").ancestors().ids == Seq(5, 4, 2))
+    // dom_children keeps every kind (the doctype); Sel.children elements only
+    assert(row.getSeq[Int](9) == Seq(1, 2, 6))
+    assert(Doc.parse(html).select("#a").children.ids == Seq(6))
+    assert(Doc.parse(html).htmlRoot.contains(2))
   }
 
   test("structured streaming: dom expressions run inside a streaming plan") {

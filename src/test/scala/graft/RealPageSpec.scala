@@ -89,7 +89,7 @@ class RealPageSpec extends AnyFunSuite {
     val d = RealPages.doc("rustwiki_2024.html")
     val paradigms = d.select(
       """table tr:has(a[title="Programming paradigm"]) td.infobox-data ul > li""")
-    assert(paradigms.ids.map(i => d.arena.textOf(i)) ==
+    assert(paradigms.ids.map(i => d.acc.subtreeText(i)) ==
       Seq("Concurrent", "functional", "generic", "imperative", "structured"))
     val influenced = d.select(
       """table tr:has-text("Influenced by") + tr td  ul > li > a""")

@@ -117,15 +117,15 @@ That's how we keep our code development!
     """
     val doc = Doc.parse(contents)
     val main = doc.select("#main").ids.head
-    val expected = doc.arena.textOf(main).split("\\s+").filter(_.nonEmpty).mkString(" ").length
-    assert(doc.arena.normalizedCharCount(main) == expected.toLong)
+    val expected = doc.acc.subtreeText(main).split("\\s+").filter(_.nonEmpty).mkString(" ").length
+    assert(doc.acc.normCharCount(main) == expected.toLong)
   }
 
   test("immediate_text vs text (X6/X7, ops.rs:32-99)") {
     val doc = Doc.parse("""<div id="m">own <span>inner</span> tail</div>""")
     val m = doc.select("#m").ids.head
-    assert(doc.arena.textOf(m) == "own inner tail")
-    assert(doc.arena.immediateTextOf(m) == "own  tail")
+    assert(doc.acc.subtreeText(m) == "own inner tail")
+    assert(doc.acc.immediateText(m) == "own  tail")
   }
 
   test("html serialization roundtrip basics (S4)") {
