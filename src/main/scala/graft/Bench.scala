@@ -184,6 +184,11 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** `Class: message` (first line) of a caught failure, as a JSON string:
+    * reported next to the `-1` placeholders it explains. */
+  private def causeJson(e: Throwable): String =
+    Verify.jsonString(e.toString.linesIterator.nextOption().getOrElse(""))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -357,6 +362,7 @@ object Bench {
 
     // --- multi-round crawl: per-round wall should stay FLAT as seen grows ---
     // (incremental bloom: per-round cost ∝ round size, not seen size)
+    var crawlError = "null"
     val crawlRoundMs: Seq[Long] = {
       val sC = session(cpus)
       try {
@@ -369,7 +375,7 @@ object Bench {
         val metrics = Frontier.crawl(sC, crawlRoot, seedDf, rounds = 4,
           budgetPerHost = 2000, bloomBits = 1L << 24, discover = disc)
         metrics.map(_.getOrElse("wall_ms", -1L))
-      } catch { case _: Throwable => Nil } finally { sC.stop(); System.gc() }
+      } catch { case e: Throwable => crawlError = causeJson(e); Nil } finally { sC.stop(); System.gc() }
     }
 
     // --- selection-only throughput on STORED parsed pages -------------------
@@ -386,6 +392,7 @@ object Bench {
     var selBw = -1.0
     var selSamples = "[]"
     var selQuietFallback = false
+    var selError = "null"
     try {
       graft.spark.GraftFunctions.register(s)
       val stored = s"$benchDir/hnbig"
@@ -466,7 +473,7 @@ object Bench {
       selDecodeUsPerDoc = pick.map(_._2).min * 1e6 / selDocs
       selCalib = pick.map(_._3).max
       selBw = pick.map(_._4).max
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => selError = causeJson(e) }
 
     // --- headline queries at the contract parallelism -----------------------
     // shuffle tally per query: total shuffle-write bytes of the timed run —
@@ -482,6 +489,7 @@ object Bench {
     })
     val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
     val headlineCalibs = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val queryErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     // per-query quiet wait: before each query, recalibrate; while the host
     // is below QuietFrac of the best calibration seen THIS RUN (seeded by
     // the frontier/selection phases — the first query must not bootstrap
@@ -513,10 +521,11 @@ object Bench {
           }.min
           Thread.sleep(200) // listener bus drain
           shuffleMb(name) = shuffleWrite.get() / 1e6
-        } catch { case _: Throwable => results(name) = -1.0 }
+        } catch { case e: Throwable => results(name) = -1.0; queryErrors(name) = causeJson(e) }
       }
     } finally { s.stop() }
 
+    var auditError = "null"
     // ANN recall@5 vs the exact brute-force ranking + the bucket/band-cap
     // audit metrics (max observed population vs each deterministic cap —
     // binding caps must be visible, never silent)
@@ -542,7 +551,8 @@ object Bench {
           Similarity.ivfMaxCell(emb),
           Similarity.ivfMaxSubcell(emb),
           Similarity.ivfFlaggedCells(emb))
-      } catch { case _: Throwable => (-1.0, -1.0, -1L, -1L, -1L, -1L, -1L, -1L, -1L) }
+      } catch { case e: Throwable =>
+        auditError = causeJson(e); (-1.0, -1.0, -1L, -1L, -1L, -1L, -1L, -1L, -1L) }
       finally { sR.stop() }
     }
 
@@ -553,6 +563,7 @@ object Bench {
     def calibArr(n: Int) = passes(n).map(p => f"${p.calib}%.0f/${p.calibPost}%.0f").mkString("[\"", "\",\"", "\"]")
     def bwArrJ(n: Int) = passes(n).map(p => f"${p.bw}%.0f/${p.bwPost}%.0f").mkString("[\"", "\",\"", "\"]")
     val total = results.values.filter(_ >= 0).sum
+    val qe = queryErrors.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val crawlMs = crawlRoundMs.mkString("[", ",", "]")
     val qfb = quietFallback.mkString("[", ",", "]")
     // The complete compact record (metric + every number a reader quotes).
@@ -565,7 +576,7 @@ object Bench {
     // mechanically (r4 ADVICE: r4 switched to AQE-off steady-state min-of-2,
     // incompatible with r<=3's AQE-on cold single runs).
     val compactRecord =
-      f"""{"metric":"frontier throughput (URLs scheduled+deduped/sec)","value":$thr32%.0f,"unit":"urls/sec","protocol":"$Protocol","queries":$qs,"sf":"$sfDir","headline_total_sec":$total%.3f,"shuffle_write_mb":$sh,"frontier_urls":$nUrls,"thr_local2":$thr2%.0f,"thr_local8":$thr8%.0f,"thr_local32":$thr32%.0f,"scaling_efficiency_2_to_8":$eff28%.3f,"scaling_efficiency_8_to_32":$eff832%.3f,"quiet_fallback":$qfb,"crawl_round_ms":$crawlMs,"ann_recall5_lsh":$recallLsh%.3f,"ann_recall5_ivf":$recallIvf%.3f,"lsh_max_bucket":$lshMaxBucket,"lsh_bucket_cap":${graft.pipeline.Similarity.LshBucketCap},"neardup_max_bucket":$neardupMaxBucket,"neardup_bucket_cap":${graft.pipeline.Similarity.NearDupBucketCap},"ivf_max_cell":$ivfMaxCell,"ivf_max_subcell":$ivfMaxSubcell,"ivf_flagged_cells":$ivfFlagged,"ivf_cell_cap":${graft.pipeline.Similarity.IvfCellCap},"minhash_max_band":$minhashMaxBand,"simhash_max_band":$simhashMaxBand,"band_cap":${graft.pipeline.TextPipeline.BandCap},"selection_us_per_page":$selUsPerDoc%.1f,"selection_decode_us_per_page":$selDecodeUsPerDoc%.1f,"selection_compute_us_per_page":${selUsPerDoc - selDecodeUsPerDoc}%.1f,"selection_pages":$selDocs,"selection_quiet_fallback":$selQuietFallback,"micro_select_us":$microSelect%.1f,"micro_serial_us":$microSerial%.1f,"micro_find_us":$microFind%.1f,"micro_parse_us":$microParse%.1f,"reference_micro_us":{"simple":36.6,"serial":16.4,"find":7.9},"reference_selection_us":36.6}"""
+      f"""{"metric":"frontier throughput (URLs scheduled+deduped/sec)","value":$thr32%.0f,"unit":"urls/sec","protocol":"$Protocol","queries":$qs,"sf":"$sfDir","headline_total_sec":$total%.3f,"shuffle_write_mb":$sh,"frontier_urls":$nUrls,"thr_local2":$thr2%.0f,"thr_local8":$thr8%.0f,"thr_local32":$thr32%.0f,"scaling_efficiency_2_to_8":$eff28%.3f,"scaling_efficiency_8_to_32":$eff832%.3f,"quiet_fallback":$qfb,"crawl_round_ms":$crawlMs,"ann_recall5_lsh":$recallLsh%.3f,"ann_recall5_ivf":$recallIvf%.3f,"lsh_max_bucket":$lshMaxBucket,"lsh_bucket_cap":${graft.pipeline.Similarity.LshBucketCap},"neardup_max_bucket":$neardupMaxBucket,"neardup_bucket_cap":${graft.pipeline.Similarity.NearDupBucketCap},"ivf_max_cell":$ivfMaxCell,"ivf_max_subcell":$ivfMaxSubcell,"ivf_flagged_cells":$ivfFlagged,"ivf_cell_cap":${graft.pipeline.Similarity.IvfCellCap},"minhash_max_band":$minhashMaxBand,"simhash_max_band":$simhashMaxBand,"band_cap":${graft.pipeline.TextPipeline.BandCap},"selection_us_per_page":$selUsPerDoc%.1f,"selection_decode_us_per_page":$selDecodeUsPerDoc%.1f,"selection_compute_us_per_page":${selUsPerDoc - selDecodeUsPerDoc}%.1f,"selection_pages":$selDocs,"selection_quiet_fallback":$selQuietFallback,"micro_select_us":$microSelect%.1f,"micro_serial_us":$microSerial%.1f,"micro_find_us":$microFind%.1f,"micro_parse_us":$microParse%.1f,"reference_micro_us":{"simple":36.6,"serial":16.4,"find":7.9},"reference_selection_us":36.6,"query_errors":$qe,"audit_error":$auditError,"crawl_error":$crawlError,"selection_error":$selError}"""
     println(compactRecord)
     // SECOND line: raw per-pass series + calibration evidence + protocol note
     println(

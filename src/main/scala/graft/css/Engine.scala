@@ -240,10 +240,6 @@ object Engine {
     orderByDocument(acc, roots, matched)
   }
 
-  /** Convenience: select under the document root (id 0). */
-  def selectDoc(acc: NodeAccess, css: String): Array[Int] =
-    select(acc, Seq(0), SelectorAst.parseCached(css))
-
   /** Chained sub-select (Q3): strict descendants of the roots matched with
     * the reference's ASCENDING semantics — the selector's ancestor compounds
     * may be satisfied ABOVE the sub-root (`examples/descendant_elements.rs`:

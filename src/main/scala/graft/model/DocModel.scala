@@ -143,7 +143,6 @@ final class Arena {
 
   def apply(id: Int): MutNode = nodes(id)
   def size: Int = nodes.length
-  def isValidId(id: Int): Boolean = id >= 0 && id < nodes.length
 
   /** Append a node to the arena — id = current length (`ops.rs:164-168`). */
   def create(n: MutNode): Int = { nodes += n; nodes.length - 1 }

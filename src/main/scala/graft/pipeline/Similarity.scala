@@ -261,9 +261,10 @@ object Similarity {
     * drift on float log/ceil rounding. The cap/2 target (rather than cap)
     * spends one extra margin bit to absorb within-cluster skew: a tight
     * cluster shares most split-plane bits, so its members concentrate in
-    * few sub-cells — measured on IvfHotProbe's 4000-member degenerate
-    * cluster, the margin bit lifts hot-query recall@5 0.750 → 0.830 (the
-    * pre-split slice reads 0.640) and shrinks the hottest list.
+    * few sub-cells — measured on a 4000-member degenerate cluster (round
+    * 5, BASELINE.md "Measurement history"), the margin bit lifts hot-query
+    * recall@5 0.750 → 0.830 (the pre-split slice reads 0.640) and shrinks
+    * the hottest list.
     * [[subBitsOf]] (driver-side) and [[subBitsCase]] (Column form, used by
     * the audit metric and differential specs) both read these bounds —
     * one source of truth. */
@@ -316,8 +317,9 @@ object Similarity {
     // query multi-probes 1-bit flips, so recall degrades gracefully
     // instead of cliffing at the cap.
     //
-    // split-failure detector (IvfHotProbe scenario 2): an identical-vector
-    // family shares every split-plane bit, so it collapses into ONE
+    // split-failure detector (PipelineSpec "IVF hot-cell split", its
+    // identical-family input): an identical-vector family shares every
+    // split-plane bit, so it collapses into ONE
     // sub-cell no width can separate — and a query whose own sub differs
     // by ≥2 bits would miss the whole family under 1-bit multiprobe (the
     // pre-split slice incidentally found it, since it ignored subs). Any

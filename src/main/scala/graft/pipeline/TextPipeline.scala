@@ -64,16 +64,6 @@ object TextPipeline {
   def tokenHashesSql(text: String) =
     s"transform(${tokensSql(text)}, w -> ${wordHashSql("w")})"
 
-  /** word 3-gram shingle hashes (falls back to token hashes for short docs) */
-  def shingleHashesSql(text: String): String = {
-    val th = tokenHashesSql(text)
-    s"""CASE WHEN size(${tokensSql(text)}) < 3 THEN $th
-        ELSE transform(sequence(1, size(${tokensSql(text)}) - 2),
-          i -> ((element_at($th, i) * 1009 + element_at($th, i + 1)) * 1013
-                + element_at($th, i + 2)) % ${P}L)
-        END"""
-  }
-
   /** 16-hash MinHash signature over the shingle set:
     * sig[i] = min over shingles of (h*(2i+3) + 5i+7) % P */
   def minhashSigSql(shingles: String) =
@@ -479,7 +469,8 @@ object TextPipeline {
     * one narrow projection, fully codegen. Lang-ID + stopword count run as
     * ONE native token pass (`text_lang_stats`): the HOF CASE chain evaluated
     * ~30 interpreted `filter` passes per row — the dominant term of this
-    * query's wall time (r3 ask #1; TAProf decomposition in BASELINE.md). */
+    * query's wall time (r3 ask #1; round-3 decomposition, BASELINE.md
+    * "Measurement history"). */
   def textAnalysis(docs: DataFrame): DataFrame = {
     graft.spark.GraftFunctions.register(docs.sparkSession)
     // r6: ONE fused native pass per row (text_profile) replaces the split +

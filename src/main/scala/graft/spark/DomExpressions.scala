@@ -17,9 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * (SURVEY.md §2.10). These evaluate per-row on Tungsten data via
  * [[ArrayDataAccess]] — no Row/encoder conversion in the hot path, which is
  * why they beat Scala UDFs (preference order per the Spark guide:
- * built-ins > custom Expression > UDF). All are deterministic and null-safe;
- * CodegenFallback keeps surrounding expressions inside whole-stage codegen
- * while these evaluate interpreted.
+ * built-ins > custom Expression > UDF). All are deterministic and null-safe.
+ * They are `CodegenFallback`, and `CollapseCodegenStages` rejects any
+ * non-leaf `CodegenFallback`, so a `Project` that holds one of them runs
+ * interpreted, outside whole-stage codegen, together with every other
+ * expression in that `Project` (ROADMAP item 7).
  *
  * The selector string must be a foldable literal — the plan compiles ONCE on
  * first evaluation (the reference's reusable-Matcher pattern,

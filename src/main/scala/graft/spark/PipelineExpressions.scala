@@ -528,8 +528,8 @@ case class CosSim(left: Expression, right: Expression) extends BinaryExpression 
   * [[graft.pipeline.TextPipeline.textAnalysis]] (PipelineSpec differential).
   * The SQL form evaluates every WHEN condition as score ≥ greatest(5 scores)
   * — up to ~30 interpreted `filter` array passes per row, the dominant term
-  * of q_text_analysis' wall time (TAProf: 0.37 s of 0.70 s at sf0.1); this
-  * is one token pass. */
+  * of q_text_analysis' wall time (0.37 s of 0.70 s at sf0.1 on the round-3
+  * host, BASELINE.md "Measurement history"); this is one token pass. */
 case class TextLangStats(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
     StructField("lang_guess", StringType, nullable = false),

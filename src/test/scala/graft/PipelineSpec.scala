@@ -289,6 +289,7 @@ class PipelineSpec extends AnyFunSuite {
     // the probe_all flag count and the max-subcell audit must tell the
     // same story: some cell is flagged iff some sub-cell exceeds the cap
     val flagged = Similarity.ivfFlaggedCells(emb, cellCap = 16, maxSubBits = 2)
+    assert(flagged > 0, "this gate must reach the probe_all branch")
     assert((flagged > 0) == (maxSub > 16),
       s"flag count $flagged inconsistent with max sub-cell $maxSub")
     // the driver-side width rule (subBitsOf, used by the one-pass metadata)
@@ -346,6 +347,34 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.intersect(hot).size.toDouble / exact.size
     assert(recall >= 0.2, s"hot-split IVF recall@5 too low: $recall")
+    // width exhaustion: an identical-vector family (200 exact copies of
+    // query vector 17) shares every split-plane bit, so its sub-cell stays
+    // over the cap at any width and flags its cell, cell 0. Without the
+    // family no cell is flagged at cap 64. Query 17 sits inside the family.
+    // Query 0 probes cell 0 from sub 0 while the family sits in sub 3: two
+    // bits away, outside 1-bit multiprobe, so only probe_all reaches it,
+    // and the family (cosine 0.33 to query 0) belongs in its exact top 5.
+    assert(Similarity.ivfFlaggedCells(emb, cellCap = 64, maxSubBits = 2) == 0)
+    val famBase = emb.agg(max("vec_id")).collect()(0).getLong(0) + 1
+    val famIds = famBase until famBase + 200
+    val withFamily = emb.select("vec_id", "embedding").unionByName(
+      emb.filter(col("vec_id") === 17L).select("embedding")
+        .crossJoin(famIds.toDF("vec_id")).select("vec_id", "embedding"))
+    assert(Similarity.ivfFlaggedCells(withFamily, cellCap = 64, maxSubBits = 2) > 0,
+      "an identical-vector family past the cap must flag its cell")
+    def top5(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("query_id").isin(0L, 17L)).collect()
+        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+    val famExact = top5(Similarity.bruteForceTopK(withFamily, nQueries = 20, k = 5))
+    val famIvf = top5(Similarity.ivfTopK(withFamily, nQueries = 20, k = 5,
+      cellCap = 64, maxSubBits = 2))
+    assert(famExact(17L) == famIds.take(5).toSet,
+      s"brute force must rank family members first for query 17: ${famExact(17L)}")
+    assert(famExact(0L).exists(famIds.contains),
+      s"the family must be in query 0's exact top 5: ${famExact(0L)}")
+    for (q <- Seq(17L, 0L))
+      assert(famIvf(q) == famExact(q),
+        s"flagged-cell probe missed the family for query $q: ${famIvf(q)} vs ${famExact(q)}")
   }
 
   test("embedding near-dup: every constructed dup pairs with its source") {
