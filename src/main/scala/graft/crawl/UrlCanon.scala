@@ -33,7 +33,7 @@ object UrlCanon {
     try {
       val resolved =
         if (hasScheme(trimmed)) new java.net.URI(trimmed)
-        else if (base != null && base.nonEmpty) new java.net.URI(base).resolve(trimmed)
+        else if (base != null && base.nonEmpty) parsedBase(base).resolve(trimmed)
         else return null
       val scheme = if (resolved.getScheme == null) null else resolved.getScheme.toLowerCase
       if (scheme != "http" && scheme != "https") return null
@@ -52,6 +52,24 @@ object UrlCanon {
       s"$scheme://$host$portStr$path$query"
     } catch {
       case _: Exception => null
+    }
+  }
+
+  /** The last base this thread parsed: the links of one page share their
+    * base, so a page's links parse it once instead of once per link.
+    * `java.net.URI` is immutable; an invalid base throws on every call and
+    * is never cached. */
+  private final class LastBase(var base: String, var uri: java.net.URI)
+  private val lastBase = ThreadLocal.withInitial[LastBase](() => new LastBase(null, null))
+
+  private def parsedBase(base: String): java.net.URI = {
+    val last = lastBase.get
+    if (base == last.base) last.uri
+    else {
+      val uri = new java.net.URI(base)
+      last.base = base
+      last.uri = uri
+      uri
     }
   }
 

@@ -261,7 +261,9 @@ final class Arena {
     // intermediate Lists. type_pos uses ONE arena-wide versioned count map
     // (version = parent id) — O(1) per element with zero per-parent
     // allocation or clear, and no quadratic blowup on wide fan-outs (a
-    // 10k-link list is a normal crawled page).
+    // 10k-link list is a normal crawled page). Parsed tag names are the
+    // parser's canonical atom strings, so the map hashes each known name
+    // once per JVM, not once per element.
     val typeCount = new java.util.HashMap[String, Array[Int]]()
     var p = 0
     while (p < n) {

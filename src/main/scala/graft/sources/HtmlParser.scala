@@ -17,32 +17,25 @@ import scala.collection.mutable
  * `node_data.rs:244-257`), and adjacent-text merging at parse time
  * (`document.rs:374-396`).
  *
+ * Tag and attribute names are [[Atoms]]: the tokenizer resolves each name
+ * to its atom once, from the scanned characters, and the tree builder tests
+ * the atom's category bits. That table is the one place the tag categories
+ * (void, raw text, special, the scope stops, formatting, …) are written
+ * down.
+ *
  * Not a port: this is a from-scratch Scala implementation that matches the
  * reference's observable behavior on its test fixtures.
  */
 object HtmlParser {
 
-  val VoidElements: Set[String] = Set(
-    "area", "base", "br", "col", "embed", "hr", "img", "input", "link",
-    "meta", "param", "source", "track", "wbr")
-
-  val RawTextElements: Set[String] = Set("script", "style", "xmp", "iframe", "noembed", "noframes")
-  val RcdataElements: Set[String] = Set("title", "textarea")
+  import Atoms.{Unknown, fold}
 
   /** HTML5 "rules for parsing tokens in foreign content" data (public spec
     * tables; html5ever applies the same adjustments, which is how the
     * reference gets camelCase SVG names like `viewBox`/`foreignObject`). */
   private[sources] object ForeignContent {
-    /** Start tags that break out of foreign content back to HTML. */
-    private val Breakout: Set[String] = Set(
-      "b", "big", "blockquote", "body", "br", "center", "code", "dd", "div",
-      "dl", "dt", "em", "embed", "h1", "h2", "h3", "h4", "h5", "h6", "head",
-      "hr", "i", "img", "li", "listing", "menu", "meta", "nobr", "ol", "p",
-      "pre", "ruby", "s", "small", "span", "strong", "strike", "sub", "sup",
-      "table", "tt", "u", "ul", "var")
-
-    def isBreakout(name: String, attrs: List[(String, String)]): Boolean =
-      Breakout(name) || (name == "font" &&
+    def isBreakout(tag: Int, attrs: List[(String, String)]): Boolean =
+      (Atoms.bits(tag) & Atoms.Breakout) != 0 || (tag == Atoms.Font &&
         attrs.exists { case (k, _) => k == "color" || k == "face" || k == "size" })
 
     /** SVG tag-name case fixups (spec "adjust SVG tag names"). */
@@ -96,24 +89,15 @@ object HtmlParser {
       ns == "svg" && (name == "foreignObject" || name == "desc" || name == "title")
   }
 
-  /** Start tags that close an open <p> (button scope), per HTML5 spec. */
-  private val ClosesP: Set[String] = Set(
-    "address", "article", "aside", "blockquote", "center", "details",
-    "dialog", "dir", "div", "dl", "fieldset", "figcaption", "figure",
-    "footer", "form", "h1", "h2", "h3", "h4", "h5", "h6", "header",
-    "hgroup", "hr", "listing", "main", "menu", "nav", "ol", "p",
-    "plaintext", "pre", "section", "summary", "table", "ul", "xmp")
-
-  private val HeadContent: Set[String] = Set("title", "base", "link", "meta", "style", "script", "noscript", "template")
-
-  private val TableSections = Set("thead", "tbody", "tfoot")
-
   // --- Tokenizer -----------------------------------------------------------
 
   sealed trait Tok
   case class TText(s: String) extends Tok
-  case class TStart(name: String, attrs: List[(String, String)], selfClosing: Boolean) extends Tok
-  case class TEnd(name: String) extends Tok
+  /** `tag` is the name's atom id ([[Atoms.Unknown]] for a name outside the
+    * table); `name` is then the canonical atom string. */
+  case class TStart(name: String, tag: Int, attrs: List[(String, String)],
+      selfClosing: Boolean) extends Tok
+  case class TEnd(name: String, tag: Int) extends Tok
   case class TComment(s: String) extends Tok
   case class TDoctype(name: String, publicId: String, systemId: String) extends Tok
 
@@ -190,10 +174,7 @@ object HtmlParser {
             var j = i + 2
             while (j < n && html.charAt(j) != '>') j += 1
             if (j < n) {
-              val raw = html.substring(i + 2, j)
-              val name = raw.takeWhile(ch => !Character.isWhitespace(ch)).toLowerCase
-              if (name == "br") emit(TStart("br", Nil, selfClosing = false)) // spec: </br> acts as <br>
-              else emit(TEnd(name))
+              emit(endTag(html, i + 2, j))
               i = j + 1
             } else i = n // eof-in-tag: the token is dropped (html5ever)
           } else { text.append(c); i += 1 }
@@ -211,19 +192,19 @@ object HtmlParser {
               // (html5ever's tokenizer-state feedback) — inForeign() is
               // consulted AFTER emit, so the builder has already pushed
               // this element with its namespace
-              case TStart(name, _, false)
-                  if (RawTextElements(name) || RcdataElements(name)) && !inForeign() =>
+              case TStart(name, tag, _, false)
+                  if (Atoms.bits(tag) & (Atoms.RawText | Atoms.Rcdata)) != 0 && !inForeign() =>
                 // consume raw text until the matching close tag — manual
                 // case-insensitive scan (a compiled regex per element instance
                 // dominated tokenizer cost)
                 val rawEnd = findCloseTag(html, i, name)
                 val stop = if (rawEnd == -1) n else rawEnd
                 val raw = html.substring(i, stop)
-                val content = if (RcdataElements(name)) Entities.decode(raw) else raw
+                val content = if ((Atoms.bits(tag) & Atoms.Rcdata) != 0) Entities.decode(raw) else raw
                 if (content.nonEmpty) emit(TText(content))
                 if (rawEnd != -1) {
                   val gt = html.indexOf('>', rawEnd)
-                  emit(TEnd(name))
+                  emit(TEnd(name, tag))
                   i = if (gt == -1) n else gt + 1
                 } else i = n
               case _ =>
@@ -233,6 +214,28 @@ object HtmlParser {
       } else { text.append(c); i += 1 }
     }
     flushText()
+  }
+
+  /** The token of the end tag whose name starts at `from`, with its `>`
+    * at `gt`. The name runs to whitespace or `>`; an all-ASCII name
+    * resolves its atom from the range, anything else lower-cases as a
+    * String (`String.toLowerCase` differs from per-char folding outside
+    * ASCII). */
+  private def endTag(html: String, from: Int, gt: Int): Tok = {
+    var k = from
+    var h = 0
+    var ascii = true
+    while (k < gt && !Character.isWhitespace(html.charAt(k))) {
+      val ch = html.charAt(k)
+      if (ch >= 128) ascii = false
+      h = 31 * h + fold(ch)
+      k += 1
+    }
+    var tag = if (ascii) Atoms.lookupFolded(html, from, k, h) else Unknown
+    val name = if (tag != Unknown) Atoms.names(tag) else html.substring(from, k).toLowerCase
+    if (!ascii) tag = Atoms.idOf(name)
+    // spec: </br> acts as <br>
+    if (tag == Atoms.Br) TStart(name, tag, Nil, selfClosing = false) else TEnd(name, tag)
   }
 
   /** Index of `</name` (case-insensitive, followed by ws/>//) at or after
@@ -299,14 +302,19 @@ object HtmlParser {
     var i = start + 1
     val n0 = i
     var anyUpper = false
+    var h = 0
     while (i < n && {
       val ch = html.charAt(i)
       !Character.isWhitespace(ch) && ch != '>' && ch != '/'
     }) {
-      if (Character.toLowerCase(html.charAt(i)) != html.charAt(i)) anyUpper = true
+      val ch = html.charAt(i)
+      val lc = fold(ch)
+      if (lc != ch) anyUpper = true
+      h = 31 * h + lc
       i += 1
     }
-    val name = lowerSlice(html, n0, i, anyUpper)
+    val tag = Atoms.lookupFolded(html, n0, i, h)
+    val name = if (tag != Unknown) Atoms.names(tag) else lowerSlice(html, n0, i, anyUpper)
     val attrs = mutable.ListBuffer[(String, String)]()
     var selfClosing = false
     var closed = false
@@ -322,14 +330,19 @@ object HtmlParser {
         case _ =>
           val k0 = i
           var kUpper = false
+          var kh = 0
           while (i < n && {
             val ch = html.charAt(i)
             !Character.isWhitespace(ch) && ch != '=' && ch != '>' && ch != '/'
           }) {
-            if (Character.toLowerCase(html.charAt(i)) != html.charAt(i)) kUpper = true
+            val ch = html.charAt(i)
+            val lc = fold(ch)
+            if (lc != ch) kUpper = true
+            kh = 31 * kh + lc
             i += 1
           }
-          val key = lowerSlice(html, k0, i, kUpper)
+          val kid = Atoms.lookupFolded(html, k0, i, kh)
+          val key = if (kid != Unknown) Atoms.names(kid) else lowerSlice(html, k0, i, kUpper)
           while (i < n && Character.isWhitespace(html.charAt(i))) i += 1
           var value = ""
           if (i < n && html.charAt(i) == '=') {
@@ -355,72 +368,10 @@ object HtmlParser {
           if (key.nonEmpty && !attrs.exists(_._1 == key)) attrs += (key -> value)
       }
     }
-    (TStart(name, attrs.toList, selfClosing), i, closed)
+    (TStart(name, tag, attrs.toList, selfClosing), i, closed)
   }
 
   // --- Tree builder --------------------------------------------------------
-
-  /** Formatting elements subject to the adoption agency algorithm
-    * (HTML5 "active formatting elements"; html5ever gives the reference the
-    * full algorithm via `Document::from`, `/root/reference/src/document.rs:44-55`). */
-  val FormattingTags: Set[String] = Set(
-    "a", "b", "big", "code", "em", "font", "i", "nobr", "s", "small",
-    "strike", "strong", "tt", "u")
-
-  /** The HTML5 "special" element category (stops "any other end tag" walks
-    * and defines the adoption agency furthest block). */
-  private val Special: Set[String] = Set(
-    "address", "applet", "area", "article", "aside", "base", "basefont",
-    "bgsound", "blockquote", "body", "br", "button", "caption", "center",
-    "col", "colgroup", "dd", "details", "dir", "div", "dl", "dt", "embed",
-    "fieldset", "figcaption", "figure", "footer", "form", "frame", "frameset",
-    "h1", "h2", "h3", "h4", "h5", "h6", "head", "header", "hgroup", "hr",
-    "html", "iframe", "img", "input", "keygen", "li", "link", "listing",
-    "main", "marquee", "menu", "meta", "nav", "noembed", "noframes",
-    "noscript", "object", "ol", "p", "param", "plaintext", "pre", "script",
-    "search", "section", "select", "source", "style", "summary", "table",
-    "tbody", "td", "template", "textarea", "tfoot", "th", "thead", "title",
-    "tr", "track", "ul", "wbr", "xmp", "#root", "#fragment-html")
-
-  /** Elements whose stack entries bound the default scope. */
-  private val BaseScopeStops: Set[String] = Set(
-    "applet", "caption", "html", "table", "td", "th", "marquee", "object",
-    "template", "#root", "#fragment-html")
-
-  private val TableScopeStops: Set[String] =
-    Set("html", "table", "template", "#root", "#fragment-html")
-
-  // precomputed scope variants — building these per inButtonScope/inListScope
-  // CALL was the top leaf of the tree-builder profile (a Set union per
-  // start tag: closeImplied probes button scope for every ClosesP tag)
-  private val ButtonScopeStops: Set[String] = BaseScopeStops + "button"
-  private val ListScopeStops: Set[String] = BaseScopeStops ++ Set("ol", "ul")
-
-  /** AFE marker elements: entering one pushes a marker; popping one clears
-    * the active formatting list back to the marker. */
-  private val MarkerTags: Set[String] =
-    Set("applet", "caption", "marquee", "object", "template", "td", "th")
-
-  private val ImpliedEnd: Set[String] =
-    Set("dd", "dt", "li", "optgroup", "option", "p", "rb", "rp", "rt", "rtc")
-
-  /** Block end tags with default-scope close semantics. */
-  private val BlockEnd: Set[String] = Set(
-    "address", "article", "aside", "blockquote", "button", "center",
-    "details", "dialog", "dir", "div", "dl", "fieldset", "figcaption",
-    "figure", "footer", "header", "hgroup", "listing", "main", "menu",
-    "nav", "ol", "pre", "section", "summary", "ul")
-
-  private val Headings: Set[String] = Set("h1", "h2", "h3", "h4", "h5", "h6")
-
-  /** Start tags legal directly inside table/section/row context (anything
-    * else is foster-parented before the table, per HTML5 "in table"). */
-  private val TableLegal: Set[String] = Set(
-    "caption", "colgroup", "col", "tbody", "tfoot", "thead", "tr", "td",
-    "th", "script", "style", "template", "form")
-
-  private val TableContext: Set[String] =
-    Set("table", "tbody", "tfoot", "thead", "tr")
 
   /** Parse a full document: root = Document node at id 0 (`tree.rs:126-128`). */
   def parseDocument(html: String): Arena = build(html, fragment = false)
@@ -467,14 +418,31 @@ object HtmlParser {
    * spec adoption agency algorithm — the recovery behaviors html5ever gives
    * the reference for free on real-world markup (`document.rs:258-494`).
    * From-scratch implementation of the public WHATWG algorithm, not a port.
+   *
+   * Tags are [[Atoms]] ids: category tests are bit tests, and a per-id count
+   * of open elements answers "is any `<p>` (or `<li>`, `<td>`…) in scope"
+   * with false at once when none is open, so scope checks do not walk the
+   * stack of a deeply nested document. A per-node open flag replaces the
+   * "is this node on the stack" scans.
    */
   private final class TreeBuilder(html: String, fragment: Boolean) {
+    import Atoms._
 
-    private case class Open(id: Int, name: String, ns: String = "html")
-    private final class Fmt(var id: Int, val name: String, val attrs: List[(String, String)])
+    /** An open element. `tag` is always `Atoms.idOf(name)`, so two entries
+      * name the same known tag exactly when their ids are equal. */
+    private final class Open(val id: Int, val name: String, val tag: Int, val ns: String) {
+      val bits: Long = Atoms.bits(tag)
+      @inline def is(cat: Long): Boolean = (bits & cat) != 0
+    }
+    private final class Fmt(var id: Int, val name: String, val tag: Int,
+        val attrs: List[(String, String)])
 
     private val arena = new Arena
     private val stack = mutable.ArrayBuffer[Open]()
+    /** Open elements per tag id (index 0 lumps all unknown names). */
+    private val openCount = new Array[Int](Atoms.size)
+    /** Arena ids currently on the stack. */
+    private val onStack = new java.util.BitSet
     private val afe = mutable.ArrayBuffer[Fmt]() // null entry = scope marker
     private val errors = mutable.ListBuffer[String]()
     private var quirks = "quirks" // no doctype → quirks
@@ -492,6 +460,29 @@ object HtmlParser {
     private def top: Open = stack(stack.length - 1)
     private def curParent: Int = top.id
     private def error(msg: String): Unit = if (errors.length < 64) errors += msg
+
+    // --- the stack of open elements: every change goes through these --------
+
+    private def push(id: Int, name: String, tag: Int, ns: String = "html"): Unit = {
+      stack += new Open(id, name, tag, ns)
+      openCount(tag) += 1
+      onStack.set(id)
+    }
+    private def insertAt(i: Int, e: Open): Unit = {
+      stack.insert(i, e)
+      openCount(e.tag) += 1
+      onStack.set(e.id)
+    }
+    private def removeAt(i: Int): Open = {
+      val e = stack.remove(i)
+      openCount(e.tag) -= 1
+      onStack.clear(e.id)
+      e
+    }
+    /** Stack position of arena node `id`, or -1 (a node is open at most once). */
+    private def stackIndexOf(id: Int): Int =
+      if (!onStack.get(id)) -1
+      else { var i = stack.length - 1; while (stack(i).id != id) i -= 1; i }
 
     // --- pointer surgery -----------------------------------------------------
 
@@ -543,25 +534,29 @@ object HtmlParser {
 
     // --- scopes ---------------------------------------------------------------
 
-    private def inScope(name: String, stops: Set[String] = BaseScopeStops): Boolean = {
+    /** Is an element with known tag `tag` in the scope bounded by `stops`?
+      * False without a walk when no such element is open. */
+    private def inScope(tag: Int, stops: Long = ScopeStop): Boolean = {
+      if (openCount(tag) == 0) return false
       var i = stack.length - 1
       while (i >= 0) {
         val e = stack(i)
-        if (e.name == name) return true
-        if (stops(e.name)) return false
+        if (e.tag == tag) return true
+        if (e.is(stops)) return false
         i -= 1
       }
       false
     }
-    private def inButtonScope(name: String) = inScope(name, ButtonScopeStops)
-    private def inListScope(name: String) = inScope(name, ListScopeStops)
-    private def inTableScope(name: String) = inScope(name, TableScopeStops)
+    private def inButtonScope(tag: Int) = inScope(tag, ButtonScopeStop)
+    private def inListScope(tag: Int) = inScope(tag, ListScopeStop)
+    private def inTableScope(tag: Int) = inScope(tag, TableScopeStop)
     private def idInScope(id: Int): Boolean = {
+      if (!onStack.get(id)) return false
       var i = stack.length - 1
       while (i >= 0) {
         val e = stack(i)
         if (e.id == id) return true
-        if (BaseScopeStops(e.name)) return false
+        if (e.is(ScopeStop)) return false
         i -= 1
       }
       false
@@ -570,19 +565,19 @@ object HtmlParser {
     // --- stack helpers ----------------------------------------------------------
 
     private def popTop(): Unit = {
-      val e = stack.remove(stack.length - 1)
-      if (MarkerTags(e.name)) clearAfeToMarker()
+      val e = removeAt(stack.length - 1)
+      if (e.is(Marker)) clearAfeToMarker()
     }
-    private def popThrough(name: String): Unit = {
+    private def popThrough(tag: Int): Unit = {
       var done = false
       while (!done && stack.length > floor) {
-        val t = top.name
+        val t = top.tag
         popTop()
-        if (t == name) done = true
+        if (t == tag) done = true
       }
     }
-    private def generateImplied(except: String = ""): Unit =
-      while (stack.length > floor && ImpliedEnd(top.name) && top.name != except) popTop()
+    private def generateImplied(except: Int = Unknown): Unit =
+      while (stack.length > floor && top.is(ImpliedEnd) && top.tag != except) popTop()
 
     private def clearAfeToMarker(): Unit = {
       var done = false
@@ -598,12 +593,12 @@ object HtmlParser {
       * parenting (HTML5 "appropriate place for inserting a node"): content
       * illegal directly inside table/section/row goes BEFORE the table. */
     private def insertionPoint(foster: Boolean): (Int, Int) = {
-      if (!foster || !TableContext(top.name)) return (curParent, -1)
+      if (!foster || !top.is(TableContext)) return (curParent, -1)
       var i = stack.length - 1
       while (i >= 0) {
         val e = stack(i)
-        if (e.name == "template") return (e.id, -1)
-        if (e.name == "table") {
+        if (e.tag == Template) return (e.id, -1)
+        if (e.tag == Table) {
           val p = arena(e.id).parent
           if (p != -1) return (p, e.id)
           return (stack(i - 1).id, -1)
@@ -647,21 +642,22 @@ object HtmlParser {
     private def reconstructAfe(): Unit = {
       if (afe.isEmpty) return
       val lastE = afe(afe.length - 1)
-      if (lastE == null || stack.exists(_.id == lastE.id)) return
+      if (lastE == null || onStack.get(lastE.id)) return
       var i = afe.length - 1
-      while (i > 0 && { val e = afe(i - 1); e != null && !stack.exists(_.id == e.id) }) i -= 1
+      while (i > 0 && { val e = afe(i - 1); e != null && !onStack.get(e.id) }) i -= 1
       while (i < afe.length) {
         val e = afe(i)
         val id = arena.createElement(e.name, e.attrs)
         insertNode(id, foster = true)
-        stack += Open(id, e.name)
+        push(id, e.name, e.tag)
         e.id = id
         i += 1
       }
     }
 
     /** Push with the Noah's ark clause (≤3 identical entries per marker scope). */
-    private def pushFormatting(id: Int, name: String, attrs: List[(String, String)]): Unit = {
+    private def pushFormatting(id: Int, name: String, tag: Int,
+        attrs: List[(String, String)]): Unit = {
       var count = 0
       var earliest = -1
       var i = afe.length - 1
@@ -670,18 +666,18 @@ object HtmlParser {
         val e = afe(i)
         if (e == null) run = false
         else {
-          if (e.name == name && e.attrs == attrs) { count += 1; earliest = i }
+          if (e.tag == tag && e.attrs == attrs) { count += 1; earliest = i }
           i -= 1
         }
       }
       if (count >= 3 && earliest != -1) afe.remove(earliest)
-      afe += new Fmt(id, name, attrs)
+      afe += new Fmt(id, name, tag, attrs)
     }
 
     /** The HTML5 adoption agency algorithm (misnested formatting end tags,
       * e.g. `<b><i>x</b>y</i>`). Max 8 outer / 3 inner iterations per spec. */
-    private def adoptionAgency(subject: String): Unit = {
-      if (top.name == subject && !afe.exists(e => e != null && e.id == top.id)) {
+    private def adoptionAgency(subject: String, tag: Int): Unit = {
+      if (top.tag == tag && !afe.exists(e => e != null && e.id == top.id)) {
         popTop(); return
       }
       var outer = 0
@@ -694,12 +690,12 @@ object HtmlParser {
         while (scan && i >= 0) {
           val e = afe(i)
           if (e == null) scan = false
-          else if (e.name == subject) { fi = i; scan = false }
+          else if (e.tag == tag) { fi = i; scan = false }
           else i -= 1
         }
-        if (fi == -1) { anyOtherEndTag(subject); return }
+        if (fi == -1) { anyOtherEndTag(subject, tag); return }
         val fmt = afe(fi)
-        val si = stack.indexWhere(_.id == fmt.id)
+        val si = stackIndexOf(fmt.id)
         if (si == -1) { error(s"</$subject>: formatting element not open"); afe.remove(fi); return }
         if (!idInScope(fmt.id)) { error(s"</$subject> out of scope"); return }
         if (top.id != fmt.id) error(s"misnested </$subject>")
@@ -707,7 +703,7 @@ object HtmlParser {
         var fb = -1
         var j = si + 1
         while (j < stack.length && fb == -1) {
-          if (Special(stack(j).name)) fb = j else j += 1
+          if (stack(j).is(Special)) fb = j else j += 1
         }
         if (fb == -1) {
           while (stack.length > si) popTop()
@@ -716,7 +712,8 @@ object HtmlParser {
           return
         }
         val furthestBlockId = stack(fb).id
-        val commonAncestor = stack(si - 1).id
+        val common = stack(si - 1)
+        val commonAncestor = common.id
         var bookmark = fi
         var nodeIdx = fb
         var lastNodeId = furthestBlockId
@@ -732,14 +729,15 @@ object HtmlParser {
             if (inner > 3 && ai != -1) {
               afe.remove(ai)
               if (ai < bookmark) bookmark -= 1
-              stack.remove(nodeIdx)
+              removeAt(nodeIdx)
             } else if (ai == -1) {
-              stack.remove(nodeIdx)
+              removeAt(nodeIdx)
             } else {
               val entry = afe(ai)
               val cloneId = arena.createElement(node.name, entry.attrs)
               entry.id = cloneId
-              stack(nodeIdx) = Open(cloneId, node.name)
+              removeAt(nodeIdx)
+              insertAt(nodeIdx, new Open(cloneId, node.name, node.tag, "html"))
               if (lastNodeId == furthestBlockId) bookmark = ai + 1
               detach(lastNodeId)
               appendChild(cloneId, lastNodeId)
@@ -747,10 +745,11 @@ object HtmlParser {
             }
           }
         }
-        // reparent lastNode under the common ancestor (foster-aware)
+        // reparent lastNode under the common ancestor (foster-aware); the
+        // stack entry names the ancestor's element (the template and
+        // scaffold entries are never table context)
         detach(lastNodeId)
-        val caNode = arena(commonAncestor)
-        if (caNode.isElement && TableContext(caNode.name)) {
+        if (common.is(TableContext)) {
           var t = commonAncestor
           while (t != -1 && !(arena(t).isElement && arena(t).name == "table")) t = arena(t).parent
           if (t != -1 && arena(t).parent != -1) insertBefore(t, lastNodeId)
@@ -765,26 +764,27 @@ object HtmlParser {
           afe.remove(fiNow)
           if (fiNow < bookmark) bookmark -= 1
         }
-        afe.insert(math.min(math.max(bookmark, 0), afe.length), new Fmt(newFmtId, subject, fmt.attrs))
-        val siNow = stack.indexWhere(_.id == fmt.id)
-        if (siNow != -1) stack.remove(siNow)
-        val fbNow = stack.indexWhere(_.id == furthestBlockId)
-        stack.insert(fbNow + 1, Open(newFmtId, subject))
+        afe.insert(math.min(math.max(bookmark, 0), afe.length),
+          new Fmt(newFmtId, subject, tag, fmt.attrs))
+        val siNow = stackIndexOf(fmt.id)
+        if (siNow != -1) removeAt(siNow)
+        val fbNow = stackIndexOf(furthestBlockId)
+        insertAt(fbNow + 1, new Open(newFmtId, subject, tag, "html"))
       }
     }
 
     /** HTML5 "any other end tag": walk up, pop through a match, stop at
       * special elements (stray end tags never pop past block structure). */
-    private def anyOtherEndTag(name: String): Unit = {
+    private def anyOtherEndTag(name: String, tag: Int): Unit = {
       var i = stack.length - 1
       while (i >= floor) {
         val e = stack(i)
-        if (e.name == name) {
-          generateImplied(except = name)
-          while (stack.exists(_.id == e.id)) popTop()
+        if (if (tag != Unknown) e.tag == tag else e.name == name) {
+          generateImplied(except = tag)
+          while (onStack.get(e.id)) popTop()
           return
         }
-        if (Special(e.name)) { error(s"unexpected end tag </$name>"); return }
+        if (e.is(Special)) { error(s"unexpected end tag </$name>"); return }
         i -= 1
       }
       error(s"stray end tag </$name>")
@@ -793,102 +793,94 @@ object HtmlParser {
     // --- implied closes on start tags ------------------------------------------------
 
     private def closeCellIfOpen(): Unit = {
-      if (inTableScope("td")) { generateImplied(); popThrough("td") }
-      else if (inTableScope("th")) { generateImplied(); popThrough("th") }
+      if (inTableScope(Td)) { generateImplied(); popThrough(Td) }
+      else if (inTableScope(Th)) { generateImplied(); popThrough(Th) }
     }
 
-    /** Nearest enclosing table/template boundary for table-structure tokens
-      * (templates may host bare rows/cells — `<template><tr>…`). */
-    private def nearestTableHost(): String = {
+    /** Is the nearest enclosing table/template boundary a table or a
+      * template (templates may host bare rows/cells — `<template><tr>…`),
+      * rather than the document root? */
+    private def inTableHost: Boolean = {
+      if (openCount(Table) == 0 && openCount(Template) == 0) return false
       var i = stack.length - 1
       while (i >= 0) {
-        val nm = stack(i).name
-        if (nm == "table" || nm == "template" ||
-            nm == "#root" || nm == "#fragment-html") return nm
+        val t = stack(i).tag
+        if (t == Table || t == Template) return true
+        if (t == Root || t == FragmentHtml) return false
         i -= 1
       }
-      "#root"
+      false
     }
 
     /** HTML5 "clear the stack back to a table/row/body context": pop open
-      * elements (e.g. stray formatting) until a context element. */
-    private def clearToContext(stops: Set[String]): Unit =
-      while (stack.length > floor && !stops(top.name) &&
-          top.name != "#root" && top.name != "#fragment-html" &&
-          top.name != "html" && top.name != "body") popTop()
+      * elements (e.g. stray formatting) until a context element or the
+      * document scaffold. */
+    private def clearToContext(stops: Long): Unit =
+      while (stack.length > floor && !top.is(stops)) popTop()
 
-    private def closeImplied(incoming: String): Unit = {
-      if (ClosesP(incoming) && inButtonScope("p")) {
-        generateImplied(except = "p")
-        popThrough("p")
-      }
-      def closeP(): Unit =
-        if (inButtonScope("p")) { generateImplied(except = "p"); popThrough("p") }
-      incoming match {
-        case "li" =>
-          if (inListScope("li")) { generateImplied(except = "li"); popThrough("li") }
+    private def closeP(): Unit =
+      if (inButtonScope(P)) { generateImplied(except = P); popThrough(P) }
+
+    private def closeImplied(tag: Int): Unit = {
+      if ((Atoms.bits(tag) & ClosesP) != 0) closeP()
+      tag match {
+        case Li =>
+          if (inListScope(Li)) { generateImplied(except = Li); popThrough(Li) }
           closeP() // spec li step 3: also close an open <p> in button scope
-        case "dt" | "dd" =>
-          if (inScope("dt")) { generateImplied(except = "dt"); popThrough("dt") }
-          else if (inScope("dd")) { generateImplied(except = "dd"); popThrough("dd") }
+        case Dt | Dd =>
+          if (inScope(Dt)) { generateImplied(except = Dt); popThrough(Dt) }
+          else if (inScope(Dd)) { generateImplied(except = Dd); popThrough(Dd) }
           closeP()
-        case "option" => if (top.name == "option") popTop()
-        case "optgroup" =>
-          if (top.name == "option") popTop()
-          if (top.name == "optgroup") popTop()
-        case "button" =>
-          if (inScope("button")) { generateImplied(); popThrough("button") }
-        case "tr" =>
+        case OptionTag => if (top.tag == OptionTag) popTop()
+        case Optgroup =>
+          if (top.tag == OptionTag) popTop()
+          if (top.tag == Optgroup) popTop()
+        case Button =>
+          if (inScope(Button)) { generateImplied(); popThrough(Button) }
+        case Tr =>
           closeCellIfOpen()
-          if (inTableScope("tr")) popThrough("tr")
-          else clearToContext(Set("tbody", "tfoot", "thead", "table", "template"))
-        case "td" | "th" =>
+          if (inTableScope(Tr)) popThrough(Tr)
+          else clearToContext(BodyClearStop)
+        case Td | Th =>
           closeCellIfOpen()
-          clearToContext(Set("tr", "tbody", "tfoot", "thead", "table", "template"))
-        case s if TableSections(s) =>
+          clearToContext(RowClearStop)
+        case Tbody | Thead | Tfoot =>
           closeCellIfOpen()
-          if (inTableScope("tr")) popThrough("tr")
-          if (TableSections(top.name)) popTop()
-          clearToContext(Set("table", "template"))
-        case "caption" | "colgroup" | "col" =>
+          if (inTableScope(Tr)) popThrough(Tr)
+          if (top.is(TableSection)) popTop()
+          clearToContext(TableClearStop)
+        case Caption | Colgroup | Col =>
           closeCellIfOpen()
-          if (incoming != "caption" && inTableScope("tr")) popThrough("tr")
-          clearToContext(Set("table", "template"))
-        case "table" =>
+          if (tag != Caption && inTableScope(Tr)) popThrough(Tr)
+          clearToContext(TableClearStop)
+        case Table =>
           // <table> while directly in table context closes the current table
-          if (TableContext(top.name) && inTableScope("table")) popThrough("table")
+          if (top.is(TableContext) && inTableScope(Table)) popThrough(Table)
         case _ =>
       }
     }
 
     /** Implicit tbody/tr insertion for bare rows/cells in a table. */
-    private def tableFixups(incoming: String): Unit = {
-      incoming match {
-        case "tr" if top.name == "table" =>
+    private def tableFixups(tag: Int): Unit =
+      if (tag == Tr || tag == Td || tag == Th) {
+        if (top.tag == Table) {
           val tb = arena.createElement("tbody")
           appendChild(curParent, tb)
-          stack += Open(tb, "tbody")
-        case "td" | "th" =>
-          if (top.name == "table") {
-            val tb = arena.createElement("tbody")
-            appendChild(curParent, tb)
-            stack += Open(tb, "tbody")
-          }
-          if (TableSections(top.name)) {
-            val tr = arena.createElement("tr")
-            appendChild(curParent, tr)
-            stack += Open(tr, "tr")
-          }
-        case _ =>
+          push(tb, "tbody", Tbody)
+        }
+        if (tag != Tr && top.is(TableSection)) {
+          val tr = arena.createElement("tr")
+          appendChild(curParent, tr)
+          push(tr, "tr", Tr)
+        }
       }
-    }
 
     // --- scaffolding --------------------------------------------------------------
 
     private def ensureHtml(): Unit = if (!fragment && htmlId == -1) {
       htmlId = arena.createElement("html")
       appendChild(0, htmlId)
-      stack += Open(htmlId, "html")
+      push(htmlId, "html", Html)
     }
 
     private def ensureHead(): Unit = if (!fragment && headId == -1) {
@@ -901,26 +893,24 @@ object HtmlParser {
       if (fragment) return
       if (bodyId == -1) {
         ensureHtml(); ensureHead(); headClosed = true
-        while (top.name != "html" && top.name != "#root") popTop()
+        while (top.tag != Html && top.tag != Root) popTop()
         bodyId = arena.createElement("body")
         appendChild(htmlId, bodyId)
-        stack += Open(bodyId, "body")
+        push(bodyId, "body", Body)
       }
       bodyStarted = true
     }
 
     // --- token dispatch --------------------------------------------------------------
 
-    private val TableStructure = Set(
-      "caption", "col", "colgroup", "tbody", "td", "tfoot", "th", "thead", "tr")
-
     /** "select scope": only option/optgroup sit between here and the select. */
     private def inSelect: Boolean = {
+      if (openCount(Select) == 0) return false
       var i = stack.length - 1
       while (i >= 0) {
-        val nm = stack(i).name
-        if (nm == "select") return true
-        if (nm != "option" && nm != "optgroup") return false
+        val t = stack(i).tag
+        if (t == Select) return true
+        if (t != OptionTag && t != Optgroup) return false
         i -= 1
       }
       false
@@ -937,32 +927,34 @@ object HtmlParser {
         }
       }
 
-    /** Namespace to process `tokName` under per the spec's tree-construction
-      * dispatcher, or null for the normal HTML rules. */
-    private def foreignNsFor(tokName: String): String = {
+    /** Namespace to process a token with tag id `tag` (Unknown for text)
+      * under per the spec's tree-construction dispatcher, or null for the
+      * normal HTML rules. */
+    private def foreignNsFor(tag: Int): String = {
       val t = top
       if (t.ns == "html") null
       else if (ForeignContent.isMathTextIP(t.ns, t.name) &&
-        tokName != "mglyph" && tokName != "malignmark") null
-      else if (t.ns == "math" && t.name == "annotation-xml" && tokName == "svg") null
+        tag != Mglyph && tag != Malignmark) null
+      else if (t.ns == "math" && t.name == "annotation-xml" && tag == Svg) null
       else if (isHtmlIP(t)) null
       else t.ns
     }
 
     /** Foreign-content start tag: breakout back to HTML, or insert the
       * (case-adjusted) foreign element. Fostering never applies here. */
-    private def foreignStartTag(ns: String, name: String,
+    private def foreignStartTag(ns: String, name: String, tag: Int,
         attrs: List[(String, String)], selfClosing: Boolean): Unit = {
-      if (ForeignContent.isBreakout(name, attrs)) {
+      if (ForeignContent.isBreakout(tag, attrs)) {
         error(s"HTML <$name> breaks out of foreign content")
         while (top.ns != "html" &&
           !ForeignContent.isMathTextIP(top.ns, top.name) && !isHtmlIP(top)) popTop()
-        startTagInBody(name, attrs, selfClosing) // reprocess per HTML rules
+        startTagInBody(name, tag, attrs, selfClosing) // reprocess per HTML rules
       } else {
         val adjName = if (ns == "svg") ForeignContent.adjustTagName(name) else name
         val id = arena.createElement(adjName, ForeignContent.adjustAttrs(ns, attrs), ns)
         insertNode(id, foster = false)
-        if (!selfClosing) stack += Open(id, adjName, ns)
+        if (!selfClosing)
+          push(id, adjName, if (adjName eq name) tag else Atoms.idOf(adjName), ns)
       }
     }
 
@@ -985,40 +977,37 @@ object HtmlParser {
       true // no match above the scaffold: ignored
     }
 
-    private def startTagInBody(name: String, attrs: List[(String, String)],
+    private def startTagInBody(name: String, tag: Int, attrs: List[(String, String)],
         selfClosing: Boolean): Unit = {
-      val fns = foreignNsFor(name)
-      if (fns != null) { foreignStartTag(fns, name, attrs, selfClosing); return }
+      val fns = foreignNsFor(tag)
+      if (fns != null) { foreignStartTag(fns, name, tag, attrs, selfClosing); return }
+      val bits = Atoms.bits(tag)
       // entering foreign content from HTML: <svg>/<math> adjust their own
       // attributes too (viewBox on the svg root itself)
-      val attrsAdj =
-        if (name == "svg" || name == "math") ForeignContent.adjustAttrs(name, attrs)
-        else attrs
+      val inForeign = tag == Svg || tag == MathTag
+      val attrsAdj = if (inForeign) ForeignContent.adjustAttrs(name, attrs) else attrs
       // HTML5 "in select": only option/optgroup/hr/script/template content is
       // legal; a nested <select> acts as </select>; input/keygen/textarea
       // close the select and reprocess; anything else is ignored
-      if (inSelect) name match {
-        case "option" | "optgroup" | "hr" | "script" | "template" => ()
-        case "select" =>
+      if (inSelect) tag match {
+        case OptionTag | Optgroup | Hr | Script | Template => ()
+        case Select =>
           error("nested <select>")
-          popThrough("select")
+          popThrough(Select)
           return
-        case "input" | "keygen" | "textarea" =>
+        case Input | Keygen | Textarea =>
           error(s"<$name> closes open <select>")
-          popThrough("select")
+          popThrough(Select)
         case _ =>
           error(s"ignored <$name> in select")
           return
       }
       // table-structure tags outside any table/template are IGNORED per the
       // HTML5 "in body" rules (html5ever drops a bare <tr> in a div)
-      if (TableStructure(name)) {
-        nearestTableHost() match {
-          case "table" | "template" => ()
-          case _ => error(s"ignored <$name> outside table"); return
-        }
+      if ((bits & TableStructure) != 0 && !inTableHost) {
+        error(s"ignored <$name> outside table"); return
       }
-      closeImplied(name)
+      closeImplied(tag)
       // spec: a nested <a> runs the adoption agency for the open one — but
       // only if an <a> entry exists BETWEEN the end of the AFE list and the
       // last marker (an <a> inside a table cell does not see one outside it)
@@ -1027,25 +1016,25 @@ object HtmlParser {
         while (i >= 0) {
           val e = afe(i)
           if (e == null) return -1
-          if (e.name == "a") return i
+          if (e.tag == A) return i
           i -= 1
         }
         -1
       }
-      if (name == "a" && lastAAfterMarker != -1) {
+      if (tag == A && lastAAfterMarker != -1) {
         error("nested <a>")
-        adoptionAgency("a")
+        adoptionAgency(name, A)
         val ai = lastAAfterMarker
         if (ai != -1) {
           val stale = afe(ai)
           afe.remove(ai)
-          val si = stack.indexWhere(_.id == stale.id)
-          if (si != -1) stack.remove(si)
+          val si = stackIndexOf(stale.id)
+          if (si != -1) removeAt(si)
         }
       }
-      tableFixups(name)
-      val inTableCtx = TableContext(top.name)
-      val hiddenInput = name == "input" &&
+      tableFixups(tag)
+      val inTableCtx = top.is(TableContext)
+      val hiddenInput = tag == Input &&
         attrs.exists { case (k, v) => k == "type" && v.equalsIgnoreCase("hidden") }
       // table-structure tokens never reconstruct formatting (the in-table/
       // in-row/in-cell modes insert structure directly); neither does
@@ -1057,30 +1046,36 @@ object HtmlParser {
       // <a><div>text, not a > div)
       // exception inside the block family: <xmp> closes the p but DOES
       // reconstruct before entering raw text (spec in-body xmp steps)
-      if (!TableStructure(name) && !inSelect &&
-          (!ClosesP(name) || name == "xmp") &&
-          name != "li" && name != "dd" && name != "dt" &&
-          (!inTableCtx || (!TableLegal(name) && !hiddenInput))) reconstructAfe()
-      val fosterNow = TableContext(top.name) && !TableLegal(name) && !hiddenInput
+      if ((bits & TableStructure) == 0 && !inSelect &&
+          ((bits & ClosesP) == 0 || tag == Xmp) &&
+          tag != Li && tag != Dd && tag != Dt &&
+          (!inTableCtx || ((bits & TableLegal) == 0 && !hiddenInput))) reconstructAfe()
+      val fosterNow = top.is(TableContext) && (bits & TableLegal) == 0 && !hiddenInput
       if (fosterNow) error(s"fostered <$name> out of table")
       // the element itself counts: a self-closing <svg/>/<math/> pops
       // immediately per the in-body foreign-element rules
-      val inForeign = name == "svg" || name == "math"
       val id = arena.createElement(name, attrsAdj, if (inForeign) name else "html")
       insertNode(id, fosterNow)
-      if (name == "template") {
+      if (tag == Template) {
         val frag = arena.create(new MutNode(NodeKind.Fragment))
         arena(id).templateContents = frag
-        stack += Open(frag, "template")
+        push(frag, name, Template)
         afe += null // marker
-      } else if (FormattingTags(name)) {
-        stack += Open(id, name)
-        pushFormatting(id, name, attrs)
-      } else if (!VoidElements(name) && !(selfClosing && inForeign)) {
-        stack += Open(id, name, if (inForeign) name else "html")
-        if (MarkerTags(name)) afe += null
+      } else if ((bits & Formatting) != 0) {
+        push(id, name, tag)
+        pushFormatting(id, name, tag, attrs)
+      } else if ((bits & Void) == 0 && !(selfClosing && inForeign)) {
+        push(id, name, tag, if (inForeign) name else "html")
+        if ((bits & Marker) != 0) afe += null
       }
     }
+
+    /** Merge `attrs` into arena node `id`, keeping attributes it already has. */
+    private def mergeAttrs(id: Int, attrs: List[(String, String)]): Unit =
+      attrs.foreach { case (k, v) =>
+        val nd = arena(id)
+        if (!nd.attrs.contains(k)) nd.attrs(k) = v
+      }
 
     private def handle(tok: Tok): Unit = tok match {
       case TDoctype(name, pub, sys) =>
@@ -1114,10 +1109,10 @@ object HtmlParser {
         val allWs = s.forall(Character.isWhitespace)
         if (fragment || bodyStarted) {
           if (!allWs) {
-            if (TableContext(top.name)) error("fostered text out of table")
+            if (top.is(TableContext)) error("fostered text out of table")
             // in-select inserts chars plainly; foreign content (outside
             // integration points) neither reconstructs nor fosters
-            if (!inSelect && foreignNsFor("#text") == null) reconstructAfe()
+            if (!inSelect && foreignNsFor(Unknown) == null) reconstructAfe()
             insertText(s, foster = true)
           } else insertText(s, foster = false)
         } else if (underHead) insertText(s, foster = false)
@@ -1134,124 +1129,117 @@ object HtmlParser {
           insertText(s, foster = true)
         }
 
-      case TStart(name, attrs, selfClosing) =>
-        name match {
-          case "html" if fragment =>
-            attrs.foreach { case (k, v) =>
-              val h = arena(1)
-              if (!h.attrs.contains(k)) h.attrs(k) = v
-            }
-          case "head" | "body" if fragment => () // body-context fragment: flow through
-          case "html" if !fragment =>
-            if (htmlId == -1) {
-              htmlId = arena.createElement("html", attrs)
+      case TStart(name, tag, attrs, selfClosing) =>
+        tag match {
+          case Html =>
+            if (fragment) mergeAttrs(1, attrs)
+            else if (htmlId == -1) {
+              htmlId = arena.createElement(name, attrs)
               appendChild(0, htmlId)
-              stack += Open(htmlId, "html")
-            } else attrs.foreach { case (k, v) =>
-              val h = arena(htmlId)
-              if (!h.attrs.contains(k)) h.attrs(k) = v
-            }
-          case "head" if !fragment =>
+              push(htmlId, name, Html)
+            } else mergeAttrs(htmlId, attrs)
+          case Head | Body if fragment => () // body-context fragment: flow through
+          case Head =>
             // a stray <head> after the head exists is a parse error, ignored
             // (it must NOT re-route body content into the emitted head)
             if (headId == -1) {
               ensureHtml()
-              headId = arena.createElement("head", attrs)
+              headId = arena.createElement(name, attrs)
               appendChild(htmlId, headId)
-              stack += Open(headId, "head")
+              push(headId, name, Head)
             } else error("stray <head>")
-          case "body" if !fragment =>
+          case Body =>
             if (bodyId == -1) {
               ensureHtml(); ensureHead(); headClosed = true
-              while (top.name != "html" && top.name != "#root") popTop()
-              bodyId = arena.createElement("body", attrs)
+              while (top.tag != Html && top.tag != Root) popTop()
+              bodyId = arena.createElement(name, attrs)
               appendChild(htmlId, bodyId)
-              stack += Open(bodyId, "body")
+              push(bodyId, name, Body)
               bodyStarted = true
             } else {
               // duplicate <body>: parse error; merge attributes, leave the
               // open-element stack untouched (html5ever)
               error("duplicate <body>")
-              attrs.foreach { case (k, v) =>
-                val b = arena(bodyId)
-                if (!b.attrs.contains(k)) b.attrs(k) = v
-              }
+              mergeAttrs(bodyId, attrs)
               bodyStarted = true
             }
           case _ =>
-            if (!fragment && !bodyStarted && HeadContent(name)) {
+            val bits = Atoms.bits(tag)
+            if (!fragment && !bodyStarted && (bits & HeadContent) != 0) {
               ensureHead()
               val id = arena.createElement(name, attrs)
               appendChild(headId, id)
-              if (name == "template") {
+              if (tag == Template) {
                 val frag = arena.create(new MutNode(NodeKind.Fragment))
                 arena(id).templateContents = frag
-                stack += Open(frag, "template")
+                push(frag, name, Template)
                 afe += null
-              } else if (!VoidElements(name)) {
-                stack += Open(id, name)
+              } else if ((bits & Void) == 0) {
+                push(id, name, tag)
               }
             } else {
               if (!fragment) ensureBody()
-              startTagInBody(name, attrs, selfClosing)
+              startTagInBody(name, tag, attrs, selfClosing)
             }
         }
 
-      case TEnd(name) if top.ns != "html" && foreignEndTag(name) => ()
+      case TEnd(name, _) if top.ns != "html" && foreignEndTag(name) => ()
 
-      case TEnd(name) =>
+      case TEnd(name, tag) =>
         // in-select: only option/optgroup/select/template end tags apply;
         // everything else (stray </i>, </li>, …) is ignored
-        if (inSelect && name != "option" && name != "optgroup" &&
-            name != "select" && name != "template") {
+        if (inSelect && tag != OptionTag && tag != Optgroup &&
+            tag != Select && tag != Template) {
           error(s"ignored </$name> in select")
-        } else name match {
-          case "html" => () // after-html: ignore (doc); fragment scaffold never pops
-          case "body" =>
+        } else tag match {
+          case Html => () // after-html: ignore (doc); fragment scaffold never pops
+          case Body =>
             if (!fragment && bodyId != -1) {
-              while (top.id != bodyId && top.name != "#root") popTop()
+              while (top.id != bodyId && top.tag != Root) popTop()
             }
           // body stays open so trailing content still lands in it
-          case "head" =>
+          case Head =>
             headClosed = true
-            if (top.name == "head") popTop()
-          case "p" =>
-            if (inButtonScope("p")) { generateImplied(except = "p"); popThrough("p") }
+            if (top.tag == Head) popTop()
+          case P =>
+            if (inButtonScope(P)) { generateImplied(except = P); popThrough(P) }
             else if (bodyStarted || fragment) {
               // spec: </p> with no open p inserts an empty <p>
-              val id = arena.createElement("p")
-              insertNode(id, foster = TableContext(top.name))
+              val id = arena.createElement(name)
+              insertNode(id, foster = top.is(TableContext))
             }
-          case "template" =>
-            if (stack.exists(_.name == "template")) popThrough("template")
-          case "table" =>
-            if (inTableScope("table")) popThrough("table") else error("stray </table>")
-          case "tr" | "td" | "th" | "tbody" | "thead" | "tfoot" | "caption" =>
-            if (inTableScope(name)) { generateImplied(); popThrough(name) }
+          case Template =>
+            if (openCount(Template) > 0) popThrough(Template)
+          case Table =>
+            if (inTableScope(Table)) popThrough(Table) else error("stray </table>")
+          case Tr | Td | Th | Tbody | Thead | Tfoot | Caption =>
+            if (inTableScope(tag)) { generateImplied(); popThrough(tag) }
             else error(s"stray </$name>")
-          case "li" =>
-            if (inListScope("li")) { generateImplied(except = "li"); popThrough("li") }
+          case Li =>
+            if (inListScope(Li)) { generateImplied(except = Li); popThrough(Li) }
             else error("stray </li>")
-          case "dd" | "dt" =>
-            if (inScope(name)) { generateImplied(except = name); popThrough(name) }
+          case Dd | Dt =>
+            if (inScope(tag)) { generateImplied(except = tag); popThrough(tag) }
             else error(s"stray </$name>")
-          case n if BlockEnd(n) =>
-            if (inScope(n)) { generateImplied(); popThrough(n) }
-            else error(s"stray </$n>")
-          case n if Headings(n) =>
-            if (Headings.exists(h => inScope(h))) {
-              generateImplied()
-              while (stack.length > floor && !Headings(top.name)) popTop()
-              if (Headings(top.name)) popTop()
-            } else error(s"stray </$n>")
-          case n if FormattingTags(n) => adoptionAgency(n)
-          case n => anyOtherEndTag(n)
+          case _ =>
+            val bits = Atoms.bits(tag)
+            if ((bits & BlockEnd) != 0) {
+              if (inScope(tag)) { generateImplied(); popThrough(tag) }
+              else error(s"stray </$name>")
+            } else if ((bits & Heading) != 0) {
+              if (Headings.exists(h => inScope(h))) {
+                generateImplied()
+                while (stack.length > floor && !top.is(Heading)) popTop()
+                if (top.is(Heading)) popTop()
+              } else error(s"stray </$name>")
+            } else if ((bits & Formatting) != 0) adoptionAgency(name, tag)
+            else anyOtherEndTag(name, tag)
         }
     }
 
     def run(): Arena = {
       arena.create(new MutNode(if (fragment) NodeKind.Fragment else NodeKind.Document))
-      stack += Open(0, "#root")
+      push(0, "#root", Root)
       if (fragment) {
         // html5ever fragment layout (reference merge skips exactly these 3
         // scaffold nodes: root, stray body, html — ops.rs:443-452): content
@@ -1260,7 +1248,7 @@ object HtmlParser {
         val htmlEl = arena.createElement("html") // id 1
         appendChild(0, htmlEl)
         arena.createElement("body") // id 2, detached
-        stack += Open(htmlEl, "#fragment-html")
+        push(htmlEl, "#fragment-html", FragmentHtml)
         quirks = "no-quirks"
       }
       tokenizeStreaming(html, () => stack.nonEmpty && top.ns != "html")(handle)

@@ -47,7 +47,7 @@ object Serializer {
                 sb.append(' ').append(k).append("=\"").append(Entities.escapeAttr(v)).append('"')
               }
               sb.append('>')
-              if (!(acc.ns(id) == "html" && HtmlParser.VoidElements(name))) {
+              if (!(acc.ns(id) == "html" && Atoms.is(name, Atoms.Void))) {
                 stack = Close(name) :: stack
                 var kids = childOps(acc, id)
                 val tc = templateContents(id)
@@ -61,7 +61,7 @@ object Serializer {
                 // serializer) — HTML-namespace raw-text elements only
                 val p = acc.parent(id)
                 val rawParent = p != -1 && acc.isElement(p) && acc.ns(p) == "html" &&
-                  (HtmlParser.RawTextElements(acc.name(p)) || acc.name(p) == "plaintext")
+                  (Atoms.is(acc.name(p), Atoms.RawText) || acc.name(p) == "plaintext")
                 sb.append(if (rawParent) t else Entities.escapeText(t))
               }
             case "comment" =>

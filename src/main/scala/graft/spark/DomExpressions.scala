@@ -29,6 +29,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * are checked in `checkInputDataTypes`, so a bad one fails analysis before
  * any task runs.
  */
+/** Marker of the expressions that read or build a document's `nodes`
+  * array: deterministic, and costly enough per evaluation that
+  * [[PushDomBelowGenerate]] evaluates one once per document, below a
+  * `Generate`, when it reads only the generator's input row. */
+trait DomExpression extends Expression
+
 object DomExprUtil {
   def compile(e: Expression): List[SelectorAst.Complex] =
     SelectorAst.parse(e.eval(InternalRow.empty).toString)
@@ -56,7 +62,7 @@ object DomExprUtil {
 
 /** `parse_html(html)` / `parse_fragment(html)` → ARRAY<STRUCT<node>> (S1/S2). */
 case class ParseHtml(child: Expression, fragment: Boolean)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = NodeSchema.nodesArrayType
   override def nullSafeEval(html: Any): Any = {
     NodeSchema.arenaToArrayData(HtmlParser.parse(html.toString, fragment))
@@ -67,7 +73,7 @@ case class ParseHtml(child: Expression, fragment: Boolean)
 
 /** `css_select(nodes, 'css')` → ARRAY<INT> of matches under the root (Q1). */
 case class CssSelect(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(right)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(right)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -83,7 +89,7 @@ case class CssSelect(left: Expression, right: Expression)
 
 /** `css_select_first(nodes, 'css')` → INT index of first match or -1 (Q2). */
 case class CssSelectFirst(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(right)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(right)
   override def dataType: DataType = IntegerType
@@ -99,7 +105,7 @@ case class CssSelectFirst(left: Expression, right: Expression)
 /** `css_select_under(nodes, ids, 'css')` → chained sub-select (Q3);
   * roots themselves never match. */
 case class CssSelectUnder(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(third)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -115,7 +121,7 @@ case class CssSelectUnder(first: Expression, second: Expression, third: Expressi
 
 /** `css_filter(nodes, ids, 'css')` → ids whose node matches (Q4, is-semantics). */
 case class CssFilter(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(third)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -131,7 +137,7 @@ case class CssFilter(first: Expression, second: Expression, third: Expression)
 
 /** `css_is(nodes, ids, 'css')` → BOOLEAN: any selected node matches (Q8). */
 case class CssIs(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(third)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = BooleanType
@@ -149,7 +155,7 @@ case class CssIs(first: Expression, second: Expression, third: Expression)
   * walk (F1, reference `dom_tree/traversal.rs:90-138`) — the reference's own
   * benches show it ~5× faster than full CSS select for tag-only paths. */
 case class DomFind(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   @transient private lazy val path: Seq[String] =
     right.eval(InternalRow.empty).toString.split(",").map(_.trim).toSeq
   override def checkInputDataTypes(): TypeCheckResult =
@@ -169,7 +175,7 @@ case class DomFind(left: Expression, right: Expression)
   * quirks_mode STRING> — the parse surface of SURVEY §1.4 / reference
   * `Document { errors, quirks_mode }` (`document.rs:22-32`). */
 case class ParseHtmlMeta(child: Expression, fragment: Boolean)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StructType(Seq(
     StructField("nodes", NodeSchema.nodesArrayType, nullable = false),
     StructField("errors", ArrayType(StringType, containsNull = false), nullable = false),
@@ -190,7 +196,7 @@ case class ParseHtmlMeta(child: Expression, fragment: Boolean)
   * subtrees deep-copied (id-remapped) into/over every target match — the
   * cross-tree copy surface (M11/M12/C1/C2, reference `selection.rs:445-486`). */
 case class DomCopySelection(children: Seq[Expression])
-    extends Expression with CodegenFallback {
+    extends Expression with CodegenFallback with DomExpression {
   require(children.length == 5,
     "dom_copy_selection(target_nodes, target_css, source_nodes, source_css, mode)")
   @transient private lazy val targetPlan = DomExprUtil.compile(children(1))
@@ -234,7 +240,7 @@ case class DomCopySelection(children: Seq[Expression])
   * `UTF8String.concat` — the old StringBuilder path decoded every text node
   * UTF8→String and re-encoded the result. */
 case class DomText(left: Expression, right: Expression, immediate: Boolean = false)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -257,7 +263,7 @@ case class DomText(left: Expression, right: Expression, immediate: Boolean = fal
   * X6 — lets a whole selection be extracted in one projection and exploded
   * WITHOUT duplicating the nodes array per output row). */
 case class DomTextEach(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -277,7 +283,7 @@ case class DomTextEach(left: Expression, right: Expression)
 
 /** `dom_attr_each(nodes, ids, 'key')` → ARRAY<STRING>: attr per id (batched X1). */
 case class DomAttrEach(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullSafeEval(nodes: Any, ids: Any, key: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -298,7 +304,7 @@ case class DomAttrEach(first: Expression, second: Expression, third: Expression)
 
 /** `dom_attr(nodes, ids, 'key')` → attr of FIRST id, null if absent (X1). */
 case class DomAttr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any, ids: Any, key: Any): Any = {
@@ -317,7 +323,7 @@ case class DomAttr(first: Expression, second: Expression, third: Expression)
   * value: distinguishes `attr=""` from absent, which `dom_attr IS NOT NULL`
   * cannot). False on an empty selection. */
 case class DomHasAttr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = BooleanType
   override def nullSafeEval(nodes: Any, ids: Any, key: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -332,7 +338,8 @@ case class DomHasAttr(first: Expression, second: Expression, third: Expression)
 /** `dom_html_root(nodes)` → id of the root's first element child (T8,
   * ≡ `Doc.htmlRoot`, both [[graft.css.NodeAccess.htmlRoot]]), -1 when the
   * document has none. */
-case class DomHtmlRoot(child: Expression) extends UnaryExpression with CodegenFallback {
+case class DomHtmlRoot(child: Expression)
+    extends UnaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = IntegerType
   override def nullSafeEval(nodes: Any): Any =
     new ArrayDataAccess(nodes.asInstanceOf[ArrayData]).htmlRoot
@@ -342,7 +349,7 @@ case class DomHtmlRoot(child: Expression) extends UnaryExpression with CodegenFa
 
 /** `dom_html(nodes, ids, include_root)` → HTML of first id (S4/X9). */
 case class DomHtml(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any, ids: Any, includeRoot: Any): Any = {
@@ -360,7 +367,7 @@ case class DomHtml(first: Expression, second: Expression, third: Expression)
 
 /** `dom_formatted_text(nodes, ids)` → formatted text of all ids (S6/X8). */
 case class DomFormattedText(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -377,7 +384,7 @@ case class DomFormattedText(left: Expression, right: Expression)
 
 /** `dom_md(nodes, ids)` → markdown of first id (S5). */
 case class DomMd(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
@@ -395,7 +402,7 @@ case class DomMd(left: Expression, right: Expression)
 
 /** `dom_norm_char_count(nodes, ids)` → X11 streaming fold. */
 case class DomNormCharCount(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = LongType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -425,7 +432,8 @@ case class DomNormCharCount(left: Expression, right: Expression)
  * structural columns are recomputed (post-mutation trees lose preorder
  * contiguity — ids stay stable like the reference, `ops.rs:350-383`).
  */
-case class DomMutateOps(children: Seq[Expression]) extends Expression with CodegenFallback {
+case class DomMutateOps(children: Seq[Expression])
+    extends Expression with CodegenFallback with DomExpression {
   require(children.length > 1 && (children.length - 1) % 4 == 0,
     "dom_mutate_ops(nodes, (css, op, arg1, arg2)+)")
   private def opCount = (children.length - 1) / 4
@@ -545,7 +553,8 @@ object DomMutateOps {
  * on (kind, text, media_ref, order) — reference preorder per
  * `src/node/iters.rs:142-200`.
  */
-case class DomSpans(child: Expression) extends UnaryExpression with CodegenFallback {
+case class DomSpans(child: Expression)
+    extends UnaryExpression with CodegenFallback with DomExpression {
   import org.apache.spark.sql.types._
   private val mediaElems = Set("img", "audio", "video", "source", "track", "embed")
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -583,7 +592,7 @@ case class DomSpans(child: Expression) extends UnaryExpression with CodegenFallb
   * `Sel.ancestors` ([[graft.css.NodeAccess.foreachAncestor]]), but every id
   * is kept, the document node included. */
 case class DomAncestors(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with DomExpression {
   private lazy val maxDepth: Int = third.eval(InternalRow.empty).asInstanceOf[Int]
   override def checkInputDataTypes(): TypeCheckResult =
     DomExprUtil.checkLiteral(third, "max_depth")(_ => third.dataType == IntegerType)
@@ -608,7 +617,7 @@ case class DomAncestors(first: Expression, second: Expression, third: Expression
   * in document order — the T1 traversal surface (reference `children()`,
   * `src/node/iters.rs:64-94` ChildNodes pointer walk). */
 case class DomChildren(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -622,7 +631,8 @@ case class DomChildren(left: Expression, right: Expression)
 }
 
 /** `dom_validate(nodes)` → NULL if structurally valid else the violation (C4). */
-case class DomValidate(child: Expression) extends UnaryExpression with CodegenFallback {
+case class DomValidate(child: Expression)
+    extends UnaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any): Any = {
@@ -636,7 +646,8 @@ case class DomValidate(child: Expression) extends UnaryExpression with CodegenFa
 }
 
 /** `dom_base_uri(nodes)` → the cached `html>head>base[href]` walk (F5). */
-case class DomBaseUri(child: Expression) extends UnaryExpression with CodegenFallback {
+case class DomBaseUri(child: Expression)
+    extends UnaryExpression with CodegenFallback with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any): Any = {

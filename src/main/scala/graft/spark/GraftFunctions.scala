@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /**
@@ -14,7 +16,7 @@ import org.apache.spark.sql.functions.{call_function, lit}
  *
  * Idempotent — call `GraftFunctions.register(spark)` at the top of every
  * entry point, or build the session with [[GraftExtensions]], which injects
- * the same [[functions]] table.
+ * the same [[functions]] table and [[optimizerRules]].
  */
 object GraftFunctions {
 
@@ -86,10 +88,17 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
   )
 
+  /** The optimizer rules of the dom_query surface: [[register]] adds them
+    * to a live session, [[GraftExtensions]] injects them at session build. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(PushDomBelowGenerate)
+
   def register(spark: SparkSession): Unit = {
     val reg = classic(spark).sessionState.functionRegistry
     if (reg.functionExists(FunctionIdentifier("css_select"))) return // idempotent
     functions.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
+    val exp = classic(spark).experimental
+    exp.extraOptimizations = exp.extraOptimizations ++
+      optimizerRules.filterNot(exp.extraOptimizations.contains)
   }
 
   // --- typed Column wrappers --------------------------------------------------

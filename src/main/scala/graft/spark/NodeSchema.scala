@@ -108,7 +108,10 @@ object NodeSchema {
     * call; these strings repeat on nearly every node of every document, so
     * interning removes ~half the ingest encoding work. Capped because tag /
     * class names are open-world (crawled markup chooses them): past the cap
-    * we fall back to plain encoding rather than growing without bound. */
+    * we fall back to plain encoding rather than growing without bound.
+    * Parsed tag names and common attribute keys are the parser's canonical
+    * atom strings ([[graft.sources.Atoms]]), so their lookups reuse a
+    * cached `String` hash and usually meet the same key instance. */
   private val utf8Cache = new java.util.concurrent.ConcurrentHashMap[String, UTF8String]()
   private final val UTF8_CACHE_MAX = 4096
   /** Shared bounded intern table (also the [[ArrayDataAccess]] selector-side

@@ -266,4 +266,31 @@ class CrawlSpec extends AnyFunSuite {
     assert(UrlCanon.canonicalize("//cdn.ex.com/lib.js", base) == "https://cdn.ex.com/lib.js")
     assert(UrlCanon.host("https://a.B.com/x") == "a.b.com")
   }
+
+  test("url canonicalization reuses the parsed base without changing any result") {
+    val bases = Seq("https://ex.com/dir/page.html", "http://other.org:8080/a/b/",
+      "https://ex.com/dir/page.html", "not a uri{}", null, "", "https://third.net")
+    val links = Seq("child", "../up?q=1", "/rooted#f", "./x/../y", "HTTPS://EX.com:443/z",
+      "//cdn.ex.com/lib.js", "mailto:a@b", "")
+    // a fresh thread starts with an empty cache: its one call per pair is
+    // the uncached path
+    def uncached(link: String, base: String): String = {
+      var out: String = null
+      val t = new Thread(() => out = UrlCanon.canonicalize(link, base))
+      t.start(); t.join()
+      out
+    }
+    val pairs = for (l <- links; b <- bases) yield (l, b) // bases alternate per link
+    val expected = pairs.map { case (l, b) => uncached(l, b) }
+    assert(pairs.map { case (l, b) => UrlCanon.canonicalize(l, b) } == expected)
+    assert(pairs.reverse.map { case (l, b) => UrlCanon.canonicalize(l, b) } == expected.reverse)
+    assert(UrlCanon.canonicalize("child", "https://ex.com/dir/page.html") ==
+      "https://ex.com/dir/child")
+    assert(UrlCanon.canonicalize("child", "http://other.org:8080/a/b/") ==
+      "http://other.org:8080/a/b/child")
+    assert(UrlCanon.canonicalize("child", "not a uri{}") == null) // invalid base: still null
+    assert(UrlCanon.canonicalize("child", null) == null)
+    assert(UrlCanon.canonicalize("child", "https://ex.com/dir/page.html") ==
+      "https://ex.com/dir/child") // after the invalid base, the cache holds no stale URI
+  }
 }

@@ -76,6 +76,41 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("per-document dom_base_uri is evaluated below the explode, once per page") {
+    import spark.implicits._
+    import graft.spark.{DomBaseUri, GraftFunctions => F}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    F.register(spark)
+    val pages = (0 until 40).map { i =>
+      val links = (0 until (i % 7)).map(k => s"""<a href="p$k?i=$i#f">$k</a>""").mkString
+      val base = if (i % 5 == 0) "" else s"""<base href="https://h${i % 3}.ex/d$i/">"""
+      s"<html><head>$base</head><body><div class=row>$links<a>no href</a></div></body></html>"
+    }.toDF("html")
+    val parsed = pages.select(F.parse_html(col("html")).as("n"))
+    val n = col("n")
+    def links(withBase: org.apache.spark.sql.DataFrame) =
+      withBase.select(col("base"),
+          explode(F.dom_attr_each(n, F.css_select(n, "a[href]"), "href")).as("href"))
+        .select(F.canonicalize_url(col("href"), col("base")).as("url"))
+    // the dom_links shape: base and explode in one select
+    val q = parsed
+      .select(F.dom_base_uri(n).as("base"),
+        explode(F.dom_attr_each(n, F.css_select(n, "a[href]"), "href")).as("href"))
+      .select(F.canonicalize_url(col("href"), col("base")).as("url"))
+    val opt = q.queryExecution.optimizedPlan
+    def hasBaseUri(p: LogicalPlan) = p.expressions.exists(_.exists(_.isInstanceOf[DomBaseUri]))
+    val gen = opt.collectFirst { case g: Generate => g }
+    assert(gen.isDefined, opt.treeString)
+    assert(gen.get.child.exists(hasBaseUri), s"dom_base_uri not below Generate:\n${opt.treeString}")
+    assert(!opt.exists(p => hasBaseUri(p) && p.exists(_.isInstanceOf[Generate])),
+      s"dom_base_uri still evaluated above Generate:\n${opt.treeString}")
+    // same rows as the base computed in a separate select before the explode
+    val reference = links(parsed.select(n, F.dom_base_uri(n).as("base")))
+    val got = q.collect().map(r => String.valueOf(r.getString(0))).sorted.toSeq
+    assert(got.length == (0 until 40).map(_ % 7).sum)
+    assert(got == reference.collect().map(r => String.valueOf(r.getString(0))).sorted.toSeq)
+  }
+
   test("bucketed tables co-locate the seen join: zero exchanges in the join plan") {
     import spark.implicits._
     // the 100 TB lever for the recurring frontier-vs-seen join: both sides
