@@ -7,12 +7,12 @@ import scala.collection.mutable
  * the tree builder's tag categories are written down.
  *
  * Every known name (the HTML, SVG and MathML tag names the builder or the
- * serializer treats specially, the common inert tags and the common
- * attribute names) is an atom: a small int id, one canonical lower-case
- * `String` instance and a bitmask of the categories below. The tokenizer
- * resolves each scanned tag or attribute name to its atom straight from the
- * character range ([[lookupFolded]]), so a known name allocates no substring
- * and the tree builder tests categories by bit and compares tags by id.
+ * serializer treats specially, and the common attribute names) is an atom:
+ * a small int id, one canonical lower-case `String` instance and a bitmask
+ * of the categories below. The tokenizer resolves each scanned tag or
+ * attribute name to its atom straight from the character range
+ * ([[lookupFolded]]), so a known name allocates no substring and the tree
+ * builder tests categories by bit and compares tags by id.
  * Canonical instances flow into the arena, so everything downstream that
  * hashes a node name (the encoder's UTF-8 intern table, the type-position
  * counts) hits a `String` whose hash is already cached.
@@ -127,27 +127,14 @@ private[graft] object Atoms {
   cat(TableClearStop, clearStops: _*)
   cat(BodyClearStop, clearStops ++ Seq("tbody", "tfoot", "thead"): _*)
   cat(RowClearStop, clearStops ++ Seq("tbody", "tfoot", "thead", "tr"): _*)
-  // names without a category: compared by id in the builder, or common
-  // enough in crawled markup that a canonical instance pays for itself
-  cat(0L, "option", "optgroup", "select", "svg", "math", "mi", "mo", "mn", "ms",
-    "mtext", "mglyph", "malignmark", "annotation-xml", "desc", "g", "path",
-    "circle", "rect", "line", "polyline", "polygon", "ellipse", "use", "defs",
-    "symbol", "text", "tspan", "stop", "mask", "pattern", "image", "mrow",
-    "mfrac", "msup", "msub", "msqrt", "semantics", "annotation", "span",
-    "label", "abbr", "cite", "q", "dfn", "kbd", "samp", "time", "mark", "data",
-    "del", "ins", "picture", "video", "audio", "canvas", "output", "progress",
-    "meter", "datalist", "legend", "map", "bdi", "bdo", "slot", "rb", "ruby")
-  // common attribute names (the tokenizer resolves attribute keys too)
+  // names without a category that the builder compares by id
+  cat(0L, "option", "optgroup", "select", "svg", "math", "mglyph", "malignmark")
+  // attribute names (the tokenizer resolves attribute keys too): ten common
+  // ones, and every other name with at least a 1 % share of the attribute
+  // keys on the benchmark pages (perfbench `Gen.pages`, seed 801: valign
+  // 3.6 %, colspan 1.9 %, align 1.8 %)
   cat(0L, "href", "class", "id", "src", "rel", "type", "name", "style", "title",
-    "alt", "content", "charset", "lang", "dir", "width", "height", "value",
-    "action", "method", "target", "border", "align", "valign", "bgcolor",
-    "colspan", "rowspan", "for", "placeholder", "role", "tabindex", "srcset",
-    "sizes", "loading", "async", "defer", "crossorigin", "integrity",
-    "http-equiv", "property", "color", "face", "size", "encoding", "d", "fill",
-    "stroke", "xmlns", "checked", "disabled", "selected", "readonly",
-    "required", "multiple", "hidden", "download", "media", "label", "start",
-    "reversed", "cellpadding", "cellspacing", "summary", "scope", "headers",
-    "datetime", "cite", "aria-label", "aria-hidden", "onclick", "op", "viewbox")
+    "alt", "valign", "colspan", "align")
 
   /** Id → canonical name; id 0 is [[Unknown]]. */
   val names: Array[String] = ("" +: bitsByName.keys.toSeq).toArray

@@ -89,7 +89,13 @@ object GraftFunctions {
   )
 
   /** The optimizer rules of the dom_query surface: [[register]] adds them
-    * to a live session, [[GraftExtensions]] injects them at session build. */
+    * to a live session, [[GraftExtensions]] injects them at session build.
+    * The two land in different optimizer batches: `register` appends to
+    * `experimental.extraOptimizations` ("User Provided Optimizers", run once
+    * after the operator-optimization batch), `injectOptimizerRule` places
+    * them inside the operator-optimization fixed point, next to
+    * `CollapseProject` and `ColumnPruning`. Each rule must give the same plan
+    * in both; PlanSpec checks the rewrite under both session kinds. */
   val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(PushDomBelowGenerate)
 
   def register(spark: SparkSession): Unit = {

@@ -556,19 +556,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(row.getInt(0) == 2)
     assert(row.getString(1) == "no-quirks")
     assert(row.getInt(2) == 0)
-    // the extension injects the optimizer rules too: dom_base_uri runs
-    // below the explode
-    val q = ext.sql("""SELECT canonicalize_url(href, base) FROM (
-        SELECT dom_base_uri(n) AS base,
-          explode(dom_attr_each(n, css_select(n, 'a[href]'), 'href')) AS href
-        FROM (SELECT parse_html(concat('<base href="https://h.ex/d/"><a href="x', id, '">x</a>'))
-          AS n FROM range(1)))""")
-    val gen = q.queryExecution.optimizedPlan.collectFirst {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-    }
-    assert(gen.exists(_.child.expressions.exists(_.exists(_.isInstanceOf[graft.spark.DomBaseUri]))),
-      q.queryExecution.optimizedPlan.treeString)
-    assert(q.head().getString(0) == "https://h.ex/d/x0")
   }
 
   test("dom_has_attr, dom_html_root, dom_ancestors and dom_children: known answers") {

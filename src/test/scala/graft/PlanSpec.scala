@@ -76,39 +76,117 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("per-document dom_base_uri is evaluated below the explode, once per page") {
-    import spark.implicits._
-    import graft.spark.{DomBaseUri, GraftFunctions => F}
-    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
-    F.register(spark)
-    val pages = (0 until 40).map { i =>
+  // --- PushDomBelowGenerate ------------------------------------------------
+
+  /** A second session on the shared context, built with [[graft.spark.GraftExtensions]]
+    * and without `register`: the extension injects the optimizer rule into a
+    * different batch than `register` does. With an active or default session
+    * `getOrCreate` would hand that one back and ignore the extension, so both
+    * are cleared around the build and restored. */
+  private lazy val extSession: SparkSession = {
+    spark.sparkContext // the shared context, with this spec's master and conf
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().withExtensions(new graft.spark.GraftExtensions).getOrCreate()
+    finally {
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  /** 40 parsed pages with 0–6 links each; every fifth has no `<base>`. The
+    * repartition stands for a scan: over a bare local relation the optimizer
+    * would evaluate the DOM projections itself, at plan time. */
+  private def linkPages(s: SparkSession) = {
+    import s.implicits._
+    import graft.spark.{GraftFunctions => F}
+    (0 until 40).map { i =>
       val links = (0 until (i % 7)).map(k => s"""<a href="p$k?i=$i#f">$k</a>""").mkString
       val base = if (i % 5 == 0) "" else s"""<base href="https://h${i % 3}.ex/d$i/">"""
-      s"<html><head>$base</head><body><div class=row>$links<a>no href</a></div></body></html>"
-    }.toDF("html")
-    val parsed = pages.select(F.parse_html(col("html")).as("n"))
+      (i, s"<html><head>$base</head><body><div class=row>$links<a>no href</a></div></body></html>")
+    }.toDF("i", "html").repartition(2).select(col("i"), F.parse_html(col("html")).as("n"))
+  }
+
+  private def sortedStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(r => String.valueOf(r.getString(0))).sorted.toSeq
+
+  private def domExprsIn(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      cls: Class[_]): Boolean = p.expressions.exists(_.exists(cls.isInstance))
+
+  /** The dom_links shape (base and explode in one select) runs `dom_base_uri`
+    * below the `Generate`, and gives the rows of the query written with the
+    * base computed in a separate select before the explode. */
+  private def checkBaseUriBelowGenerate(s: SparkSession): Unit = {
+    import graft.spark.{DomBaseUri, GraftFunctions => F}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val parsed = linkPages(s)
     val n = col("n")
     def links(withBase: org.apache.spark.sql.DataFrame) =
       withBase.select(col("base"),
           explode(F.dom_attr_each(n, F.css_select(n, "a[href]"), "href")).as("href"))
         .select(F.canonicalize_url(col("href"), col("base")).as("url"))
-    // the dom_links shape: base and explode in one select
     val q = parsed
       .select(F.dom_base_uri(n).as("base"),
         explode(F.dom_attr_each(n, F.css_select(n, "a[href]"), "href")).as("href"))
       .select(F.canonicalize_url(col("href"), col("base")).as("url"))
     val opt = q.queryExecution.optimizedPlan
-    def hasBaseUri(p: LogicalPlan) = p.expressions.exists(_.exists(_.isInstanceOf[DomBaseUri]))
     val gen = opt.collectFirst { case g: Generate => g }
     assert(gen.isDefined, opt.treeString)
-    assert(gen.get.child.exists(hasBaseUri), s"dom_base_uri not below Generate:\n${opt.treeString}")
-    assert(!opt.exists(p => hasBaseUri(p) && p.exists(_.isInstanceOf[Generate])),
+    assert(gen.get.child.exists(domExprsIn(_, classOf[DomBaseUri])),
+      s"dom_base_uri not below Generate:\n${opt.treeString}")
+    assert(!opt.exists(p => domExprsIn(p, classOf[DomBaseUri]) && p.exists(_.isInstanceOf[Generate])),
       s"dom_base_uri still evaluated above Generate:\n${opt.treeString}")
-    // same rows as the base computed in a separate select before the explode
     val reference = links(parsed.select(n, F.dom_base_uri(n).as("base")))
-    val got = q.collect().map(r => String.valueOf(r.getString(0))).sorted.toSeq
+    val got = sortedStrings(q)
     assert(got.length == (0 until 40).map(_ % 7).sum)
-    assert(got == reference.collect().map(r => String.valueOf(r.getString(0))).sorted.toSeq)
+    assert(got == sortedStrings(reference))
+  }
+
+  test("per-document dom_base_uri is evaluated below the explode, once per page") {
+    graft.spark.GraftFunctions.register(spark)
+    checkBaseUriBelowGenerate(spark)
+  }
+
+  test("dom_base_uri below the explode in a GraftExtensions session too") {
+    checkBaseUriBelowGenerate(extSession)
+  }
+
+  test("lambda bodies and guarded branches stay above the explode") {
+    import graft.spark.{DomBaseUri, DomHtml, DomText, GraftFunctions => F}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    F.register(spark)
+    val parsed = linkPages(spark)
+    val n = col("n")
+    def hrefs = explode(F.dom_attr_each(n, F.css_select(n, "a[href]"), "href")).as("href")
+    // a lambda body runs per array element, or never: a DOM call on the
+    // lambda variable cannot move below the Generate, where `x` is unbound,
+    // and one that reads only `n` stays in the body too
+    val perLink = transform(F.css_select(n, "a"),
+      x => concat(F.dom_html(n, array(x), true), F.dom_text(n, F.css_select(n, "div"))))
+    // a DOM call in a CASE branch or on the right of AND runs only when the
+    // guard holds, so it stays with its guard
+    val guarded = when(col("i") % 2 === 0, F.dom_base_uri(n))
+    val rightOfAnd = col("i") > 100 && F.dom_base_uri(n).isNotNull
+    val q = parsed.select(hrefs, perLink.as("html"), guarded.as("base"), rightOfAnd.as("flag"))
+    val opt = q.queryExecution.optimizedPlan
+    val gen = opt.collectFirst { case g: Generate => g }.get
+    assert(!gen.child.exists(p => domExprsIn(p, classOf[DomHtml]) || domExprsIn(p, classOf[DomText])),
+      s"lambda body moved below Generate:\n${opt.treeString}")
+    assert(!gen.child.exists(domExprsIn(_, classOf[DomBaseUri])),
+      s"guarded branch moved below Generate:\n${opt.treeString}")
+    // same rows as the per-document values computed before the explode
+    val reference = parsed
+      .select(n, perLink.as("html"), guarded.as("base"), rightOfAnd.as("flag"))
+      .select(hrefs, col("html"), col("base"), col("flag"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getSeq[String](1).mkString("|"),
+        String.valueOf(r.getString(2)), r.getBoolean(3))).sortBy(_.toString).toSeq
+    val got = rows(q)
+    assert(got.length == (0 until 40).map(_ % 7).sum)
+    assert(got.forall(_._2.contains("<a href=")))
+    assert(got == rows(reference))
   }
 
   test("bucketed tables co-locate the seen join: zero exchanges in the join plan") {
