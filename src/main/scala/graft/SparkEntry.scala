@@ -602,10 +602,14 @@ object SparkEntry {
         .orderBy("host")
     }),
 
-    // crawl layer: same result through the bloom-prefilter path (scale path)
+    // crawl layer: same result through the bloom-prefiltered path (scale
+    // path): a 2^22-bit filter over the seen set, probed as a broadcast,
+    // with the maybe-seen slice resolved by the exact anti-join
     "q_crawl_dedup_bloom" -> ((s, dir) => {
       val (frontier, seen) = synthFrontier(s, dir)
-      Frontier.filterUnseen(Frontier.dedupCandidates(frontier), seen, bloomBits = 1 << 22)
+      val bloomBits = 1L << 22
+      val bloom = Frontier.urlBloom(seen, Frontier.bloomExpectedItems(bloomBits), bloomBits)
+      Frontier.filterUnseenCached(Frontier.dedupCandidates(frontier), seen, bloom)
         .groupBy("host").agg(count(lit(1)).as("n_new"))
         .orderBy("host")
     }),

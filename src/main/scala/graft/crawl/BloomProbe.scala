@@ -10,7 +10,7 @@ import org.apache.spark.util.sketch.BloomFilter
  * `bloom_might_contain_bc` — probe a driver-cached [[BloomFilter]] whose
  * bytes ride as a TorrentBroadcast instead of a plan Literal.
  *
- * Why not `might_contain(lit(bytes), …)` (the r4 shape): a Literal is
+ * Why not `might_contain` over `lit(bytes)` (the r4 shape): a Literal is
  * serialized into the TASK BINARY of every stage that evaluates the
  * predicate — at bloomBits=2^24 that is 2 MiB per stage per round, and the
  * driver re-encodes it into every plan copy Catalyst makes. The A/B probe

@@ -60,14 +60,29 @@ object DomExprUtil {
   }
 }
 
-/** `parse_html(html)` / `parse_fragment(html)` → ARRAY<STRUCT<node>> (S1/S2). */
-case class ParseHtml(child: Expression, fragment: Boolean)
+/** `parse_html(html)` / `parse_fragment(html)` → ARRAY<STRUCT<node>> (S1/S2).
+  * With `meta` (`parse_html_meta` / `parse_fragment_meta`) → STRUCT<nodes,
+  * errors ARRAY<STRING>, quirks_mode STRING> — the parse surface of SURVEY
+  * §1.4 / reference `Document { errors, quirks_mode }` (`document.rs:22-32`);
+  * errors and quirks mode are converted only then. */
+case class ParseHtml(child: Expression, fragment: Boolean, meta: Boolean = false)
     extends UnaryExpression with CodegenFallback with DomExpression {
-  override def dataType: DataType = NodeSchema.nodesArrayType
+  override def dataType: DataType =
+    if (!meta) NodeSchema.nodesArrayType
+    else StructType(Seq(
+      StructField("nodes", NodeSchema.nodesArrayType, nullable = false),
+      StructField("errors", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("quirks_mode", StringType, nullable = false)))
   override def nullSafeEval(html: Any): Any = {
-    NodeSchema.arenaToArrayData(HtmlParser.parse(html.toString, fragment))
+    val arena = HtmlParser.parse(html.toString, fragment)
+    val nodes = NodeSchema.arenaToArrayData(arena)
+    if (!meta) nodes
+    else InternalRow(nodes,
+      new GenericArrayData(arena.errors.map(e => UTF8String.fromString(e): Any).toArray),
+      UTF8String.fromString(arena.quirksMode))
   }
-  override def prettyName: String = if (fragment) "parse_fragment" else "parse_html"
+  override def prettyName: String =
+    (if (fragment) "parse_fragment" else "parse_html") + (if (meta) "_meta" else "")
   override protected def withNewChildInternal(c: Expression): ParseHtml = copy(child = c)
 }
 
@@ -169,26 +184,6 @@ case class DomFind(left: Expression, right: Expression)
   override def prettyName: String = "dom_find"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DomFind =
     copy(left = l, right = r)
-}
-
-/** `parse_html_meta(html)` → STRUCT<nodes, errors ARRAY<STRING>,
-  * quirks_mode STRING> — the parse surface of SURVEY §1.4 / reference
-  * `Document { errors, quirks_mode }` (`document.rs:22-32`). */
-case class ParseHtmlMeta(child: Expression, fragment: Boolean)
-    extends UnaryExpression with CodegenFallback with DomExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("nodes", NodeSchema.nodesArrayType, nullable = false),
-    StructField("errors", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("quirks_mode", StringType, nullable = false)))
-  override def nullSafeEval(html: Any): Any = {
-    val arena = HtmlParser.parse(html.toString, fragment)
-    InternalRow(
-      NodeSchema.arenaToArrayData(arena),
-      new GenericArrayData(arena.errors.map(e => UTF8String.fromString(e): Any).toArray),
-      UTF8String.fromString(arena.quirksMode))
-  }
-  override def prettyName: String = if (fragment) "parse_fragment_meta" else "parse_html_meta"
-  override protected def withNewChildInternal(c: Expression): ParseHtmlMeta = copy(child = c)
 }
 
 /** `dom_copy_selection(target_nodes, 'target_css', source_nodes, 'source_css',

@@ -64,8 +64,8 @@ object GraftFunctions {
     fn("simhash_bits")(es => SimhashBits(es.head)),
     fn("norm_fingerprint")(es => NormFingerprint(es.head)),
     fn("text_lang_stats")(es => TextLangStats(es.head)),
-    fn("parse_html_meta")(es => ParseHtmlMeta(es.head, fragment = false)),
-    fn("parse_fragment_meta")(es => ParseHtmlMeta(es.head, fragment = true)),
+    fn("parse_html_meta")(es => ParseHtml(es.head, fragment = false, meta = true)),
+    fn("parse_fragment_meta")(es => ParseHtml(es.head, fragment = true, meta = true)),
     fn("dom_copy_selection")(es => DomCopySelection(es)),
     fn("dom_spans")(es => DomSpans(es.head)),
     fn("dom_validate")(es => DomValidate(es.head)),
@@ -77,15 +77,7 @@ object GraftFunctions {
       IvfBroadcasts.get(
         es(0).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString))),
     fn("canonicalize_url")(es => graft.crawl.CanonicalizeUrl(es(0), es(1))),
-    fn("url_host")(es => graft.crawl.UrlHostExpr(es.head)),
-    // Spark's bloom-filter expressions exist in catalyst (used by runtime
-    // join filters) but are not exposed in the public registry — expose them
-    // for the URL-seen prefilter (north_rule scale path).
-    fn("bloom_filter_agg")(es =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression()),
-    fn("might_contain")(es =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
+    fn("url_host")(es => graft.crawl.UrlHostExpr(es.head))
   )
 
   /** The optimizer rules of the dom_query surface: [[register]] adds them

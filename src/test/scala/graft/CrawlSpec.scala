@@ -42,23 +42,32 @@ class CrawlSpec extends AnyFunSuite {
     us.map(u => (u.url, u.host, u.priority, u.seq)).toDF("url", "host", "priority", "seq")
   }
 
+  /** Every third seed url: a non-empty seen set, so the bloom prefilter
+    * has something to report as maybe-seen. */
+  def preSeen: Seq[String] = seed.filter(_.seq % 3 == 0).map(_.url).distinct
+
+  /** A 2^20-bit bloom over [[preSeen]], in the key space `crawl` builds. */
+  def preSeenBloom = {
+    import spark.implicits._
+    Frontier.urlBloom(preSeen.toDF("url"), Frontier.bloomExpectedItems(1L << 20), 1L << 20)
+  }
+
   test("single round: scheduled order, slots, seen set match oracle (exact + bloom)") {
     // non-empty initial seen so the bloom prefilter path actually runs
-    val preSeen = seed.filter(_.seq % 3 == 0).map(_.url).distinct
-    for (bloomBits <- Seq(0L, 1L << 20)) {
+    import spark.implicits._
+    for (seenBloom <- Seq(None, Some(preSeenBloom))) {
       val seen0 = scala.collection.mutable.Set[String](preSeen: _*)
       val (oracleRes, _) = OracleCrawler.round(seed, seen0, budgetPerHost = 3)
 
-      import spark.implicits._
       val (sched, newSeen, _) = Frontier.round(toDf(seed),
-        preSeen.toDF("url"), budgetPerHost = 3, bloomBits = bloomBits)
+        preSeen.toDF("url"), budgetPerHost = 3, seenBloom = seenBloom)
       val sparkSched = sched
         .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
         .collect()
         .map(r => (r.getAs[String]("url"), r.getAs[Int]("slot")))
 
       assert(sparkSched.map(_._1).toVector == oracleRes.scheduled.map(_.url),
-        s"order mismatch (bloomBits=$bloomBits)")
+        s"order mismatch (bloom=${seenBloom.isDefined})")
       sparkSched.foreach { case (url, slot) =>
         assert(slot == oracleRes.slots(url), s"slot mismatch for $url")
       }
@@ -70,10 +79,10 @@ class CrawlSpec extends AnyFunSuite {
   test("filterUnseen leaves no temp view behind (catalog stays clean)") {
     import spark.implicits._
     val before = spark.catalog.listTables().count()
-    val seen = seed.filter(_.seq % 3 == 0).map(_.url).distinct.toDF("url")
+    val seen = preSeen.toDF("url")
     (1 to 3).foreach { _ =>
-      Frontier.filterUnseen(Frontier.dedupCandidates(toDf(seed)), seen,
-        bloomBits = 1L << 20).count()
+      Frontier.filterUnseenCached(Frontier.dedupCandidates(toDf(seed)), seen,
+        preSeenBloom).count()
     }
     assert(spark.catalog.listTables().count() == before,
       "filterUnseen leaked temp views into the session catalog")
@@ -226,21 +235,50 @@ class CrawlSpec extends AnyFunSuite {
         if (r.allowPrefixes.isEmpty) null else r.allowPrefixes, r.crawlDelayS)
     }.toDF("host", "disallow_prefixes", "allow_prefixes", "crawl_delay_s")
 
-    val seen0 = scala.collection.mutable.Set[String]()
-    val (oracleRes, _) = OracleCrawler.round(seed, seen0, budgetPerHost = 4, robotsMap)
+    // exact path over an empty seen set, bloom path over a non-empty one
+    for ((pre, seenBloom) <- Seq((Nil, None), (preSeen, Some(preSeenBloom)))) {
+      val seen0 = scala.collection.mutable.Set[String](pre: _*)
+      val (oracleRes, _) = OracleCrawler.round(seed, seen0, budgetPerHost = 4, robotsMap)
 
-    val (sched, newSeen, _) = Frontier.round(toDf(seed), toDf(Nil).select("url"),
-      budgetPerHost = 4, robots = Some(robotsDf))
-    val rows = sched.orderBy(col("priority").desc, col("seq").asc, col("url").asc)
-      .collect()
-      .map(r => (r.getAs[String]("url"), r.getAs[Int]("slot"), r.getAs[Long]("ready_s")))
-    assert(rows.map(_._1).toVector == oracleRes.scheduled.map(_.url))
-    rows.foreach { case (url, slot, ready) =>
-      assert(slot == oracleRes.slots(url))
-      assert(ready == oracleRes.readyS(url), s"ready_s mismatch for $url")
+      val (sched, newSeen, _) = Frontier.round(toDf(seed), pre.toDF("url"),
+        budgetPerHost = 4, robots = Some(robotsDf), seenBloom = seenBloom)
+      val rows = sched.orderBy(col("priority").desc, col("seq").asc, col("url").asc)
+        .collect()
+        .map(r => (r.getAs[String]("url"), r.getAs[Int]("slot"), r.getAs[Long]("ready_s")))
+      val what = s"bloom=${seenBloom.isDefined}"
+      assert(rows.map(_._1).toVector == oracleRes.scheduled.map(_.url), what)
+      rows.foreach { case (url, slot, ready) =>
+        assert(slot == oracleRes.slots(url), s"slot mismatch for $url ($what)")
+        assert(ready == oracleRes.readyS(url), s"ready_s mismatch for $url ($what)")
+      }
+      // disallowed urls are in seen even though never scheduled
+      val sparkSeen = newSeen.collect().map(_.getString(0))
+      assert(sparkSeen.toSet == seen0.toSet, what)
+      assert(sparkSeen.length == sparkSeen.distinct.length, s"duplicate seen urls ($what)")
     }
-    // disallowed urls are in seen even though never scheduled
-    assert(newSeen.collect().map(_.getString(0)).toSet == seen0.toSet)
+  }
+
+  test("robots cache with a missing or mistyped column fails before any job runs") {
+    import spark.implicits._
+    val frontier = toDf(seed)
+    val seen = preSeen.toDF("url")
+    val noAllow = Seq(("host-0.example", Seq("/p/1"), 1))
+      .toDF("host", "disallow_prefixes", "crawl_delay_s")
+    val legacy = Seq(("host-0.example", "/p/1", 1))
+      .toDF("host", "disallow_prefix", "crawl_delay_s")
+    val mistyped = Seq(("host-0.example", "/p/1", Seq("/p/1/a"), 1))
+      .toDF("host", "disallow_prefixes", "allow_prefixes", "crawl_delay_s")
+    for ((robots, column) <- Seq(noAllow -> "allow_prefixes",
+        legacy -> "disallow_prefixes", mistyped -> "disallow_prefixes")) {
+      val group = s"robots-check-${java.util.UUID.randomUUID}"
+      spark.sparkContext.setJobGroup(group, "robots schema check")
+      val e = try intercept[IllegalArgumentException] {
+        Frontier.round(frontier, seen, budgetPerHost = 4, robots = Some(robots))
+      } finally spark.sparkContext.clearJobGroup()
+      assert(e.getMessage.contains(s"`$column`"), e.getMessage)
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        s"a job ran before the robots check failed on `$column`")
+    }
   }
 
   test("manifest carries metrics + per-partition lineage") {

@@ -620,38 +620,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.filter(col("href").startsWith("item?id=")).count() == total)
   }
 
-  test("structured streaming: stateful URL-seen dedup across micro-batches") {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamingFrontier
-    import graft.streaming.StreamingFrontier.Discovered
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("stream_links").toString
-    // two files → two micro-batches (maxFilesPerTrigger=1); file 2 repeats
-    // urls from file 1, so dropping them proves state persists across batches
-    val batch1 = (0 until 40).map(i =>
-      Discovered(s"https://h${i % 4}.ex/p/${i % 20}", s"h${i % 4}.ex", i % 3, i.toLong))
-    val batch2 = (0 until 40).map(i =>
-      Discovered(s"https://h${i % 4}.ex/p/${i % 30}", s"h${i % 4}.ex", i % 3, (100 + i).toLong))
-    batch1.toDS().repartition(1).write.parquet(s"$dir/in/f1.parquet")
-    batch2.toDS().repartition(1).write.parquet(s"$dir/in/f2.parquet")
-    val stream = spark.readStream
-      .schema(batch1.toDS().schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in/*")
-      .as[Discovered]
-    val q = StreamingFrontier.firstSeen(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("first_seen")
-      .option("checkpointLocation", s"$dir/ck")
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.sql("SELECT url FROM first_seen").collect().map(_.getString(0))
-    // exactly-once: every distinct url appears exactly once
-    val distinctUrls = (batch1 ++ batch2).map(_.url).distinct
-    assert(got.length == got.distinct.length, "duplicate emissions")
-    assert(got.toSet == distinctUrls.toSet)
-  }
-
   test("structured streaming: events stream through windowed aggregation") {
     import org.apache.spark.sql.streaming.Trigger
     val schema = spark.read.parquet(s"$sf/events.parquet").schema

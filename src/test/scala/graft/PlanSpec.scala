@@ -63,6 +63,32 @@ class PlanSpec extends AnyFunSuite {
     assert(bigSideShuffles <= 2, s"url shuffled >2 times (big side + seen side):\n$p")
   }
 
+  test("robots round: newSeen splits the one robots verdict, no anti-join against unseen") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // repartitioned so the optimizer cannot fold the local inputs away
+    val frontier = (0 until 1000)
+      .map(i => (s"https://h${i % 7}.ex/p/${i % 300}", s"h${i % 7}.ex", i % 5, i.toLong))
+      .toDF("url", "host", "priority", "seq").repartition(2)
+    val seen = (0 until 100 by 3).map(i => s"https://h${i % 7}.ex/p/$i").toDF("url")
+      .repartition(2)
+    val robots = (0 until 7).map(h => (s"h$h.ex", Seq("/p/1"), Seq("/p/10"), 1 + h % 3))
+      .toDF("host", "disallow_prefixes", "allow_prefixes", "crawl_delay_s")
+    val (_, newSeen, _) = Frontier.round(frontier, seen, budgetPerHost = 3,
+      robots = Some(robots))
+    val antiJoins = newSeen.queryExecution.optimizedPlan.collect {
+      case j: Join if j.joinType == LeftAnti => j
+    }
+    // the seen anti-join is still there; none has the robots-gated set (a
+    // subtree reading the robots rules) on its right side
+    assert(antiJoins.nonEmpty, newSeen.queryExecution.optimizedPlan.toString)
+    val gatedRight = antiJoins.filter(_.right.exists(_.output.exists(a =>
+      a.name == "disallow_prefixes" || a.name == "allow_prefixes")))
+    assert(gatedRight.isEmpty,
+      s"newSeen anti-joins against the robots-filtered unseen set:\n${gatedRight.mkString("\n")}")
+  }
+
   test("flagship q_links plan: per-document narrow stage, single final sort") {
     // parse+select+extract is one narrow projection chain above the one
     // exchange, the range repartition of the base rows that the final
