@@ -602,14 +602,13 @@ object SparkEntry {
         .orderBy("host")
     }),
 
-    // crawl layer: same result through the bloom-prefiltered path (scale
-    // path): a 2^22-bit filter over the seen set, probed as a broadcast,
-    // with the maybe-seen slice resolved by the exact anti-join
+    // crawl layer: the former bloom-prefiltered URL-seen path. The round
+    // has no bloom prefilter any more, so this runs the exact path and
+    // returns the same rows as q_crawl_dedup; the name stays as one of the
+    // 67 oracle gates
     "q_crawl_dedup_bloom" -> ((s, dir) => {
       val (frontier, seen) = synthFrontier(s, dir)
-      val bloomBits = 1L << 22
-      val bloom = Frontier.urlBloom(seen, Frontier.bloomExpectedItems(bloomBits), bloomBits)
-      Frontier.filterUnseenCached(Frontier.dedupCandidates(frontier), seen, bloom)
+      Frontier.filterUnseen(Frontier.dedupCandidates(frontier), seen)
         .groupBy("host").agg(count(lit(1)).as("n_new"))
         .orderBy("host")
     }),

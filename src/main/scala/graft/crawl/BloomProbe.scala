@@ -10,6 +10,13 @@ import org.apache.spark.util.sketch.BloomFilter
  * `bloom_might_contain_bc` — probe a driver-cached [[BloomFilter]] whose
  * bytes ride as a TorrentBroadcast instead of a plan Literal.
  *
+ * Nothing in the crawl round probes a bloom (see [[Frontier]]): this
+ * expression, `GraftFunctions.bloom_probe_bc` and [[BloomBroadcasts]] stay
+ * only for the benchmark under `perfbench/`, which measures a URL-seen
+ * filter's maybe-seen slice and false-positive rate with them; they go at
+ * the next change to the benchmark. The design notes below are kept for
+ * any later membership filter.
+ *
  * Why not `might_contain` over `lit(bytes)` (the r4 shape): a Literal is
  * serialized into the TASK BINARY of every stage that evaluates the
  * predicate — at bloomBits=2^24 that is 2 MiB per stage per round, and the
@@ -84,5 +91,5 @@ class BroadcastSlots[T](what: String) {
   }
 }
 
-/** The URL-seen bloom filters behind `bloom_might_contain_bc`. */
+/** The bloom filters behind `bloom_might_contain_bc` (benchmark only). */
 object BloomBroadcasts extends BroadcastSlots[BloomFilter]("bloom")

@@ -9,15 +9,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 /**
  * The distributed crawl frontier (BASELINE.json north_rule): URL-seen dedup,
  * per-host politeness gate, priority scheduling — Spark built-ins
- * (groupBy/window/anti-join) plus one broadcast bloom probe, shuffles and
- * skew handled explicitly. This layer is NEW construction (the reference is a single-doc
+ * (groupBy/window/anti-join), shuffles and skew handled explicitly. This
+ * layer is NEW construction (the reference is a single-doc
  * library, SURVEY.md §2.9); semantics are fixed by [[OracleCrawler]], the
  * single-threaded reference-faithful model both engines must match.
  *
  * Round semantics (deterministic):
  *  1. candidate dedup: group by url, keep (max priority, min seq)
- *  2. URL-seen: drop urls already in the seen set
- *     (bloom prefilter at scale → exact anti-join on the maybe-seen slice)
+ *  2. URL-seen: drop urls already in the seen set (exact anti-join on url)
  *  3. politeness: at most `budgetPerHost` urls per host per round, picked by
  *     (priority DESC, seq ASC, url ASC)
  *  4. scheduled set ordered globally by (priority DESC, seq ASC, url ASC),
@@ -26,18 +25,21 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  *     next round
  *
  * Scale design (10^10-URL frontier, SURVEY.md §7.2.8):
- *  - the frontier/seen tables are hash-partitioned by url — dedup and the
- *    seen anti-join co-partition on the join key, one shuffle each, no
- *    broadcast of big sides
+ *  - one url exchange per input: the frontier is hash-partitioned by url
+ *    once, and both the dedup aggregate and the seen anti-join run on that
+ *    partitioning; the seen side is shuffled once by url, no broadcast of
+ *    big sides. That seen shuffle moves the whole history every round, in
+ *    proportion to its size, until the seen table is stored bucketed by url
+ *    (then the anti-join needs no exchange at all — PlanSpec's bucketed
+ *    test)
  *  - politeness is the skew point (a hot host = one window partition), so
  *    top-B per host runs TWO-PHASE: local top-B per (host, salt-of-url,
  *    16 buckets) then global top-B per host — the per-host partition the
  *    final window sees is ≤ 16·B rows no matter how hot the host
- *  - the bloom prefilter (a driver-cached filter over `xxhash64(url)`,
- *    grown incrementally by [[crawl]] and probed as a broadcast by
- *    [[filterUnseenCached]]) keeps the per-round anti-join input to the
- *    small maybe-seen slice instead of shuffling the whole 10^10-row seen
- *    table
+ *  - no bloom prefilter: a filter probed on the candidate side never
+ *    prunes the seen side (every seen url is in it), so it saved no
+ *    shuffle and cost a second frontier scan and a second exchange of the
+ *    maybe-seen slice
  *  - AQE handles residual skew/coalescing (enabled in session conf)
  */
 object Frontier {
@@ -45,19 +47,23 @@ object Frontier {
   val SALT_BUCKETS = 16
 
   /** Candidate dedup (step 1). Input: url, host, priority, seq.
-    * Groups on `(url, host)` — host is a pure function of the url, so the
-    * groups are identical to url-alone, but keeping host OUT of the
-    * aggregate list matters physically: a `max(host)` STRING aggregation
-    * buffer forces SortAggregate (a per-partition sort of the whole
-    * frontier); with only fixed-width buffers (max int, min long) the
-    * dedup runs as HashAggregate with map-side partial combine.
+    * Repartitions the frontier by url, then groups on `(url, host)` — host
+    * is a pure function of the url, so the groups are identical to
+    * url-alone, but keeping host OUT of the aggregate list matters
+    * physically: a `max(host)` STRING aggregation buffer forces
+    * SortAggregate (a per-partition sort of the whole frontier); with only
+    * fixed-width buffers (max int, min long) the dedup runs as
+    * HashAggregate.
     *
-    * Trade-off, measured (r4 ADVICE): the output is HashPartitioned on
-    * (url, host), so the url-only seen anti-join downstream re-shuffles
-    * where the old url-grouped SortAggregate's exchange was reused. The A/B
-    * round-wall probe (BASELINE.md r5) puts the (url,host) HashAggregate at
-    * parity-or-better vs url-only overall — the SortAggregate it removed
-    * cost more than the lost reuse — so the HashAggregate shape stays.
+    * The url exchange sits BELOW the aggregate: url partitioning satisfies
+    * the aggregate's `(url, host)` clustering, and the output stays
+    * hash-partitioned by url, so [[filterUnseen]]'s anti-join reuses it and
+    * shuffles only the seen side. This regains the exchange reuse that the
+    * `(url, host)`-partitioned HashAggregate gave up (r4 ADVICE: there the
+    * anti-join re-shuffled the deduped candidates by url). The price is the
+    * map-side partial combine before the shuffle, which is gone; on
+    * perfbench's `crawl_round` input it only cut the shuffled rows from
+    * 150 000 to 141 616.
     *
     * INVARIANT the grouping relies on: `host` must be byte-identical for
     * every occurrence of a url. Both producers guarantee it by
@@ -66,82 +72,29 @@ object Frontier {
     * url — and CrawlSpec's dedup oracle equality would fail on any url
     * splitting across two host spellings. */
   def dedupCandidates(frontier: DataFrame): DataFrame =
-    frontier.groupBy("url", "host")
+    frontier.repartition(col("url")).groupBy("url", "host")
       .agg(max("priority").as("priority"), min("seq").as("seq"))
 
-  /** URL-seen filter (step 2), exact: anti-join on `url` against `seen`.
-    * The bloom-prefiltered form of the same decision is
-    * [[filterUnseenCached]]; [[round]] picks it when it is handed a filter. */
+  /** URL-seen filter (step 2), exact: anti-join on `url` against `seen`. */
   def filterUnseen(candidates: DataFrame, seen: DataFrame): DataFrame =
     candidates.join(seen.select("url"), Seq("url"), "left_anti")
 
   def bloomExpectedItems(bloomBits: Long): Long = math.max(1000000L, bloomBits / 16)
 
-  /**
-   * URL-seen filter with a CACHED driver-side bloom filter (multi-round crawl
-   * path): the filter is built incrementally — each round merges a small
-   * filter over just that round's newly-seen urls — so per-round cost stays
-   * flat as the seen table grows (a filter rebuilt over the full seen set
-   * would re-scan 10^10 rows every round). Definite negatives skip the
-   * join; only the maybe-seen slice is anti-joined exactly, so false
-   * positives are resolved and the rows equal [[filterUnseen]]'s.
-   *
-   * The probe is a native codegen expression over `xxhash64(url)` LONGS
-   * (the key space [[urlBloom]] builds — VERDICT r3 ask #4 kept the hottest
-   * filter out of a per-row Scala UDF), with the filter riding as a
-   * BROADCAST, not a plan Literal ([[BloomMightContainBc]]): the r4 Literal
-   * shape serialized the 2 MiB sketch into every stage's task binary every
-   * round and DOUBLED the steady-state crawl-round wall (~6 s → ~12.4 s on
-   * the A/B probe, BASELINE.md r5); at 10^10-URL scale the filter is GBs
-   * and only broadcast transport survives at all.
-   */
+  /** Same rows as [[filterUnseen]], which it runs; `bloom` is not read.
+    * Kept only because the benchmark under `perfbench/` compiles against
+    * it; it goes at the next change to the benchmark, with [[round]]'s
+    * `seenBloom`. */
+  @deprecated("use filterUnseen; the bloom is not read", "0.1.0")
   def filterUnseenCached(candidates: DataFrame, seen: DataFrame,
-      bloom: BloomFilter): DataFrame = {
-    val spark = candidates.sparkSession
-    graft.spark.GraftFunctions.register(spark)
-    val slot = s"url-seen-${spark.sparkContext.applicationId}"
-    val withFlag = candidates.withColumn("maybe_seen",
-      graft.spark.GraftFunctions.bloom_probe_bc(spark, slot, bloom,
-        xxhash64(col("url"))))
-    val definiteNew = withFlag.filter(!col("maybe_seen")).drop("maybe_seen")
-    val maybeSeen = withFlag.filter(col("maybe_seen")).drop("maybe_seen")
-      .join(seen.select("url"), Seq("url"), "left_anti")
-    definiteNew.unionByName(maybeSeen)
-  }
+      bloom: BloomFilter): DataFrame =
+    filterUnseen(candidates, seen)
 
-  /** Build a [[BloomFilter]] over `xxhash64(url)` longs — the key space
-    * [[filterUnseenCached]]'s native probe expects. */
+  /** A [[BloomFilter]] over `xxhash64(url)` longs. The crawl round reads no
+    * bloom; the benchmark builds this one to measure the filter's maybe-seen
+    * slice and false-positive rate (through `bloom_probe_bc`). */
   def urlBloom(urls: DataFrame, expectedItems: Long, bloomBits: Long): BloomFilter =
     urls.select(xxhash64(col("url")).as("h")).stat.bloomFilter("h", expectedItems, bloomBits)
-
-  /** bloom.bin header: magic + key-space version. A filter persisted by a
-    * build with a DIFFERENT key space (pre-r4 snapshots were keyed on raw
-    * url strings) probed via `xxhash64(url)` returns noise — and a bloom
-    * FALSE NEGATIVE skips the exact anti-join entirely, silently
-    * rescheduling already-seen URLs (r4 ADVICE). The tag turns that silent
-    * divergence into a rebuild: on mismatch (or a legacy headerless file)
-    * the sidecar is discarded and the filter is rebuilt from the seen table
-    * via [[urlBloom]] — the existing resume fallback. */
-  private val BloomHeader: Array[Byte] =
-    "GRAFT-BLOOM keyspace=xxhash64(url) v1\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  /** [[BloomHeader]]-prefixed serialization (what snapshots store). */
-  def taggedBloomBytes(b: BloomFilter): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bos.write(BloomHeader)
-    b.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** Read a snapshot bloom sidecar; None unless the key-space tag matches. */
-  def readTaggedBloom(p: java.nio.file.Path): Option[BloomFilter] = {
-    val in = Files.newInputStream(p)
-    try {
-      val hdr = in.readNBytes(BloomHeader.length)
-      if (java.util.Arrays.equals(hdr, BloomHeader)) Some(BloomFilter.readFrom(in))
-      else None
-    } catch { case _: java.io.IOException => None } finally in.close()
-  }
 
   /**
    * Politeness + priority scheduling (steps 3-4). Returns the scheduled set
@@ -242,16 +195,14 @@ object Frontier {
     * With a robots cache table, disallowed urls are dropped (and still
     * marked seen so they never re-enter) and scheduled urls get a
     * token-bucket `ready_s` offset; a robots table without the
-    * [[RobotsColumns]] schema fails here, before any job runs. */
+    * [[RobotsColumns]] schema fails here, before any job runs.
+    * `seenBloom` is ignored (the URL-seen step is always [[filterUnseen]]);
+    * it stays only because the benchmark under `perfbench/` passes it. */
   def round(frontier: DataFrame, seen: DataFrame, budgetPerHost: Int,
       robots: Option[DataFrame] = None, seenBloom: Option[BloomFilter] = None)
       : (DataFrame, DataFrame, DataFrame) = {
     robots.foreach(checkRobots)
-    val candidates = dedupCandidates(frontier)
-    val unseenAll = seenBloom match {
-      case Some(b) => filterUnseenCached(candidates, seen, b)
-      case None => filterUnseen(candidates, seen)
-    }
+    val unseenAll = filterUnseen(dedupCandidates(frontier), seen)
     // one robots verdict per url, split both ways: allowed urls go on to
     // scheduling, disallowed ones straight into seen'
     val gated = robots.map(applyRobots(unseenAll, _))
@@ -265,9 +216,7 @@ object Frontier {
     // deduped), disallowed = the other side of the robots split of
     // unseenAll (url-distinct, also anti-joined against seen), so the union
     // is already a set. The old .distinct() re-shuffled the ENTIRE seen
-    // table every round — per-round cost ∝ seen size instead of round size,
-    // exactly the scale class the incremental bloom exists to avoid (at
-    // 10^10 seen urls one round would shuffle the whole table to dedup rows
+    // table a second time every round (at 10^10 seen urls, to dedup rows
     // that cannot collide).
     val seenPlusSched = seen.select("url").unionByName(sched.select("url"))
     val newSeen = gated.fold(seenPlusSched)(g =>
@@ -285,18 +234,11 @@ object Frontier {
 
   def writeSnapshot(spark: SparkSession, root: String, roundNo: Int,
       scheduled: DataFrame, seen: DataFrame, frontier: DataFrame,
-      metrics: Map[String, Long], bloomBytes: Option[Array[Byte]] = None): Unit = {
+      metrics: Map[String, Long]): Unit = {
     val dir = snapshotDir(root, roundNo)
     scheduled.write.mode(SaveMode.Overwrite).parquet(s"$dir/scheduled")
     seen.write.mode(SaveMode.Overwrite).parquet(s"$dir/seen")
     frontier.write.mode(SaveMode.Overwrite).parquet(s"$dir/frontier")
-    bloomBytes.foreach { bytes =>
-      Files.createDirectories(Paths.get(dir))
-      val tmp = Paths.get(s"$dir/bloom.bin.tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, Paths.get(s"$dir/bloom.bin"), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
     // per-partition lineage: rows per output partition of the scheduled set
     val lineage = scheduled.withColumn("pid", spark_partition_id())
       .groupBy("pid").count().collect()
@@ -333,7 +275,9 @@ object Frontier {
    * scheduled batch to newly discovered frontier rows (url, host, priority,
    * seq) — in production this is fetch + parse + link extraction; tests and
    * benches pass a deterministic expansion. Resumes from the latest complete
-   * snapshot under `root` if present.
+   * snapshot under `root` if present. `bloomBits` is ignored: the round keeps
+   * no URL-seen bloom, and a `bloom.bin` left in an older snapshot is not
+   * read. It stays in the signature because `graft.Bench` passes it.
    */
   def crawl(spark: SparkSession, root: String, seed: DataFrame, rounds: Int,
       budgetPerHost: Int, bloomBits: Long = 0L,
@@ -344,21 +288,6 @@ object Frontier {
       case Some(r) => readSnapshot(spark, root, r)
       case None => (Seq.empty[String].toDF("url"), seed)
     }
-    // cached URL-seen bloom: loaded from the snapshot on resume, else built
-    // once (from the resumed seen table, or empty on a fresh crawl), then
-    // grown INCREMENTALLY — per-round bloom cost ∝ round size, not seen size
-    val estItems = bloomExpectedItems(bloomBits)
-    var bloom: Option[BloomFilter] =
-      if (bloomBits <= 0) None
-      else start.flatMap { r =>
-        // key-space-tagged sidecar: mismatch/legacy → None → rebuild below
-        val p = Paths.get(s"${snapshotDir(root, r)}/bloom.bin")
-        if (Files.exists(p)) readTaggedBloom(p) else None
-      }.orElse(Some(start match {
-        case Some(_) => urlBloom(seen, estItems, bloomBits)
-        case None => BloomFilter.create(estItems, bloomBits)
-      }))
-    def bloomBytes: Option[Array[Byte]] = bloom.map(taggedBloomBytes)
     val metricsOut = scala.collection.mutable.ListBuffer[Map[String, Long]]()
     var r = start.map(_ + 1).getOrElse(0)
     val endRound = rounds
@@ -368,13 +297,9 @@ object Frontier {
     while (r < endRound &&
         (if (frontierCount >= 0) frontierCount > 0 else !frontier.isEmpty)) {
       val tRound = System.nanoTime()
-      val (sched, newSeen, defer) = round(frontier, seen, budgetPerHost,
-        seenBloom = bloom)
+      val (sched, newSeen, defer) = round(frontier, seen, budgetPerHost)
       val schedCached = sched.cache()
       val nSched = schedCached.count()
-      // merge only this round's additions into the cached filter (same
-      // (n, m) parameters → same hash count → mergeable)
-      bloom.foreach(_.mergeInPlace(urlBloom(schedCached, estItems, bloomBits)))
       val discovered = discover(schedCached)
       val nextFrontier = discovered match {
         case Some(d) => defer.unionByName(d)
@@ -386,11 +311,10 @@ object Frontier {
         "scheduled" -> nSched,
         "seen_total" -> newSeenCached.count(),
         "frontier_next" -> nextFrontierCached.count(),
-        // per-round wall (compute, not snapshot IO): the flat-cost evidence
-        // for the incremental bloom — cost ∝ round size, not seen size
+        // per-round wall (compute, not snapshot IO)
         "wall_ms" -> (System.nanoTime() - tRound) / 1000000L)
       writeSnapshot(spark, root, r, schedCached, newSeenCached, nextFrontierCached,
-        metrics, bloomBytes)
+        metrics)
       metricsOut += (metrics + ("round" -> r.toLong))
       frontierCount = metrics("frontier_next")
       // reload from the snapshot to truncate lineage (long-loop safety)

@@ -214,7 +214,7 @@ object Similarity {
   /** Corpus → cell assignment as ONE zero-exchange codegen'd projection:
     * the quantizer is COLLECTED (bounded by nCells — a trained production
     * quantizer arrives as exactly this kind of small driver-side data, the
-    * same transport class as the crawl's URL-seen bloom) and rides to
+    * same transport class as `bloom_might_contain_bc`'s filter) and rides to
     * executors as one broadcast probed by the native `ivf_assign_bc`
     * expression. Round 5: this replaces a 16×-explode + window argmax —
     * the per-vector window forced a corpus-sized hash(vec_id) exchange AND

@@ -164,8 +164,9 @@ object GraftFunctions {
   def dom_base_uri(nodes: Column): Column = call_function("dom_base_uri", nodes)
   /** Probe a driver-cached bloom filter via broadcast transport + codegen
     * (see [[graft.crawl.BloomMightContainBc]]). One live broadcast per
-    * `slot`; re-broadcasts on every call since callers mutate the filter
-    * between rounds. */
+    * `slot`; re-broadcasts on every call since callers may mutate the
+    * filter between calls. Only the benchmark calls it; the crawl round
+    * probes no bloom. */
   def bloom_probe_bc(spark: SparkSession, slot: String,
       bloom: org.apache.spark.util.sketch.BloomFilter, hash: Column): Column = {
     register(spark)

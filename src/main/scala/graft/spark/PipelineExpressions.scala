@@ -595,7 +595,7 @@ object IvfQuantizer {
 }
 
 /** The [[IvfQuantizer]] broadcasts behind `ivf_assign_bc` — same transport
-  * as the URL-seen bloom ([[graft.crawl.BroadcastSlots]]). */
+  * as `bloom_might_contain_bc`'s filter ([[graft.crawl.BroadcastSlots]]). */
 object IvfBroadcasts extends graft.crawl.BroadcastSlots[IvfQuantizer]("IVF quantizer")
 
 /** `ivf_assign_bc(key, embedding)` → argmax-cosine cell id over a

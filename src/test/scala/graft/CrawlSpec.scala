@@ -42,18 +42,19 @@ class CrawlSpec extends AnyFunSuite {
     us.map(u => (u.url, u.host, u.priority, u.seq)).toDF("url", "host", "priority", "seq")
   }
 
-  /** Every third seed url: a non-empty seen set, so the bloom prefilter
-    * has something to report as maybe-seen. */
+  /** Every third seed url: a non-empty seen set, so the URL-seen anti-join
+    * has something to drop. */
   def preSeen: Seq[String] = seed.filter(_.seq % 3 == 0).map(_.url).distinct
 
-  /** A 2^20-bit bloom over [[preSeen]], in the key space `crawl` builds. */
+  /** A 2^20-bit bloom over [[preSeen]]: `round` takes one as `seenBloom`
+    * and must give the same rows as without it. */
   def preSeenBloom = {
     import spark.implicits._
     Frontier.urlBloom(preSeen.toDF("url"), Frontier.bloomExpectedItems(1L << 20), 1L << 20)
   }
 
   test("single round: scheduled order, slots, seen set match oracle (exact + bloom)") {
-    // non-empty initial seen so the bloom prefilter path actually runs
+    // non-empty initial seen; a passed seenBloom must not change the rows
     import spark.implicits._
     for (seenBloom <- Seq(None, Some(preSeenBloom))) {
       val seen0 = scala.collection.mutable.Set[String](preSeen: _*)
@@ -81,11 +82,55 @@ class CrawlSpec extends AnyFunSuite {
     val before = spark.catalog.listTables().count()
     val seen = preSeen.toDF("url")
     (1 to 3).foreach { _ =>
-      Frontier.filterUnseenCached(Frontier.dedupCandidates(toDf(seed)), seen,
-        preSeenBloom).count()
+      Frontier.filterUnseen(Frontier.dedupCandidates(toDf(seed)), seen).count()
     }
     assert(spark.catalog.listTables().count() == before,
       "filterUnseen leaked temp views into the session catalog")
+  }
+
+  test("dedup with every url in every input partition matches oracle, AQE on and off") {
+    // dedupCandidates shuffles raw rows (no map-side combine): four input
+    // partitions each hold one copy of every url, and for four urls in five
+    // the max priority and the min seq sit in different copies
+    val copies = 4
+    val urls = seed.map(u => (u.url, u.host)).distinct
+    val rows = (0 until copies).flatMap { k =>
+      urls.zipWithIndex.map { case ((url, host), i) =>
+        Url(url, host, priority = (i + k) % 5, seq = (i * copies + (k + 1) % copies).toLong)
+      }
+    }
+    val frontier = {
+      import spark.implicits._
+      spark.sparkContext.parallelize(rows.map(u => (u.url, u.host, u.priority, u.seq)), copies)
+        .toDF("url", "host", "priority", "seq")
+    }
+    assert(frontier.rdd.glom().collect().forall(_.map(_.getString(0)).toSet.size == urls.size),
+      "every input partition must hold every url")
+    val seen0 = preSeen
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      for (adaptive <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+        val seen = scala.collection.mutable.Set[String](seen0: _*)
+        val (oracleRes, oracleDeferred) = OracleCrawler.round(rows, seen, budgetPerHost = 3)
+        val (sched, newSeen, deferred) = {
+          import spark.implicits._
+          Frontier.round(frontier, seen0.toDF("url"), budgetPerHost = 3)
+        }
+        val got = sched.orderBy(col("priority").desc, col("seq").asc, col("url").asc)
+          .collect().map(r => (Url(r.getAs[String]("url"), r.getAs[String]("host"),
+            r.getAs[Int]("priority"), r.getAs[Long]("seq")), r.getAs[Int]("slot"))).toVector
+        assert(got.map(_._1) == oracleRes.scheduled, s"scheduled rows (adaptive=$adaptive)")
+        got.foreach { case (u, slot) =>
+          assert(slot == oracleRes.slots(u.url), s"slot mismatch for ${u.url} (adaptive=$adaptive)")
+        }
+        val gotDeferred = deferred.collect().map(r => Url(r.getAs[String]("url"),
+          r.getAs[String]("host"), r.getAs[Int]("priority"), r.getAs[Long]("seq"))).toSet
+        assert(gotDeferred == oracleDeferred.toSet, s"deferred rows (adaptive=$adaptive)")
+        assert(newSeen.collect().map(_.getString(0)).toSet == seen.toSet,
+          s"seen set (adaptive=$adaptive)")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("multi-round crawl with discovery: per-round schedule + final seen match oracle") {
@@ -115,7 +160,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(lastSeen == oracleSeen)
   }
 
-  test("cached incremental bloom across rounds + resume: equality holds, bloom persisted") {
+  test("crawl with bloomBits set, across rounds + resume: equality holds, no bloom sidecar") {
     val (oracleRounds, oracleSeen) =
       OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
 
@@ -127,11 +172,11 @@ class CrawlSpec extends AnyFunSuite {
         col("host"),
         pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
         (col("seq") + 10000).cast("long").as("seq")))
-    // 2 rounds, then "crash", then resume to 4 — the resumed process loads
-    // the persisted filter instead of rebuilding from the seen table
+    // 2 rounds, then "crash", then resume to 4; bloomBits is ignored, so
+    // no snapshot carries a bloom sidecar
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2,
       bloomBits = 1L << 20, discover = disc)
-    assert(Files.exists(
+    assert(!Files.exists(
       java.nio.file.Paths.get(s"${Frontier.snapshotDir(root, 1)}/bloom.bin")))
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
       bloomBits = 1L << 20, discover = disc)
@@ -148,7 +193,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(lastSeen == oracleSeen)
   }
 
-  test("legacy/untagged bloom sidecar is discarded on resume (key-space guard)") {
+  test("a bloom.bin left in an older snapshot is ignored on resume") {
     import spark.implicits._
     val (oracleRounds, oracleSeen) =
       OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
@@ -161,21 +206,25 @@ class CrawlSpec extends AnyFunSuite {
         (col("seq") + 10000).cast("long").as("seq")))
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2,
       bloomBits = 1L << 20, discover = disc)
-    // simulate a pre-header sidecar: a raw-url-STRING-keyed filter with no
-    // key-space tag — probed via xxhash64(url) longs it returns noise, and
-    // bloom false negatives would silently skip the exact anti-join and
-    // reschedule already-seen urls
+    // an older build's sidecar: a raw-url-STRING-keyed filter, which probed
+    // via xxhash64(url) longs would return noise and, through false
+    // negatives, reschedule already-seen urls
     val p = java.nio.file.Paths.get(s"${Frontier.snapshotDir(root, 1)}/bloom.bin")
     val legacy = spark.read.parquet(s"${Frontier.snapshotDir(root, 1)}/seen")
       .stat.bloomFilter("url", 1000000L, 1L << 20)
     val bos = new java.io.ByteArrayOutputStream()
     legacy.writeTo(bos)
     java.nio.file.Files.write(p, bos.toByteArray)
-    assert(Frontier.readTaggedBloom(p).isEmpty, "untagged sidecar must be rejected")
-    // resume: the rejected sidecar forces a rebuild from the seen table, so
-    // the remaining rounds still reproduce the oracle exactly
+    // resume reads the seen table, not the sidecar, so the remaining rounds
+    // still reproduce the oracle exactly
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
       bloomBits = 1L << 20, discover = disc)
+    oracleRounds.zipWithIndex.foreach { case (or, i) =>
+      val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
+        .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
+        .collect().map(_.getAs[String]("url")).toVector
+      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch")
+    }
     val lastSeen = spark.read
       .parquet(s"${Frontier.snapshotDir(root, oracleRounds.length - 1)}/seen")
       .collect().map(_.getString(0)).toSet
@@ -235,7 +284,7 @@ class CrawlSpec extends AnyFunSuite {
         if (r.allowPrefixes.isEmpty) null else r.allowPrefixes, r.crawlDelayS)
     }.toDF("host", "disallow_prefixes", "allow_prefixes", "crawl_delay_s")
 
-    // exact path over an empty seen set, bloom path over a non-empty one
+    // an empty seen set, then a non-empty one with a (ignored) seenBloom
     for ((pre, seenBloom) <- Seq((Nil, None), (preSeen, Some(preSeenBloom)))) {
       val seen0 = scala.collection.mutable.Set[String](pre: _*)
       val (oracleRes, _) = OracleCrawler.round(seed, seen0, budgetPerHost = 4, robotsMap)

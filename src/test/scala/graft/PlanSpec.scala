@@ -56,11 +56,49 @@ class PlanSpec extends AnyFunSuite {
       .map(i => (s"https://h${i % 7}.ex/p/${i % 300}", s"h${i % 7}.ex", i % 5, i.toLong))
       .toDF("url", "host", "priority", "seq")
     val seen = (0 until 100 by 3).map(i => s"https://h${i % 7}.ex/p/$i").toDF("url")
-    val unseen = Frontier.filterUnseen(Frontier.dedupCandidates(frontier), seen)
-    val p = plan(unseen)
-    // the candidates (big) side must be hash-partitioned by url exactly once
-    val bigSideShuffles = "hashpartitioning\\(url".r.findAllIn(p).length
-    assert(bigSideShuffles <= 2, s"url shuffled >2 times (big side + seen side):\n$p")
+    // with broadcast on, the tiny seen side would be broadcast and hide a
+    // second shuffle of the candidates; at scale neither side broadcasts
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val p = plan(Frontier.filterUnseen(Frontier.dedupCandidates(frontier), seen))
+      // the candidates (big) side is hash-partitioned by url exactly once,
+      // the seen side once
+      val urlShuffles = "hashpartitioning\\(url".r.findAllIn(p).length
+      assert(urlShuffles == 2, s"expected 2 url shuffles (big side + seen side):\n$p")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("crawl round: one url exchange per input, no (url, host) exchange, no bloom probe") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan_round").toString
+    (0 until 1000)
+      .map(i => (s"https://h${i % 7}.ex/p/${i % 300}", s"h${i % 7}.ex", i % 5, i.toLong))
+      .toDF("url", "host", "priority", "seq").write.parquet(s"$dir/frontier")
+    (0 until 100 by 3).map(i => s"https://h${i % 7}.ex/p/$i").toDF("url")
+      .write.parquet(s"$dir/seen")
+    val seen = spark.read.parquet(s"$dir/seen")
+    val bloom = Frontier.urlBloom(seen, 1000, 1L << 16)
+    // the shape at scale: no broadcast join, and AQE off so the executed
+    // plan is the whole static plan
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (sched, _, _) = Frontier.round(spark.read.parquet(s"$dir/frontier"), seen,
+        budgetPerHost = 3, seenBloom = Some(bloom))
+      val p = plan(sched)
+      val urlOnly = "hashpartitioning\\(url#\\d+, \\d+\\)".r.findAllIn(p).length
+      assert(urlOnly == 2, s"expected one url exchange per input (frontier, seen):\n$p")
+      assert("hashpartitioning\\(url#\\d+, host".r.findFirstIn(p).isEmpty,
+        s"(url, host) exchange:\n$p")
+      // the frontier is the only input with a priority column
+      val frontierScans = "FileScan parquet \\[[^\\]]*priority".r.findAllIn(p).length
+      assert(frontierScans == 1, s"frontier scanned $frontierScans times:\n$p")
+      assert(!p.contains("bloom_might_contain_bc"), s"bloom probe in the round:\n$p")
+      assert(sched.count() > 0)
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 
   test("robots round: newSeen splits the one robots verdict, no anti-join against unseen") {
