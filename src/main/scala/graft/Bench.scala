@@ -157,36 +157,28 @@ object Bench {
         (col("l_orderkey") * 64 + col("l_linenumber") * 8 + col("m")).cast("long").as("seq"))
   }
 
-  /** Materialize the frontier + seen inputs as stored tables AND the
-    * URL-seen bloom filter (production shape: a crawl round READS the
-    * frontier/seen tables and the snapshot-persisted incremental bloom —
-    * `Frontier.crawl` builds it once and grows it per round; rebuilding it
-    * from the full seen set every round is not the audited design). Done
-    * once per bench process, outside the timed region. */
+  /** Materialize the frontier + seen inputs as stored tables (production
+    * shape: a crawl round READS the frontier/seen tables of the last
+    * snapshot). Done once per bench process, outside the timed region.
+    * Returns the frontier row count. */
   private def materializeInputs(s: SparkSession, sfDir: String, mult: Int,
-      dir: String): (Long, org.apache.spark.util.sketch.BloomFilter) = {
+      dir: String): Long = {
     val frontier = benchFrontier(s, sfDir, mult)
     frontier.write.mode("overwrite").parquet(s"$dir/frontier")
     frontier.filter(pmod(xxhash64(col("url")), lit(8)) === 0)
       .select("url").distinct()
       .write.mode("overwrite").parquet(s"$dir/seen")
-    val bloomBits = 1L << 24
-    // xxhash64-long key space: required by the native might_contain probe
-    val bloom = Frontier.urlBloom(s.read.parquet(s"$dir/seen"),
-      graft.crawl.Frontier.bloomExpectedItems(bloomBits), bloomBits)
-    (s.read.parquet(s"$dir/frontier").count(), bloom)
+    s.read.parquet(s"$dir/frontier").count()
   }
 
   /** One timed frontier round: read stored frontier + seen → dedup →
-    * bloom-prefiltered seen filter → politeness → priority schedule,
-    * forced through the noop sink. Returns secs. */
-  private def frontierRun(s: SparkSession, dir: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter): Double = {
+    * URL-seen anti-join → politeness → priority schedule, forced through
+    * the noop sink. Returns secs. */
+  private def frontierRun(s: SparkSession, dir: String): Double = {
     val frontier = s.read.parquet(s"$dir/frontier")
     val seen = s.read.parquet(s"$dir/seen")
     val t0 = System.nanoTime()
-    val (sched, _, _) = Frontier.round(frontier, seen, budgetPerHost = 2000,
-      seenBloom = Some(bloom))
+    val (sched, _, _) = Frontier.round(frontier, seen, budgetPerHost = 2000)
     sched.write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
   }
@@ -269,10 +261,10 @@ object Bench {
 
     val benchDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", tmpDir("graft-bench"))
     val prep = session(cpus)
-    val (nUrls, seenBloom) =
+    val nUrls =
       try materializeInputs(prep, sfDir, mult, benchDir) finally prep.stop()
 
-    // --- scaling evidence: the same stored-input round (cached-bloom production shape) at N vs 4N threads ---
+    // --- scaling evidence: the same stored-input round at N vs 4N threads ---
     // N=2 vs 4N=8 for the efficiency criterion: this VM's host oversubscribes
     // vCPUs past ~8 runnable threads (calib series below shows it per-run),
     // so 2→8 is the engine-scaling pair; local[32] still runs for peak.
@@ -312,15 +304,14 @@ object Bench {
       val calib = note(calibMops(cpus))
       val s = session(n, aqe = false) // see session() scaladoc
       try {
-        if (warm) frontierRun(s, benchDir, seenBloom) // JIT warmup (pass 1 only)
+        if (warm) frontierRun(s, benchDir) // JIT warmup (pass 1 only)
         // two runs per session, keep the min: every pass pays a constant
         // per-session first-run cost (fresh SQL/session state, file-index
         // and codegen warm-up) that a throughput metric should amortize —
         // the FrontierScale probe read 9.3 s steady-state at local[8] where
         // single cold runs read 11.6-12; the constant deflates the N-vs-4N
         // ratio because it weighs more at higher parallelism
-        val secs = math.min(frontierRun(s, benchDir, seenBloom),
-          frontierRun(s, benchDir, seenBloom))
+        val secs = math.min(frontierRun(s, benchDir), frontierRun(s, benchDir))
         Pass(secs, calib, bw, note(calibMops(cpus)), noteBw(memBwMBs()))
       } finally {
         s.stop()
@@ -367,8 +358,7 @@ object Bench {
     val eff28 = (thr8 / thr2) / 4.0
     val eff832 = (thr32 / thr8) / 4.0
 
-    // --- multi-round crawl: per-round wall should stay FLAT as seen grows ---
-    // (incremental bloom: per-round cost ∝ round size, not seen size)
+    // --- multi-round crawl: per-round wall as the seen table grows ---
     var crawlError = "null"
     val crawlRoundMs: Seq[Long] = {
       val sC = session(cpus)
@@ -380,7 +370,7 @@ object Bench {
             concat(col("url"), lit("x")).as("url"), col("host"),
             col("priority"), (col("seq") + 1000000000L).as("seq")))
         val metrics = Frontier.crawl(sC, crawlRoot, seedDf, rounds = 4,
-          budgetPerHost = 2000, bloomBits = 1L << 24, discover = disc)
+          budgetPerHost = 2000, discover = disc)
         metrics.map(_.getOrElse("wall_ms", -1L))
       } catch { case e: Throwable => crawlError = causeJson(e); Nil } finally { sC.stop(); System.gc() }
     }
@@ -587,7 +577,7 @@ object Bench {
     println(compactRecord)
     // SECOND line: raw per-pass series + calibration evidence + protocol note
     println(
-      f"""{"diagnostics":true,"passes_local2":${passArr(2)},"passes_local8":${passArr(8)},"passes_local32":${passArr(32)},"calib_mops_local2":${calibArr(2)},"calib_mops_local8":${calibArr(8)},"calib_mops_local32":${calibArr(32)},"membw_local2":${bwArrJ(2)},"membw_local8":${bwArrJ(8)},"membw_local32":${bwArrJ(32)},"quiet_frac":$QuietFrac,"selection_calib_mops":$selCalib%.0f,"selection_membw_mbs":$selBw%.0f,"selection_samples":$selSamples,"headline_calib_mops":$qc,"micro_calib_mops":$microCalib%.0f,"scaling_note":"frontier rounds use the snapshot-persisted URL-seen bloom built OUTSIDE the timed region (the Frontier.crawl production shape) and run with AQE OFF (explicit 64-partition layout; adaptive re-planning is constant serial driver work that costs absolute time at every N - 38.3->32.3 s at N=2, 14.0->9.3 s at N=8 on the stored round - and distorts the N-vs-4N ratio); 3 interleaved 2-run passes per N (min of the 2 in-session runs - steady-state throughput, the constant per-session first-run cost is amortized) + up to $MaxExtraPasses calibration-gated extras (never result-conditioned); per-N time = min over passes whose PRE- and POST-run $cpus-thread CPU calibrations >= $QuietFrac AND sequential-read bandwidths >= $BwQuietFrac of the run's best (pre/post pairs in calib_mops_*/membw_* strings) (quiet_fallback lists Ns where no pass qualified); host vCPU oversubscription caps raw 8-to-32 scaling, so 2-to-8 is the engine-scaling pair; crawl_round_ms = per-round compute wall over 4 discovery rounds (seen grows, incremental bloom keeps cost flat); headline queries: bounded calibration-gated quiet-wait before each query (headline_calib_mops per query), then min of 3 timed runs; selection block runs 4 passes + up to 3 calibration-gated extras"}""")
+      f"""{"diagnostics":true,"passes_local2":${passArr(2)},"passes_local8":${passArr(8)},"passes_local32":${passArr(32)},"calib_mops_local2":${calibArr(2)},"calib_mops_local8":${calibArr(8)},"calib_mops_local32":${calibArr(32)},"membw_local2":${bwArrJ(2)},"membw_local8":${bwArrJ(8)},"membw_local32":${bwArrJ(32)},"quiet_frac":$QuietFrac,"selection_calib_mops":$selCalib%.0f,"selection_membw_mbs":$selBw%.0f,"selection_samples":$selSamples,"headline_calib_mops":$qc,"micro_calib_mops":$microCalib%.0f,"scaling_note":"frontier rounds read the stored frontier and seen tables written OUTSIDE the timed region (the Frontier.crawl production shape) and run with AQE OFF (explicit 64-partition layout; adaptive re-planning is constant serial driver work that costs absolute time at every N - 38.3->32.3 s at N=2, 14.0->9.3 s at N=8 on the stored round - and distorts the N-vs-4N ratio); 3 interleaved 2-run passes per N (min of the 2 in-session runs - steady-state throughput, the constant per-session first-run cost is amortized) + up to $MaxExtraPasses calibration-gated extras (never result-conditioned); per-N time = min over passes whose PRE- and POST-run $cpus-thread CPU calibrations >= $QuietFrac AND sequential-read bandwidths >= $BwQuietFrac of the run's best (pre/post pairs in calib_mops_*/membw_* strings) (quiet_fallback lists Ns where no pass qualified); host vCPU oversubscription caps raw 8-to-32 scaling, so 2-to-8 is the engine-scaling pair; crawl_round_ms = per-round compute wall over 4 discovery rounds (seen grows); headline queries: bounded calibration-gated quiet-wait before each query (headline_calib_mops per query), then min of 3 timed runs; selection block runs 4 passes + up to 3 calibration-gated extras"}""")
     // LAST line = the compact record again, tail-safe (see comment above).
     println(compactRecord)
   }

@@ -275,12 +275,11 @@ object Frontier {
    * scheduled batch to newly discovered frontier rows (url, host, priority,
    * seq) — in production this is fetch + parse + link extraction; tests and
    * benches pass a deterministic expansion. Resumes from the latest complete
-   * snapshot under `root` if present. `bloomBits` is ignored: the round keeps
-   * no URL-seen bloom, and a `bloom.bin` left in an older snapshot is not
-   * read. It stays in the signature because `graft.Bench` passes it.
+   * snapshot under `root` if present; a `bloom.bin` left in an older
+   * snapshot is not read.
    */
   def crawl(spark: SparkSession, root: String, seed: DataFrame, rounds: Int,
-      budgetPerHost: Int, bloomBits: Long = 0L,
+      budgetPerHost: Int,
       discover: DataFrame => Option[DataFrame] = _ => None): Seq[Map[String, Long]] = {
     import spark.implicits._
     val start = latestSnapshot(root)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -222,16 +222,60 @@ object Similarity {
     * with the corpus; an intermediate SQL-HOF fold (kept below as
     * [[assignCellsSql]], the documented/differential shape) was rejected
     * because AQE stage planning re-materializes an exchange-free
-    * interpreted fold ~2-3×. Bit-exact vs the SQL form (PipelineSpec). */
-  private[graft] def assignCells(emb: DataFrame, cent: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
+    * interpreted fold ~2-3×. Bit-exact vs the SQL form (PipelineSpec).
+    * `ivfTopK` and the audits read the same [[cellOf]] column through
+    * [[assignSplit]]. */
+  private[graft] def assignCells(emb: DataFrame, cent: DataFrame): DataFrame =
+    emb.select(col("vec_id"), cellOf(emb, cent).as("cell"))
+
+  /** The `ivf_assign_bc` cell column of [[assignCells]] over `emb`'s
+    * `embedding`, with the collected quantizer riding in its broadcast. */
+  private def cellOf(emb: DataFrame, cent: DataFrame): Column = {
     val rows = cent.orderBy("cell").collect()
     val q = graft.spark.IvfQuantizer.build(
       rows.map(_.getLong(0)),
       rows.map(_.getSeq[Float](1).toArray))
-    emb.select(col("vec_id"),
-      graft.spark.GraftFunctions.ivf_assign_bc(spark, "ivf-quantizer", q,
-        col("embedding")).as("cell"))
+    graft.spark.GraftFunctions.ivf_assign_bc(emb.sparkSession, "ivf-quantizer", q,
+      col("embedding"))
+  }
+
+  /** The deterministic seed quantizer: the first `nCells` corpus vectors. */
+  private def seedCentroids(emb: DataFrame, nCells: Int): DataFrame =
+    emb.filter(col("vec_id") < nCells)
+      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
+
+  /** ONE zero-exchange pass: (vec_id, cell, sub_full) — the cell and the
+    * full-width split signature (the sub bits cost nothing when no cell is
+    * hot — they only ever gate a join key). */
+  private def assignSplit(emb: DataFrame, nCells: Int, maxSubBits: Int): DataFrame = {
+    graft.spark.GraftFunctions.register(emb.sparkSession)
+    emb.select(col("vec_id"), cellOf(emb, seedCentroids(emb, nCells)).as("cell"),
+      graft.spark.GraftFunctions.lsh_bits(col("embedding"),
+        IvfSplitPlaneStart, maxSubBits).as("sub_full"))
+  }
+
+  /** Per-cell split metadata: member count, sub-bit width, hottest masked
+    * sub-cell. */
+  private case class CellStat(cell: Long, size: Long, subBits: Int, maxSub: Long)
+
+  /** ONE aggregation of an [[assignSplit]] frame gives every cell's
+    * [[CellStat]]: (cell, full-width sub) counts are ≤ nCells·2^maxSubBits
+    * rows, and per-cell totals → bit widths → masked sub-cell maxima all
+    * derive from them driver-side (masking the aggregated key ≡
+    * aggregating the masked key, since full-width grouping refines every
+    * masked grouping). Inverted-list sizes are quantizer metadata — the
+    * same driver-side transport class as the trained quantizer itself. */
+  private def cellStats(assigned: DataFrame, cellCap: Int,
+      maxSubBits: Int): Seq[CellStat] = {
+    val counts = assigned.groupBy("cell", "sub_full").agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    counts.groupBy(_._1).map { case (cell, rs) =>
+      val size = rs.map(_._3).sum
+      val bits = subBitsOf(size, cellCap, maxSubBits)
+      val mask = (1L << bits) - 1
+      CellStat(cell, size, bits,
+        rs.groupBy(t => t._2 & mask).values.map(_.map(_._3).sum).max)
+    }.toSeq.sortBy(_.cell)
   }
 
   /** The assignment's documented SQL shape — the mirror of the DuckDB
@@ -265,9 +309,9 @@ object Similarity {
     * 5, BASELINE.md "Measurement history"), the margin bit lifts hot-query
     * recall@5 0.750 → 0.830 (the pre-split slice reads 0.640) and shrinks
     * the hottest list.
-    * [[subBitsOf]] (driver-side) and [[subBitsCase]] (Column form, used by
-    * the audit metric and differential specs) both read these bounds —
-    * one source of truth. */
+    * [[subBitsOf]] (driver-side, [[cellStats]]) and [[subBitsCase]]
+    * (Column form, the shape the PipelineSpec differentials and the DuckDB
+    * mirror use) both read these bounds — one source of truth. */
   private def subBitBound(cellCap: Int, b: Int): Long =
     if (b == 0) cellCap.toLong else cellCap.toLong << (b - 1)
 
@@ -284,31 +328,9 @@ object Similarity {
   def ivfTopK(emb: DataFrame, nQueries: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4, cellCap: Int = IvfCellCap,
       maxSubBits: Int = IvfMaxSubBits): DataFrame = {
-    graft.spark.GraftFunctions.register(emb.sparkSession)
     val spark = emb.sparkSession
-    val cent = emb.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
-    // ONE zero-exchange pass computes the cell AND the full split signature
-    // (the sub bits cost nothing when no cell is hot — they only ever gate
-    // a join key)
-    val centRows = cent.orderBy("cell").collect()
-    val q = graft.spark.IvfQuantizer.build(
-      centRows.map(_.getLong(0)),
-      centRows.map(_.getSeq[Float](1).toArray))
-    // persisted: the counts collect below and the members branch both
-    // consume it — without the cache each runs its own corpus scan with its
-    // own per-row quantizer pass (at 100 TB: re-reading the wide embedding
-    // column twice vs caching 24-byte rows once). Released via the
-    // localCheckpoint-then-unpersist pattern (same discipline as
-    // embeddingNearDupPairs' sig table). A/B at sf0.1 reads equal within
-    // window noise (1.77 vs 1.85 s in one congested window), so the scale
-    // argument decides.
-    val assigned = emb.select(col("vec_id"),
-      graft.spark.GraftFunctions.ivf_assign_bc(spark, "ivf-quantizer", q,
-        col("embedding")).as("cell"),
-      graft.spark.GraftFunctions.lsh_bits(col("embedding"),
-        IvfSplitPlaneStart, maxSubBits).as("sub_full"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cent = seedCentroids(emb, nCells)
+    val assigned = assignSplit(emb, nCells, maxSubBits)
     // hot-cell split (r5, closes the PLANS.md residual): a cell past the
     // cap fans out into 2^b deterministic LSH sub-cells (smallest b with
     // expected sub-cell ≤ cap/2 — the margin bit absorbs within-cluster
@@ -328,24 +350,11 @@ object Similarity {
     // deterministic, mirrored in the oracle, and bounded at 2^maxSubBits
     // × cap candidates per probe: strictly more reachable members than
     // the old slice's flat cap, never unbounded.
-    //
-    // ONE aggregation computes everything: (cell, full-width sub) counts
-    // are ≤ nCells·2^maxSubBits rows, and per-cell totals → bit widths →
-    // masked sub-cell maxima → probe_all flags all derive from them
-    // driver-side (masking the aggregated key ≡ aggregating the masked
-    // key, since full-width grouping refines every masked grouping).
-    // Inverted-list sizes are quantizer metadata — the same driver-side
-    // transport class as the trained quantizer itself.
     val cellMeta = {
       import spark.implicits._
-      val stats = assigned.groupBy("cell", "sub_full").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      stats.groupBy(_._1).map { case (cell, rs) =>
-        val bits = subBitsOf(rs.map(_._3).sum, cellCap, maxSubBits)
-        val mask = (1L << bits) - 1
-        val maxSub = rs.groupBy(t => t._2 & mask).values.map(_.map(_._3).sum).max
-        (cell, bits, maxSub > cellCap)
-      }.toSeq.sortBy(_._1).toDF("cell", "sub_bits", "probe_all")
+      cellStats(assigned, cellCap, maxSubBits)
+        .map(c => (c.cell, c.subBits, c.maxSub > cellCap))
+        .toDF("cell", "sub_bits", "probe_all")
     }
     val members = assigned.join(broadcast(cellMeta.select("cell", "sub_bits")), Seq("cell"))
       .withColumn("sub", col("sub_full")
@@ -384,25 +393,18 @@ object Similarity {
           expr("sequence(0L, shiftleft(1L, sub_bits) - 1L)"))
           .otherwise(slice(array(probeFlips: _*), lit(1), col("sub_bits") + 1))))
       .select(col("query_id"), col("cell"), col("sub"))
-    // materialize the id-pair candidates eagerly so the assigned cache is
-    // released here instead of leaking until session stop
     val candIds = probes.join(capped, Seq("cell", "sub"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .distinct()
-      .localCheckpoint()
-    assigned.unpersist(false)
     rerank(candIds, emb, k)
   }
 
   /** Max IVF cell population (pre-split) — the bench reports this beside
     * [[IvfCellCap]] (binding caps visible, not silent). */
-  def ivfMaxCell(emb: DataFrame, nCells: Int = 16): Long = {
-    val cent = emb.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
-    assignCells(emb, cent)
-      .groupBy("cell").count().agg(max("count")).collect()(0).getLong(0)
-  }
+  def ivfMaxCell(emb: DataFrame, nCells: Int = 16): Long =
+    cellStats(assignSplit(emb, nCells, IvfMaxSubBits), IvfCellCap, IvfMaxSubBits)
+      .map(_.size).max
 
   /** Number of probe_all-flagged cells (hottest sub-cell still over the
     * cap — split-failed, e.g. an identical-vector family): queries probing
@@ -410,44 +412,18 @@ object Similarity {
     * (1+bits)·cap. Reported in the bench JSON so the wider probe set is
     * visible, never silent (house rule for every guard). */
   def ivfFlaggedCells(emb: DataFrame, nCells: Int = 16,
-      cellCap: Int = IvfCellCap, maxSubBits: Int = IvfMaxSubBits): Long = {
-    graft.spark.GraftFunctions.register(emb.sparkSession)
-    val cent = emb.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
-    val assigned = assignCells(emb, cent)
-      .join(emb.select(col("vec_id"),
-        graft.spark.GraftFunctions.lsh_bits(col("embedding"),
-          IvfSplitPlaneStart, maxSubBits).as("sub_full")), Seq("vec_id"))
-    val stats = assigned.groupBy("cell", "sub_full").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    stats.groupBy(_._1).count { case (_, rs) =>
-      val bits = subBitsOf(rs.map(_._3).sum, cellCap, maxSubBits)
-      val mask = (1L << bits) - 1
-      rs.groupBy(t => t._2 & mask).values.map(_.map(_._3).sum).max > cellCap
-    }.toLong
-  }
+      cellCap: Int = IvfCellCap, maxSubBits: Int = IvfMaxSubBits): Long =
+    cellStats(assignSplit(emb, nCells, maxSubBits), cellCap, maxSubBits)
+      .count(_.maxSub > cellCap).toLong
 
   /** Max IVF (cell, sub) population AFTER the hot-cell split — the list
     * size a probe actually rescores, and the guard audit for the residual
     * per-(cell, sub) cap: the guard binds iff this exceeds [[IvfCellCap]]
     * (i.e. a cell blew through all [[IvfMaxSubBits]] split bits). */
   def ivfMaxSubcell(emb: DataFrame, nCells: Int = 16,
-      cellCap: Int = IvfCellCap, maxSubBits: Int = IvfMaxSubBits): Long = {
-    graft.spark.GraftFunctions.register(emb.sparkSession)
-    val cent = emb.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
-    val assigned = assignCells(emb, cent)
-      .join(emb.select(col("vec_id"),
-        graft.spark.GraftFunctions.lsh_bits(col("embedding"),
-          IvfSplitPlaneStart, maxSubBits).as("sub_full")), Seq("vec_id"))
-    val cellBits = assigned.groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .select(col("cell"), subBitsCase(col("cnt"), cellCap, maxSubBits).as("sub_bits"))
-    assigned.join(broadcast(cellBits), Seq("cell"))
-      .withColumn("sub", col("sub_full")
-        .bitwiseAND(expr("shiftleft(1L, sub_bits) - 1L")))
-      .groupBy("cell", "sub").count()
-      .agg(max("count")).collect()(0).getLong(0)
-  }
+      cellCap: Int = IvfCellCap, maxSubBits: Int = IvfMaxSubBits): Long =
+    cellStats(assignSplit(emb, nCells, maxSubBits), cellCap, maxSubBits)
+      .map(_.maxSub).max
 
   /** Embedding near-dup pairs: constructed perturbed copies (id+1000000,
     * first component nudged 0.1%) must pair with their source at cosine ≥
@@ -483,14 +459,10 @@ object Similarity {
     // payloads rejoin on the deduped id pairs. One signature per vector ⇒
     // each pair appears in at most one bucket, so no distinct is needed.
     graft.spark.GraftFunctions.register(emb.sparkSession)
-    // native one-pass 12-bit signature (≡ lshSignatureSql, differential),
-    // persisted: the capped self-join consumes it on BOTH sides and the
-    // plan showed no exchange reuse across them — same in-query signature
-    //-table pattern (and caching caveats) as minhashPairs' shingle table
+    // native one-pass 12-bit signature (≡ lshSignatureSql, differential)
     val sig = corpus.withColumn("bucket",
         graft.spark.GraftFunctions.lsh_bits(col("embedding"), 0, 12))
       .select(col("vec_id"), col("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // deterministic bucket cap (r3 ask #3, oracle-mirrored), r5 shape: a
     // spillable window rank replaces sort_array(collect_list) — the slice
     // semantics are identical (first maxBucket ids ascending), but an
@@ -513,18 +485,10 @@ object Similarity {
     val starIds = ranked.filter(col("rn") > maxBucket)
       .join(rep, Seq("bucket"))
       .select(col("rep_id").as("id_a"), col("vec_id").as("id_b"))
-    // materialize the (tiny) id-pair candidate set eagerly so the sig cache
-    // can be released HERE instead of leaking until session stop (r4 ADVICE:
-    // repeated calls in a long-lived session accumulated cached partitions).
-    // localCheckpoint stores the pairs as an RDD block, which the
-    // ContextCleaner reclaims once the returned plan is unreferenced —
-    // unlike a DataFrame persist, which only session stop would clear.
     val candIds = capped.as("a").join(capped.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
       .unionByName(starIds)
-      .localCheckpoint()
-    sig.unpersist(false)
     val payload = corpus.select(col("vec_id"), col("embedding"))
     candIds
       .join(payload.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))

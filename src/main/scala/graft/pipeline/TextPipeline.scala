@@ -165,7 +165,8 @@ object TextPipeline {
     * projection columns. CRITICAL for performance: inlining the token-hash
     * subtree inside the shingle lambda would re-evaluate it per array
     * element (HOF lambdas don't share subexpressions) — with columns each
-    * stage computes once per row. */
+    * stage computes once per row. A filter pushed below this projection
+    * undoes that (see ngramJaccardPairs); PlanSpec pins it. */
   def withShingles(corpus: DataFrame): DataFrame = {
     graft.spark.GraftFunctions.register(corpus.sparkSession)
     // native one-pass token hashes (≡ the tokensSql/wordHashSql HOF chain,
@@ -186,35 +187,38 @@ object TextPipeline {
     * (no all-pairs); the verify step is per-candidate-pair only. */
   def minhashPairs(corpus: DataFrame, minJ: Double): DataFrame = {
     graft.spark.GraftFunctions.register(corpus.sparkSession)
-    // the shingle table is computed ONCE and persisted for its three
-    // consumers (band generation + the two payload rejoins) — the in-query
-    // analog of the signature table a 100 TB pipeline materializes to
-    // storage. Without it each branch re-runs the expensive per-word hash
-    // folds over the full corpus. CacheManager dedupes identical plans
-    // across calls (re-running the same corpus reuses the entry); distinct
-    // corpora each hold one entry until evicted — a long-lived session
-    // running dedup over MANY corpora should unpersist after consuming the
-    // result, or materialize signatures to a table instead.
     val sh = withShingles(corpus).select(col("doc_id"), col("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val payload = sh
-    val bands = minhashBands(sh)
-    // candidate join + distinct carries id pairs only (two longs, not two
-    // shingle arrays); payloads rejoin narrowly after the dedup. Band keys
-    // capped at a deterministic sorted slice (r3 ask #6, oracle-mirrored).
-    val capped = capBands(bands.select("band", "doc_id"), "band", BandCap)
-    val candIds = capped.as("a").join(capped.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
+    // band keys capped at a deterministic sorted slice (r3 ask #6,
+    // oracle-mirrored)
+    val capped = capBands(minhashBands(sh), "band", BandCap)
+    verifyPairs(bandCandidates(capped, "band"), sh, jaccardAtLeast(minJ))
+  }
+
+  /** Candidate id pairs `(id_a < id_b)` of docs sharing a `key` value in a
+    * (key, doc_id) table, deduped: the self-join and the distinct carry two
+    * longs per row, never a payload. */
+  private def bandCandidates(keyed: DataFrame, key: String): DataFrame =
+    keyed.as("a").join(keyed.as("b"),
+        col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
+
+  /** Shared verify tail of the dedup operators: id-pair candidates → two
+    * narrow rejoins of a (doc_id, value) payload → `keep(value_a, value_b)`
+    * → (id_a, id_b). Payloads join only after the candidate distinct. */
+  private def verifyPairs(candIds: DataFrame, payload: DataFrame,
+      keep: (Column, Column) => Column): DataFrame = {
+    val Array(id, v) = payload.columns
     candIds
-      .join(payload.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), Seq("id_a"))
-      .join(payload.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), Seq("id_b"))
-      .withColumn("jac",
-        expr("size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"))
-      .filter(col("jac") >= minJ)
+      .join(payload.select(col(id).as("id_a"), col(v).as("v_a")), Seq("id_a"))
+      .join(payload.select(col(id).as("id_b"), col(v).as("v_b")), Seq("id_b"))
+      .filter(keep(col("v_a"), col("v_b")))
       .select("id_a", "id_b")
   }
+
+  /** Exact shingle-set Jaccard ≥ minJ. */
+  private def jaccardAtLeast(minJ: Double)(a: Column, b: Column): Column =
+    size(array_intersect(a, b)) / size(array_union(a, b)) >= minJ
 
   /** LSH band table of a (doc_id, shingles) frame: 16-hash signature
     * (native one-pass kernel ≡ minhashSigSql, PipelineSpec differential),
@@ -229,10 +233,9 @@ object TextPipeline {
       .withColumnRenamed("col", "band")
       .select("doc_id", "band")
 
-  /** Incremental MinHash-LSH dedup against a PERSISTED signature table —
-    * the materialized form of `minhashPairs`' in-query persist (PLANS
-    * residual #3) and the dedup analog of the crawl loop's snapshot
-    * resume. Each crawl round calls this with its NEW documents only:
+  /** Incremental MinHash-LSH dedup against a STORED signature table (PLANS
+    * residual #3) — the dedup analog of the crawl loop's snapshot resume.
+    * Each crawl round calls this with its NEW documents only:
     * the expensive per-word hash folds run over the new batch alone, the
     * batch is deduped against the entire crawl history via the stored
     * band table, and the new signatures are appended to `sigDir` for the
@@ -332,14 +335,7 @@ object TextPipeline {
           (col("a.is_new") || col("b.is_new")))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    val allSh = newSh.unionByName(storedSh)
-    candIds
-      .join(allSh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), Seq("id_a"))
-      .join(allSh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), Seq("id_b"))
-      .withColumn("jac",
-        expr("size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"))
-      .filter(col("jac") >= minJ)
-      .select("id_a", "id_b")
+    verifyPairs(candIds, newSh.unionByName(storedSh), jaccardAtLeast(minJ))
   }
 
   /** Exact n-gram Jaccard pairs (the dedup correctness oracle path):
@@ -353,11 +349,14 @@ object TextPipeline {
     * the DuckDB oracle, so the cap is part of the verified semantics. */
   def ngramJaccardPairs(corpus: DataFrame, minJ: Double,
       maxShingleDf: Int = 1000): DataFrame = {
-    // see minhashPairs: one persisted shingle table for all three consumers
     val sh = withShingles(corpus).select(col("doc_id"), col("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val payload = sh
-    val inv = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
+    // explode_outer + null filter, not explode: for a plain explode of a
+    // column Catalyst infers `size(shingles) > 0` and pushes it below the
+    // shingle projection, inlining word_hashes(text) into every element_at
+    // of the shingle lambda (O(tokens²) hashing per document). An empty
+    // shingle array emits one null row here, which the filter drops.
+    val inv = sh.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
+      .filter(col("sh").isNotNull)
     // df per shingle (shingle arrays are distinct per doc, so count = docs);
     // tiny fixed-width rows, one extra shuffle keyed like the index join
     val dfreq = inv.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -375,75 +374,54 @@ object TextPipeline {
       .withColumn("rn", row_number().over(wDoc)).filter(col("rn") === 1)
       .select("doc_id", "sh")
     val invRare = rareRows.select("doc_id", "sh").unionByName(fallback)
-    // inverted-index join on (doc_id, shingle) rows only; the shingle-array
-    // payloads rejoin after the id-pair distinct
-    val candIds = invRare.as("a").join(invRare.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    candIds
-      .join(payload.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), Seq("id_a"))
-      .join(payload.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), Seq("id_b"))
-      .withColumn("jac",
-        expr("size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"))
-      .filter(col("jac") >= minJ)
-      .select("id_a", "id_b")
+    verifyPairs(bandCandidates(invRare, "sh"), sh, jaccardAtLeast(minJ))
   }
 
   /** SimHash near-dup pairs: 60-bit signature, 4 15-bit bands; candidates
     * share a band; verified with hamming distance ≤ maxHam. */
   def simhashPairs(corpus: DataFrame, maxHam: Int): DataFrame = {
     graft.spark.GraftFunctions.register(corpus.sparkSession)
-    // one persisted (doc_id, sim) signature table for band generation + the
-    // two payload rejoins (see minhashPairs)
-    val sig = corpus
-      .withColumn("th", graft.spark.GraftFunctions.word_hashes(col("text")))
-      // native one-pass signature (≡ simhashSql, PipelineSpec differential)
-      .withColumn("sim", graft.spark.GraftFunctions.simhash_bits(col("th")))
-      .select("doc_id", "sim")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = sig.select(col("doc_id"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> concat_ws(':', b, (sim div shiftleft(1L, 15*b)) % 32768))")))
-      .withColumnRenamed("col", "band")
+    val sig = simhashSigs(corpus)
     // band keys capped at a deterministic sorted slice (r3 ask #6); with the
     // r5 60-bit signature each band position has ~32k possible keys, so the
     // cap is back to non-binding guard duty against boilerplate-flooded keys
-    val capped = capBands(bands.select("band", "doc_id"), "band", BandCap)
-    val candIds = capped.as("a").join(capped.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    candIds
-      .join(sig.select(col("doc_id").as("id_a"), col("sim").as("sim_a")), Seq("id_a"))
-      .join(sig.select(col("doc_id").as("id_b"), col("sim").as("sim_b")), Seq("id_b"))
-      .filter(expr(s"bit_count(sim_a ^ sim_b) <= $maxHam"))
-      .select("id_a", "id_b")
+    val capped = capBands(simhashBands(sig), "band", BandCap)
+    verifyPairs(bandCandidates(capped, "band"), sig,
+      (a, b) => bit_count(a.bitwiseXOR(b)) <= maxHam)
   }
+
+  /** (doc_id, sim) signature table: native one-pass 60-bit SimHash over
+    * the token hashes (≡ simhashSql, PipelineSpec differential). */
+  private def simhashSigs(corpus: DataFrame): DataFrame =
+    corpus
+      .withColumn("th", graft.spark.GraftFunctions.word_hashes(col("text")))
+      .withColumn("sim", graft.spark.GraftFunctions.simhash_bits(col("th")))
+      .select("doc_id", "sim")
+
+  /** SimHash band table of a (doc_id, sim) frame: 4 15-bit bands →
+    * (doc_id, band). */
+  private def simhashBands(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"),
+        posexplode(expr(
+          "transform(sequence(0, 3), b -> concat_ws(':', b, (sim div shiftleft(1L, 15*b)) % 32768))")))
+      .withColumnRenamed("col", "band")
+      .select("doc_id", "band")
 
   /** Max minhash band-key population over the dup-augmented corpus — the
     * bench reports this beside [[BandCap]] (binding caps visible, not silent). */
   def minhashMaxBand(corpus: DataFrame): Long = {
     graft.spark.GraftFunctions.register(corpus.sparkSession)
-    withShingles(corpus).select(col("doc_id"), col("shingles"))
-      .withColumn("sig", graft.spark.GraftFunctions.minhash_sig(col("shingles")))
-      .select(posexplode(expr(
-        """transform(sequence(0, 3), b ->
-             concat_ws(':', b, element_at(sig, 4*b+1), element_at(sig, 4*b+2),
-                       element_at(sig, 4*b+3), element_at(sig, 4*b+4)))""")))
-      .groupBy("col").count().agg(max("count")).collect()(0).getLong(0)
+    maxBand(minhashBands(withShingles(corpus).select(col("doc_id"), col("shingles"))))
   }
 
   /** Max simhash band-key population over the dup-augmented corpus. */
   def simhashMaxBand(corpus: DataFrame): Long = {
     graft.spark.GraftFunctions.register(corpus.sparkSession)
-    corpus
-      .withColumn("th", graft.spark.GraftFunctions.word_hashes(col("text")))
-      .withColumn("sim", graft.spark.GraftFunctions.simhash_bits(col("th")))
-      .select(posexplode(expr(
-        "transform(sequence(0, 3), b -> concat_ws(':', b, (sim div shiftleft(1L, 15*b)) % 32768))")))
-      .groupBy("col").count().agg(max("count")).collect()(0).getLong(0)
+    maxBand(simhashBands(simhashSigs(corpus)))
   }
+
+  private def maxBand(bands: DataFrame): Long =
+    bands.groupBy("band").count().agg(max("count")).collect()(0).getLong(0)
 
   /** The documented lang-ID HOF SQL: argmax with lang-code-ascending
     * tie-break — first lang (asc) whose score equals the max, a CASE chain

@@ -160,7 +160,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(lastSeen == oracleSeen)
   }
 
-  test("crawl with bloomBits set, across rounds + resume: equality holds, no bloom sidecar") {
+  test("crawl across rounds + resume: equality holds, no bloom sidecar") {
     val (oracleRounds, oracleSeen) =
       OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
 
@@ -172,20 +172,20 @@ class CrawlSpec extends AnyFunSuite {
         col("host"),
         pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
         (col("seq") + 10000).cast("long").as("seq")))
-    // 2 rounds, then "crash", then resume to 4; bloomBits is ignored, so
-    // no snapshot carries a bloom sidecar
+    // 2 rounds, then "crash", then resume to 4; the round keeps no URL-seen
+    // bloom, so no snapshot carries a bloom sidecar
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2,
-      bloomBits = 1L << 20, discover = disc)
+      discover = disc)
     assert(!Files.exists(
       java.nio.file.Paths.get(s"${Frontier.snapshotDir(root, 1)}/bloom.bin")))
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
-      bloomBits = 1L << 20, discover = disc)
+      discover = disc)
 
     oracleRounds.zipWithIndex.foreach { case (or, i) =>
       val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
         .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
         .collect().map(_.getAs[String]("url")).toVector
-      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch (bloom)")
+      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch (resume)")
     }
     val lastSeen = spark.read
       .parquet(s"${Frontier.snapshotDir(root, oracleRounds.length - 1)}/seen")
@@ -205,7 +205,7 @@ class CrawlSpec extends AnyFunSuite {
         pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
         (col("seq") + 10000).cast("long").as("seq")))
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2,
-      bloomBits = 1L << 20, discover = disc)
+      discover = disc)
     // an older build's sidecar: a raw-url-STRING-keyed filter, which probed
     // via xxhash64(url) longs would return noise and, through false
     // negatives, reschedule already-seen urls
@@ -218,7 +218,7 @@ class CrawlSpec extends AnyFunSuite {
     // resume reads the seen table, not the sidecar, so the remaining rounds
     // still reproduce the oracle exactly
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
-      bloomBits = 1L << 20, discover = disc)
+      discover = disc)
     oracleRounds.zipWithIndex.foreach { case (or, i) =>
       val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
         .orderBy(col("priority").desc, col("seq").asc, col("url").asc)

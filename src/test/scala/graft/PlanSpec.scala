@@ -26,6 +26,31 @@ class PlanSpec extends AnyFunSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The shuffles keyed on a candidate key (band, shingle or the id pair)
+    * whose rows carry an array column. An `Exchange` line prints only its
+    * keys, so this reads the exchange nodes of the physical plan. */
+  private def wideCandidateShuffles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val physical = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    physical.collect { case e: ShuffleExchangeExec => e }.flatMap { e =>
+      val keys = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
+        case _ => Set.empty[String]
+      }
+      val candidateKey = keys("band") || keys("sh") || (keys("id_a") && keys("id_b"))
+      val carriesArray = e.child.output
+        .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+      if (candidateKey && carriesArray)
+        Some(s"${e.simpleString(200)} over ${e.child.output.mkString(", ")}")
+      else None
+    }
+  }
+
   test("predicate pushdown: documents filter reaches the parquet scan") {
     val df = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("lang") === "en").select("doc_id", "n_chars")
@@ -290,20 +315,44 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("minhash candidate shuffle carries id pairs only; shingles persisted once") {
-    import spark.implicits._
-    val corpus = (0 until 200)
-      .map(i => (i.toLong, s"word${i % 37} and some shared text body number ${i % 9} tail"))
-      .toDF("doc_id", "text")
-    val pairs = TextPipeline.minhashPairs(corpus, 0.6)
-    val p = plan(pairs)
-    // the shingle table is a single persisted relation feeding all branches
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
-      s"shingle table not persisted (would recompute per branch):\n$p")
-    // the band-join + distinct shuffles must NOT carry the shingle arrays:
-    // every hashpartitioning on band/doc-id pair keys is over narrow rows
-    val badExchange = "hashpartitioning\\((?:band|id_a)[^\\n]*shingles".r.findFirstIn(p)
-    assert(badExchange.isEmpty, s"candidate shuffle carries shingle payload:\n$p")
+  test("minhash and ngram: id-pair candidate shuffle, no cache, no hashing in a lambda") {
+    // a parquet corpus: over a local relation the optimizer folds the whole
+    // shingle projection into the relation and the plan would show nothing
+    val corpus = TextPipeline.withSyntheticDups(TextPipeline.documents(spark, sf))
+    for ((name, pairs) <- Seq(
+        "minhash" -> TextPipeline.minhashPairs(corpus, 0.6),
+        "ngram" -> TextPipeline.ngramJaccardPairs(corpus, 0.6))) {
+      val p = plan(pairs)
+      // each operator is one lazy plan: nothing is read back from a cache
+      assert(!p.contains("InMemoryTableScan") && !p.contains("TableCacheQueryStage"),
+        s"$name plan reads a cached relation:\n$p")
+      // the token hashes are computed once per document, in their own
+      // projection; a filter pushed below the shingle projection would
+      // inline word_hashes(text) into every element_at of the shingle lambda
+      val optimized = pairs.queryExecution.optimizedPlan.toString
+      val inlined = "lambdafunction\\(.*word_hashes".r.findFirstIn(optimized)
+      assert(inlined.isEmpty, s"$name plan hashes tokens inside a lambda:\n$optimized")
+      // the band-join + distinct shuffles must NOT carry the shingle arrays:
+      // every shuffle on band/shingle/id-pair keys is over narrow rows
+      val wide = wideCandidateShuffles(pairs)
+      assert(wide.isEmpty, s"$name candidate shuffle carries a payload:\n${wide.mkString("\n")}")
+    }
+  }
+
+  test("building the dedup and near-dup frames runs no job beyond the input read") {
+    val docs = TextPipeline.withSyntheticDups(TextPipeline.documents(spark, sf))
+    val emb = graft.pipeline.Similarity.embeddings(spark, sf)
+    for ((name, build) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "minhash" -> (() => TextPipeline.minhashPairs(docs, 0.6)),
+        "simhash" -> (() => TextPipeline.simhashPairs(docs, 6)),
+        "ngram" -> (() => TextPipeline.ngramJaccardPairs(docs, 0.6)),
+        "neardup" -> (() => graft.pipeline.Similarity.embeddingNearDupPairs(emb, 0.9)))) {
+      val group = s"build-$name-${java.util.UUID.randomUUID}"
+      spark.sparkContext.setJobGroup(group, s"build $name")
+      try build() finally spark.sparkContext.clearJobGroup()
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        s"building the $name frame ran a job")
+    }
   }
 
   test("incremental dedup semi-prunes stored history and window-caps band keys") {
@@ -316,9 +365,10 @@ class PlanSpec extends AnyFunSuite {
       .select(col("doc_id"), col("shingles"))
     val storedSh = TextPipeline.withShingles(mk(0 until 200))
       .select(col("doc_id"), col("shingles"))
-    val p = plan(TextPipeline.incrementalPairs(
+    val incremental = TextPipeline.incrementalPairs(
       newSh, TextPipeline.minhashBands(newSh),
-      storedSh, TextPipeline.minhashBands(storedSh), 0.6))
+      storedSh, TextPipeline.minhashBands(storedSh), 0.6)
+    val p = plan(incremental)
     // stored bands must be pruned to the batch's band keys BEFORE the
     // candidate join — at 100 TB the history side is the whole corpus
     assert(p.contains("LeftSemi"), s"missing stored-history semi-prune:\n$p")
@@ -327,8 +377,8 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("collect_list"), s"whole-key aggregation buffer:\n$p")
     // candidate shuffles stay narrow: no exchange keyed on band/ids may
     // carry the shingle arrays
-    val badExchange = "hashpartitioning\\((?:band|id_a)[^\\n]*shingles".r.findFirstIn(p)
-    assert(badExchange.isEmpty, s"candidate shuffle carries shingle payload:\n$p")
+    val wide = wideCandidateShuffles(incremental)
+    assert(wide.isEmpty, s"candidate shuffle carries a payload:\n${wide.mkString("\n")}")
   }
 
   test("politeness window is two-phase (salted partial then exact per-host)") {
