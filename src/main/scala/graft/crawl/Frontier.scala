@@ -28,10 +28,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  *  - one url exchange per input: the frontier is hash-partitioned by url
  *    once, and both the dedup aggregate and the seen anti-join run on that
  *    partitioning; the seen side is shuffled once by url, no broadcast of
- *    big sides. That seen shuffle moves the whole history every round, in
- *    proportion to its size, until the seen table is stored bucketed by url
- *    (then the anti-join needs no exchange at all — PlanSpec's bucketed
- *    test)
+ *    big sides. That seen shuffle moves the whole history once a round
+ *    ([[crawl]] runs the one seen anti-join into its `candidates` table)
+ *    until the seen table is stored bucketed by url (then the anti-join
+ *    needs no exchange at all — PlanSpec's bucketed test)
  *  - politeness is the skew point (a hot host = one window partition), so
  *    top-B per host runs TWO-PHASE: local top-B per (host, salt-of-url,
  *    16 buckets) then global top-B per host — the per-host partition the
@@ -200,29 +200,34 @@ object Frontier {
     * it stays only because the benchmark under `perfbench/` passes it. */
   def round(frontier: DataFrame, seen: DataFrame, budgetPerHost: Int,
       robots: Option[DataFrame] = None, seenBloom: Option[BloomFilter] = None)
+      : (DataFrame, DataFrame, DataFrame) =
+    policy(frontier, seen, budgetPerHost, robots, (_, df) => df)
+
+  /** The round policy, for [[round]] and [[crawl]]: seen' = seen ∪
+    * scheduled ∪ robots-disallowed, deferred = unseen − scheduled. Later
+    * steps read `store(name, df)` in place of `df`: identity in [[round]]
+    * (lazy frames), write-then-read in [[crawl]]. */
+  private def policy(frontier: DataFrame, seen: DataFrame, budgetPerHost: Int,
+      robots: Option[DataFrame], store: (String, DataFrame) => DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     robots.foreach(checkRobots)
     val unseenAll = filterUnseen(dedupCandidates(frontier), seen)
     // one robots verdict per url, split both ways: allowed urls go on to
     // scheduling, disallowed ones straight into seen'
-    val gated = robots.map(applyRobots(unseenAll, _))
-    val unseen = gated.fold(unseenAll)(_.filter(col(RobotsAllowed)).drop(RobotsAllowed))
+    val candidates = store("candidates", robots.fold(unseenAll)(applyRobots(unseenAll, _)))
+    val unseen = robots.fold(candidates)(_ =>
+      candidates.filter(col(RobotsAllowed)).drop(RobotsAllowed))
     val sched0 = schedule(unseen, budgetPerHost)
-    val sched = robots.fold(sched0)(withReadyTime(sched0, _))
-    // seen' = seen ∪ scheduled; robots-disallowed urls also become seen
-    // (never revisited, like real crawlers) — deferred urls do NOT.
-    // No distinct (r6): the three inputs are each url-distinct and mutually
-    // DISJOINT — sched ⊆ unseen (anti-joined against seen, internally
-    // deduped), disallowed = the other side of the robots split of
-    // unseenAll (url-distinct, also anti-joined against seen), so the union
-    // is already a set. The old .distinct() re-shuffled the ENTIRE seen
-    // table a second time every round (at 10^10 seen urls, to dedup rows
-    // that cannot collide).
+    val sched = store("scheduled", robots.fold(sched0)(withReadyTime(sched0, _)))
+    // disallowed urls also become seen (never revisited), deferred ones do
+    // NOT. No distinct (r6): seen, sched and disallowed are each url-distinct
+    // and mutually DISJOINT (sched and disallowed split the candidates, which
+    // are anti-joined against seen), so the union is already a set; a
+    // .distinct() would re-shuffle the ENTIRE seen table every round.
     val seenPlusSched = seen.select("url").unionByName(sched.select("url"))
-    val newSeen = gated.fold(seenPlusSched)(g =>
-      seenPlusSched.unionByName(g.filter(!col(RobotsAllowed)).select("url")))
-    val defer = deferred(unseen, sched)
-    (sched, newSeen, defer)
+    val newSeen = robots.fold(seenPlusSched)(_ => seenPlusSched.unionByName(
+      candidates.filter(!col(RobotsAllowed)).select("url")))
+    (sched, newSeen, deferred(unseen, sched))
   }
 
   // --- snapshot checkpointing (Iceberg-shaped stand-in; no Iceberg jars in
@@ -232,26 +237,15 @@ object Frontier {
   def snapshotDir(root: String, roundNo: Int): String =
     f"$root/snapshots/round=$roundNo%05d"
 
-  def writeSnapshot(spark: SparkSession, root: String, roundNo: Int,
-      scheduled: DataFrame, seen: DataFrame, frontier: DataFrame,
-      metrics: Map[String, Long]): Unit = {
+  /** Writes a round's manifest, then `LATEST`, the commit point: it names
+    * the newest complete snapshot. */
+  private def commit(root: String, roundNo: Int, manifest: String): Unit = {
     val dir = snapshotDir(root, roundNo)
-    scheduled.write.mode(SaveMode.Overwrite).parquet(s"$dir/scheduled")
-    seen.write.mode(SaveMode.Overwrite).parquet(s"$dir/seen")
-    frontier.write.mode(SaveMode.Overwrite).parquet(s"$dir/frontier")
-    // per-partition lineage: rows per output partition of the scheduled set
-    val lineage = scheduled.withColumn("pid", spark_partition_id())
-      .groupBy("pid").count().collect()
-      .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-      .mkString("[", ",", "]")
-    val m = metrics.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    val manifest = s"""{"round":$roundNo,$m,"lineage":$lineage}"""
     Files.createDirectories(Paths.get(dir))
     val tmp = Paths.get(s"$dir/manifest.json.tmp")
     Files.writeString(tmp, manifest)
     Files.move(tmp, Paths.get(s"$dir/manifest.json"), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    // commit point: LATEST names the newest complete snapshot
     val latestTmp = Paths.get(s"$root/LATEST.tmp")
     Files.createDirectories(Paths.get(root))
     Files.writeString(latestTmp, roundNo.toString)
@@ -277,6 +271,12 @@ object Frontier {
    * benches pass a deterministic expansion. Resumes from the latest complete
    * snapshot under `root` if present; a `bloom.bin` left in an older
    * snapshot is not read.
+   *
+   * The snapshot is the only materialization (nothing is cached). A round
+   * writes and reads back `candidates` (its one seen anti-join),
+   * `scheduled`, `frontier` (deferred ∪ discovered: an anti-join of two
+   * round-sized tables) and `seen`, then the manifest and `LATEST`. The
+   * manifest counts read the stored tables; `wall_ms` is the whole round.
    */
   def crawl(spark: SparkSession, root: String, seed: DataFrame, rounds: Int,
       budgetPerHost: Int,
@@ -289,37 +289,35 @@ object Frontier {
     }
     val metricsOut = scala.collection.mutable.ListBuffer[Map[String, Long]]()
     var r = start.map(_ + 1).getOrElse(0)
-    val endRound = rounds
-    // emptiness from the metrics we compute anyway — no extra isEmpty job
-    // per round (only the very first iteration checks the seed directly)
+    // emptiness from the frontier_next count — no extra isEmpty job per
+    // round (only the very first iteration checks the seed directly)
     var frontierCount = -1L
-    while (r < endRound &&
+    while (r < rounds &&
         (if (frontierCount >= 0) frontierCount > 0 else !frontier.isEmpty)) {
       val tRound = System.nanoTime()
-      val (sched, newSeen, defer) = round(frontier, seen, budgetPerHost)
-      val schedCached = sched.cache()
-      val nSched = schedCached.count()
-      val discovered = discover(schedCached)
-      val nextFrontier = discovered match {
-        case Some(d) => defer.unionByName(d)
-        case None => defer
+      val dir = snapshotDir(root, r)
+      def store(name: String, df: DataFrame): DataFrame = {
+        df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
+        spark.read.parquet(s"$dir/$name")
       }
-      val newSeenCached = newSeen.cache()
-      val nextFrontierCached = nextFrontier.cache()
+      val (sched, newSeen, defer) = policy(frontier, seen, budgetPerHost, None, store)
+      frontier = store("frontier", discover(sched).fold(defer)(defer.unionByName(_)))
+      seen = store("seen", newSeen)
+      // rows per partition of the stored scheduled set
+      val lineage = sched.withColumn("pid", spark_partition_id())
+        .groupBy("pid").count().collect()
+        .map(row => s"""{"partition":${row.getInt(0)},"rows":${row.getLong(1)}}""")
+        .mkString("[", ",", "]")
       val metrics = Map(
-        "scheduled" -> nSched,
-        "seen_total" -> newSeenCached.count(),
-        "frontier_next" -> nextFrontierCached.count(),
-        // per-round wall (compute, not snapshot IO)
+        "candidates" -> spark.read.parquet(s"$dir/candidates").count(),
+        "scheduled" -> sched.count(),
+        "seen_total" -> seen.count(),
+        "frontier_next" -> frontier.count(),
         "wall_ms" -> (System.nanoTime() - tRound) / 1000000L)
-      writeSnapshot(spark, root, r, schedCached, newSeenCached, nextFrontierCached,
-        metrics)
+      val m = metrics.map { case (k, v) => s""""$k":$v""" }.mkString(",")
+      commit(root, r, s"""{"round":$r,$m,"lineage":$lineage}""")
       metricsOut += (metrics + ("round" -> r.toLong))
       frontierCount = metrics("frontier_next")
-      // reload from the snapshot to truncate lineage (long-loop safety)
-      seen = spark.read.parquet(s"${snapshotDir(root, r)}/seen")
-      frontier = spark.read.parquet(s"${snapshotDir(root, r)}/frontier")
-      schedCached.unpersist(); newSeenCached.unpersist(); nextFrontierCached.unpersist()
       r += 1
     }
     metricsOut.toList

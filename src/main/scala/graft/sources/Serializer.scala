@@ -4,8 +4,11 @@ import graft.css.NodeAccess
 
 /**
  * Serialization operators (S4/S5/S6 in SURVEY.md §2.1), implemented over the
- * abstract [[NodeAccess]] view with explicit stacks (no recursion), like the
- * reference (`src/node/serializing.rs:25-86`, `src/node/text_formatting.rs`).
+ * abstract [[NodeAccess]] view, like the reference
+ * (`src/node/serializing.rs:25-86`, `src/node/text_formatting.rs`).
+ * [[toHtml]] and [[formattedText]] walk the tree with an explicit stack (no
+ * recursion); [[toMd]] recurses through `writeElement`/`writeList`, so its
+ * JVM stack grows with the nesting depth.
  */
 object Serializer {
 

@@ -101,12 +101,16 @@ object SynthDocs {
     * orderkey-range group, rows ordered by orderkey for determinism. */
   def hnBigDocs(spark: SparkSession, sfDir: String, storiesPerPage: Int = 25): DataFrame = {
     GraftFunctions.register(spark)
-    // hash repartition (not round-robin: keyless repartition pays a serial
-    // sortBeforeRepartition on the single scan task — see synthFrontier)
+    // sort-first (see partDocs) on the story rows: the range exchange puts
+    // every story of a page in one partition, so the page aggregate needs no
+    // second exchange, and the consumer's orderBy(doc_id, ...) reuses it —
+    // the range sampler reads story rows, never parse + explode
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      .repartition(spark.sparkContext.defaultParallelism * 2, col("o_orderkey"))
+      .withColumn("doc_id",
+        (col("o_orderkey") / storiesPerPage).cast("long").cast("string"))
+      .repartitionByRange(spark.sparkContext.defaultParallelism * 2, col("doc_id"))
     val rows = orders.select(
-      (col("o_orderkey") / storiesPerPage).cast("long").as("page_id"),
+      col("doc_id"),
       col("o_orderkey"),
       concat(
         lit("<tr class=\"athing\" id=\""), col("o_orderkey"), lit("\">"),
@@ -118,12 +122,13 @@ object SynthDocs {
         lit(".example/\">cust-"), col("o_custkey"), lit(".example</a></span></td></tr>"),
         lit("<tr><td class=\"subtext\"><span class=\"score\">"),
         (col("o_custkey") % 500) + 1, lit(" points</span></td></tr>")).as("row_html"))
-    rows.groupBy("page_id")
+    rows.groupBy("doc_id")
       .agg(concat_ws("",
         sort_array(collect_list(struct(col("o_orderkey"), col("row_html"))))
           .getField("row_html")).as("rows_html"))
+      .sortWithinPartitions("doc_id")
       .select(
-        col("page_id").cast("string").as("doc_id"),
+        col("doc_id"),
         concat(
           lit("<html><head><title>News</title><base href=\"https://news.example/\">"),
           lit("</head><body><table class=\"itemlist\">"),

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.crawl.{Frontier, OracleCrawler, UrlCanon}
 import java.nio.file.Files
@@ -40,6 +40,33 @@ class CrawlSpec extends AnyFunSuite {
   def toDf(us: Seq[Url]) = {
     import spark.implicits._
     us.map(u => (u.url, u.host, u.priority, u.seq)).toDF("url", "host", "priority", "seq")
+  }
+
+  /** [[discoverOracle]] as a frame transform, for `Frontier.crawl`. */
+  val disc: DataFrame => Option[DataFrame] = sched => Some(
+    sched.select(
+      concat(col("url"), lit("/c")).as("url"),
+      col("host"),
+      pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
+      (col("seq") + 10000).cast("long").as("seq")))
+
+  /** The oracle's 4-round crawl of [[seed]] at budget 2: (rounds, final seen). */
+  lazy val oracleCrawl = OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
+
+  /** Each round's scheduled order under `root`, and the last round's seen
+    * set, equal [[oracleCrawl]]'s. */
+  def assertMatchesOracle(root: String): Unit = {
+    val (oracleRounds, oracleSeen) = oracleCrawl
+    oracleRounds.zipWithIndex.foreach { case (or, i) =>
+      val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
+        .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
+        .collect().map(_.getAs[String]("url")).toVector
+      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch ($root)")
+    }
+    val lastSeen = spark.read
+      .parquet(s"${Frontier.snapshotDir(root, oracleRounds.length - 1)}/seen")
+      .collect().map(_.getString(0)).toSet
+    assert(lastSeen == oracleSeen)
   }
 
   /** Every third seed url: a non-empty seen set, so the URL-seen anti-join
@@ -134,44 +161,15 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("multi-round crawl with discovery: per-round schedule + final seen match oracle") {
-    val (oracleRounds, oracleSeen) =
-      OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
-
     val root = Files.createTempDirectory("crawl_ck").toString
-    import spark.implicits._
     val metrics = Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
-      discover = sched => Some(
-        sched.select(
-          concat(col("url"), lit("/c")).as("url"),
-          col("host"),
-          pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
-          (col("seq") + 10000).cast("long").as("seq"))))
-
-    assert(metrics.length == oracleRounds.length)
-    oracleRounds.zipWithIndex.foreach { case (or, i) =>
-      val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
-        .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
-        .collect().map(_.getAs[String]("url")).toVector
-      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch")
-    }
-    val lastSeen = spark.read
-      .parquet(s"${Frontier.snapshotDir(root, oracleRounds.length - 1)}/seen")
-      .collect().map(_.getString(0)).toSet
-    assert(lastSeen == oracleSeen)
+      discover = disc)
+    assert(metrics.length == oracleCrawl._1.length)
+    assertMatchesOracle(root)
   }
 
   test("crawl across rounds + resume: equality holds, no bloom sidecar") {
-    val (oracleRounds, oracleSeen) =
-      OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
-
     val root = Files.createTempDirectory("crawl_bloom_ck").toString
-    import spark.implicits._
-    val disc = (sched: org.apache.spark.sql.DataFrame) => Some(
-      sched.select(
-        concat(col("url"), lit("/c")).as("url"),
-        col("host"),
-        pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
-        (col("seq") + 10000).cast("long").as("seq")))
     // 2 rounds, then "crash", then resume to 4; the round keeps no URL-seen
     // bloom, so no snapshot carries a bloom sidecar
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2,
@@ -180,30 +178,11 @@ class CrawlSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"${Frontier.snapshotDir(root, 1)}/bloom.bin")))
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
       discover = disc)
-
-    oracleRounds.zipWithIndex.foreach { case (or, i) =>
-      val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
-        .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
-        .collect().map(_.getAs[String]("url")).toVector
-      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch (resume)")
-    }
-    val lastSeen = spark.read
-      .parquet(s"${Frontier.snapshotDir(root, oracleRounds.length - 1)}/seen")
-      .collect().map(_.getString(0)).toSet
-    assert(lastSeen == oracleSeen)
+    assertMatchesOracle(root)
   }
 
   test("a bloom.bin left in an older snapshot is ignored on resume") {
-    import spark.implicits._
-    val (oracleRounds, oracleSeen) =
-      OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
     val root = Files.createTempDirectory("crawl_bloom_legacy").toString
-    val disc = (sched: org.apache.spark.sql.DataFrame) => Some(
-      sched.select(
-        concat(col("url"), lit("/c")).as("url"),
-        col("host"),
-        pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
-        (col("seq") + 10000).cast("long").as("seq")))
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2,
       discover = disc)
     // an older build's sidecar: a raw-url-STRING-keyed filter, which probed
@@ -219,40 +198,84 @@ class CrawlSpec extends AnyFunSuite {
     // still reproduce the oracle exactly
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2,
       discover = disc)
-    oracleRounds.zipWithIndex.foreach { case (or, i) =>
-      val sparkRound = spark.read.parquet(s"${Frontier.snapshotDir(root, i)}/scheduled")
-        .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
-        .collect().map(_.getAs[String]("url")).toVector
-      assert(sparkRound == or.scheduled.map(_.url), s"round $i order mismatch")
-    }
-    val lastSeen = spark.read
-      .parquet(s"${Frontier.snapshotDir(root, oracleRounds.length - 1)}/seen")
-      .collect().map(_.getString(0)).toSet
-    assert(lastSeen == oracleSeen)
+    assertMatchesOracle(root)
   }
 
   test("checkpoint resume: restart mid-crawl reproduces identical final state") {
-    import spark.implicits._
     val root = Files.createTempDirectory("crawl_resume").toString
-    def disc(sched: org.apache.spark.sql.DataFrame) = Some(
-      sched.select(concat(col("url"), lit("/c")).as("url"), col("host"),
-        pmod(col("priority") + 3, lit(5)).cast("int").as("priority"),
-        (col("seq") + 10000).cast("long").as("seq")))
     // run 2 rounds, then "crash", then resume to 4
     Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2, discover = disc)
     assert(Frontier.latestSnapshot(root).contains(1))
     Frontier.crawl(spark, root, toDf(seed), rounds = 4, budgetPerHost = 2, discover = disc)
     assert(Frontier.latestSnapshot(root).contains(3))
+    assertMatchesOracle(root)
+  }
 
-    val (oracleRounds, oracleSeen) =
-      OracleCrawler.crawl(seed, rounds = 4, budgetPerHost = 2, discoverOracle)
-    val lastSeen = spark.read.parquet(s"${Frontier.snapshotDir(root, 3)}/seen")
-      .collect().map(_.getString(0)).toSet
-    assert(lastSeen == oracleSeen)
-    val r3 = spark.read.parquet(s"${Frontier.snapshotDir(root, 3)}/scheduled")
-      .orderBy(col("priority").desc, col("seq").asc, col("url").asc)
-      .collect().map(_.getAs[String]("url")).toVector
-    assert(r3 == oracleRounds(3).scheduled.map(_.url))
+  test("crawl keeps no cache, even if discover throws; one seen anti-join per round") {
+    // the listener reads each action's logical plan; a cached frame would
+    // hide its joins there, which the cache checks rule out
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def assertClean(what: String): Unit = {
+      assert(cacheManager.isEmpty, s"$what left a CacheManager entry")
+      assert(sc.getPersistentRDDs.isEmpty,
+        s"$what left persistent RDDs ${sc.getPersistentRDDs.keys.mkString(", ")}")
+    }
+    // suites share the session: start from an empty cache and no persisted RDD
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
+    val failRoot = Files.createTempDirectory("crawl_hygiene_fail").toString
+    val e = intercept[IllegalStateException] {
+      Frontier.crawl(spark, failRoot, toDf(seed), rounds = 2, budgetPerHost = 2,
+        discover = _ => throw new IllegalStateException("discover failed"))
+    }
+    assert(e.getMessage == "discover failed")
+    assertClean("a crawl whose discover threw")
+
+    // round 0, then round 1 with every action's plan recorded
+    val root = Files.createTempDirectory("crawl_hygiene").toString
+    Frontier.crawl(spark, root, toDf(seed), rounds = 1, budgetPerHost = 2, discover = disc)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.optimizedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Frontier.crawl(spark, root, toDf(seed), rounds = 2, budgetPerHost = 2, discover = disc)
+      // the listener is called asynchronously, in order: wait for a marker
+      spark.range(1).toDF("crawl_hygiene_marker").collect()
+      def marked = plans.asScala.exists(_.output.exists(_.name == "crawl_hygiene_marker"))
+      val deadline = System.nanoTime() + 30000000000L
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marked, "the listener never saw the marker action")
+    } finally spark.listenerManager.unregister(listener)
+    assertClean("a completed crawl")
+    def readsSeen(p: LogicalPlan) = p.exists {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.exists(_.getName == "seen")
+        case _ => false
+      }
+      case _ => false
+    }
+    val seenAntiJoins = plans.asScala.toSeq.filter(_.exists {
+      case j: Join => j.joinType == LeftAnti && readsSeen(j.right)
+      case _ => false
+    })
+    assert(seenAntiJoins.length == 1,
+      s"${seenAntiJoins.length} actions anti-join the seen table in one round:\n" +
+        seenAntiJoins.mkString("\n"))
+
   }
 
   test("robots path derivation handles scheme and port shapes") {
@@ -332,12 +355,15 @@ class CrawlSpec extends AnyFunSuite {
 
   test("manifest carries metrics + per-partition lineage") {
     val root = Files.createTempDirectory("crawl_manifest").toString
-    Frontier.crawl(spark, root, toDf(seed), rounds = 1, budgetPerHost = 2)
+    val m = Frontier.crawl(spark, root, toDf(seed), rounds = 1, budgetPerHost = 2).head
     val manifest = Files.readString(
       java.nio.file.Paths.get(s"${Frontier.snapshotDir(root, 0)}/manifest.json"))
     assert(manifest.contains("\"round\":0"))
     assert(manifest.contains("\"scheduled\":"))
+    assert(manifest.contains(s"\"candidates\":${m("candidates")}"))
     assert(manifest.contains("\"lineage\":["))
+    // no discovery: the next frontier is exactly the deferred candidates
+    assert(m("candidates") == m("scheduled") + m("frontier_next"), m)
   }
 
   test("url canonicalization rules") {

@@ -156,8 +156,9 @@ class PlanSpec extends AnyFunSuite {
     // parse+select+extract is one narrow projection chain above the one
     // exchange, the range repartition of the base rows that the final
     // orderBy reuses (sort-first, SynthDocs.partDocs): a range exchange
-    // samples its child, so a parse below it would run twice
-    for (q <- Seq("q_links", "q_dom_parse_count")) {
+    // samples its child, so a parse below it would run twice. q_links_big's
+    // page aggregate runs on that range partitioning, with no exchange of its own
+    for (q <- Seq("q_links", "q_dom_parse_count", "q_links_big")) {
       val p = plan(SparkEntry.queries(q)(spark, sf))
       assert("Exchange".r.findAllIn(p).length == 1, s"$q: one exchange expected:\n$p")
       val (parse, ex) = (p.indexOf("parse_html"), p.indexOf("Exchange rangepartitioning"))
