@@ -9,14 +9,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 /**
  * The distributed crawl frontier (BASELINE.json north_rule): URL-seen dedup,
  * per-host politeness gate, priority scheduling — Spark built-ins
- * (groupBy/window/anti-join), shuffles and skew handled explicitly. This
+ * (groupBy/window/hash join), shuffles and skew handled explicitly. This
  * layer is NEW construction (the reference is a single-doc
  * library, SURVEY.md §2.9); semantics are fixed by [[OracleCrawler]], the
  * single-threaded reference-faithful model both engines must match.
  *
  * Round semantics (deterministic):
  *  1. candidate dedup: group by url, keep (max priority, min seq)
- *  2. URL-seen: drop urls already in the seen set (exact anti-join on url)
+ *  2. URL-seen: drop urls already in the seen set (exact, on url: a hash
+ *     join that streams the seen history past the round's candidates)
  *  3. politeness: at most `budgetPerHost` urls per host per round, picked by
  *     (priority DESC, seq ASC, url ASC)
  *  4. scheduled set ordered globally by (priority DESC, seq ASC, url ASC),
@@ -26,12 +27,16 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  *
  * Scale design (10^10-URL frontier, SURVEY.md §7.2.8):
  *  - one url exchange per input: the frontier is hash-partitioned by url
- *    once, and both the dedup aggregate and the seen anti-join run on that
+ *    once, and both the dedup aggregate and the seen filter run on that
  *    partitioning; the seen side is shuffled once by url, no broadcast of
  *    big sides. That seen shuffle moves the whole history once a round
- *    ([[crawl]] runs the one seen anti-join into its `candidates` table)
- *    until the seen table is stored bucketed by url (then the anti-join
+ *    ([[crawl]] runs the one seen filter into its `candidates` table)
+ *    until the seen table is stored bucketed by url (then the seen join
  *    needs no exchange at all — PlanSpec's bucketed test)
+ *  - the seen filter is a hash join that streams the seen history: its
+ *    hash table holds one partition of the round's deduped candidates,
+ *    so per-round memory follows the round, not the history, and no side
+ *    is sorted by url
  *  - politeness is the skew point (a hot host = one window partition), so
  *    top-B per host runs TWO-PHASE: local top-B per (host, salt-of-url,
  *    16 buckets) then global top-B per host — the per-host partition the
@@ -57,7 +62,7 @@ object Frontier {
     *
     * The url exchange sits BELOW the aggregate: url partitioning satisfies
     * the aggregate's `(url, host)` clustering, and the output stays
-    * hash-partitioned by url, so [[filterUnseen]]'s anti-join reuses it and
+    * hash-partitioned by url, so [[filterUnseen]]'s hash join reuses it and
     * shuffles only the seen side. This regains the exchange reuse that the
     * `(url, host)`-partitioned HashAggregate gave up (r4 ADVICE: there the
     * anti-join re-shuffled the deduped candidates by url). The price is the
@@ -75,9 +80,33 @@ object Frontier {
     frontier.repartition(col("url")).groupBy("url", "host")
       .agg(max("priority").as("priority"), min("seq").as("seq"))
 
-  /** URL-seen filter (step 2), exact: anti-join on `url` against `seen`. */
-  def filterUnseen(candidates: DataFrame, seen: DataFrame): DataFrame =
-    candidates.join(seen.select("url"), Seq("url"), "left_anti")
+  /** URL-seen filter (step 2), exact: the candidates whose url is not in
+    * `seen`, with exactly the candidates' columns, in order. Same rows as a
+    * `left_anti` join on url: a null candidate url is kept, a null seen url
+    * matches nothing, and duplicate seen urls drop a candidate once.
+    *
+    * Planned as `seen RIGHT OUTER JOIN candidates`, a shuffled hash join
+    * that builds on the candidates and streams the seen history past them,
+    * keeping the rows with no seen match: `===` never matches a null, so
+    * only an unmatched candidate has a null seen url. The hash table holds
+    * one shuffle partition of the deduped frontier, never the seen history,
+    * and neither side is sorted by url (a sort-merge anti-join sorts both
+    * every round). The candidates' url is renamed after their exchange: the
+    * rename keeps [[dedupCandidates]]' url partitioning, so only the seen
+    * side shuffles, keyed by and carrying `url` alone. */
+  def filterUnseen(candidates: DataFrame, seen: DataFrame): DataFrame = {
+    val cols = candidates.columns.toIndexedSeq
+    def renamed(from: String, to: String) =
+      cols.map(c => if (c == "url") col(from).as(to) else col(c))
+    seen.select("url")
+      .join(candidates.select(renamed("url", CandidateUrl): _*).hint("shuffle_hash"),
+        col("url") === col(CandidateUrl), "right_outer")
+      .filter(col("url").isNull)
+      .select(renamed(CandidateUrl, "url"): _*)
+  }
+
+  /** The candidates' url inside [[filterUnseen]]'s join. */
+  private val CandidateUrl = "__cand_url"
 
   def bloomExpectedItems(bloomBits: Long): Long = math.max(1000000L, bloomBits / 16)
 
@@ -273,7 +302,7 @@ object Frontier {
    * snapshot is not read.
    *
    * The snapshot is the only materialization (nothing is cached). A round
-   * writes and reads back `candidates` (its one seen anti-join),
+   * writes and reads back `candidates` (its one seen filter),
    * `scheduled`, `frontier` (deferred ∪ discovered: an anti-join of two
    * round-sized tables) and `seen`, then the manifest and `LATEST`. The
    * manifest counts read the stored tables; `wall_ms` is the whole round.

@@ -126,30 +126,84 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("crawl round: the seen filter is a hash join built on the candidates, no url sort") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.RightOuter
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val dir = java.nio.file.Files.createTempDirectory("plan_seen_hash").toString
+    (0 until 1000)
+      .map(i => (s"https://h${i % 7}.ex/p/${i % 300}", s"h${i % 7}.ex", i % 5, i.toLong))
+      .toDF("url", "host", "priority", "seq").write.parquet(s"$dir/frontier")
+    (0 until 100 by 3).map(i => s"https://h${i % 7}.ex/p/$i").toDF("url")
+      .write.parquet(s"$dir/seen")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (sched, _, _) = Frontier.round(spark.read.parquet(s"$dir/frontier"),
+        spark.read.parquet(s"$dir/seen"), budgetPerHost = 3)
+      val physical = sched.queryExecution.executedPlan
+      val p = physical.toString
+      def readsSeen(q: SparkPlan) = q.exists {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == "seen")
+        case _ => false
+      }
+      val hashJoins = physical.collect { case j: ShuffledHashJoinExec => j }
+      assert(hashJoins.length == 1 && hashJoins.forall(j =>
+        j.joinType == RightOuter && j.buildSide == BuildRight && readsSeen(j.left) &&
+          !readsSeen(j.right)),
+        s"expected one RightOuter BuildRight hash join streaming the seen table:\n$p")
+      assert(!p.contains("Sort [url"), s"url sort in the round:\n$p")
+      val seenExchanges = hashJoins.head.left.collect { case e: ShuffleExchangeExec => e }
+      assert(seenExchanges.nonEmpty &&
+        seenExchanges.forall(_.child.output.map(_.name) == Seq("url")),
+        s"the seen exchange carries more than url:\n$p")
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
   test("robots round: newSeen splits the one robots verdict, no anti-join against unseen") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    // repartitioned so the optimizer cannot fold the local inputs away
-    val frontier = (0 until 1000)
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    // stored inputs, so the optimizer cannot fold them away and the seen
+    // table is recognised by its directory
+    val dir = java.nio.file.Files.createTempDirectory("plan_robots").toString
+    (0 until 1000)
       .map(i => (s"https://h${i % 7}.ex/p/${i % 300}", s"h${i % 7}.ex", i % 5, i.toLong))
-      .toDF("url", "host", "priority", "seq").repartition(2)
-    val seen = (0 until 100 by 3).map(i => s"https://h${i % 7}.ex/p/$i").toDF("url")
-      .repartition(2)
+      .toDF("url", "host", "priority", "seq").write.parquet(s"$dir/frontier")
+    (0 until 100 by 3).map(i => s"https://h${i % 7}.ex/p/$i").toDF("url")
+      .write.parquet(s"$dir/seen")
     val robots = (0 until 7).map(h => (s"h$h.ex", Seq("/p/1"), Seq("/p/10"), 1 + h % 3))
       .toDF("host", "disallow_prefixes", "allow_prefixes", "crawl_delay_s")
-    val (_, newSeen, _) = Frontier.round(frontier, seen, budgetPerHost = 3,
-      robots = Some(robots))
-    val antiJoins = newSeen.queryExecution.optimizedPlan.collect {
-      case j: Join if j.joinType == LeftAnti => j
+    val (_, newSeen, _) = Frontier.round(spark.read.parquet(s"$dir/frontier"),
+      spark.read.parquet(s"$dir/seen"), budgetPerHost = 3, robots = Some(robots))
+    val optimized = newSeen.queryExecution.optimizedPlan
+    def readsSeen(p: LogicalPlan) = p.exists {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.exists(_.getName == "seen")
+        case _ => false
+      }
+      case _ => false
     }
-    // the seen anti-join is still there; none has the robots-gated set (a
-    // subtree reading the robots rules) on its right side
-    assert(antiJoins.nonEmpty, newSeen.queryExecution.optimizedPlan.toString)
-    val gatedRight = antiJoins.filter(_.right.exists(_.output.exists(a =>
-      a.name == "disallow_prefixes" || a.name == "allow_prefixes")))
-    assert(gatedRight.isEmpty,
-      s"newSeen anti-joins against the robots-filtered unseen set:\n${gatedRight.mkString("\n")}")
+    // a robots-gated subtree: candidates (they read seen) that went through
+    // the robots rules
+    def gated(p: LogicalPlan) = readsSeen(p) && p.exists(_.output.exists(a =>
+      a.name == "disallow_prefixes" || a.name == "allow_prefixes"))
+    val seenJoins = optimized.collect {
+      case j: Join if readsSeen(j.left) || readsSeen(j.right) => j
+    }
+    // the seen filter is still there; no seen join has the robots-gated set
+    // on its other side
+    assert(seenJoins.nonEmpty, optimized.toString)
+    val gatedOther = seenJoins.filter(j =>
+      (readsSeen(j.left) && gated(j.right)) || (readsSeen(j.right) && gated(j.left)))
+    assert(gatedOther.isEmpty,
+      s"newSeen joins seen against the robots-filtered unseen set:\n${gatedOther.mkString("\n")}")
   }
 
   test("flagship q_links plan: per-document narrow stage, single final sort") {
