@@ -1,7 +1,8 @@
 package graft.crawl
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import graft.spark.BodyCodegen
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -92,26 +93,27 @@ object UrlCanon {
   }
 }
 
-/** `canonicalize_url(url, base)` → canonical URL or NULL if not crawlable. */
-case class CanonicalizeUrl(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+/** `canonicalize_url(url, base)` → canonical URL or NULL if not crawlable.
+  * A null base means none, so this is not a binary null-safe form. */
+case class CanonicalizeUrl(left: Expression, right: Expression) extends BodyCodegen {
+  override def children: Seq[Expression] = Seq(left, right)
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val u = left.eval(input)
+  override def eval(input: InternalRow): Any = evalValues(Array(left.eval(input), right.eval(input)))
+  override def evalValues(vs: Array[Any]): Any = {
+    val (u, b) = (vs(0), vs(1))
     if (u == null) return null
-    val b = right.eval(input)
     val r = UrlCanon.canonicalize(u.toString, if (b == null) null else b.toString)
     if (r == null) null else UTF8String.fromString(r)
   }
   override def prettyName: String = "canonicalize_url"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(left = cs(0), right = cs(1))
 }
 
 /** `url_host(url)` → lowercased host or NULL. */
 case class UrlHostExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback {
+    extends UnaryExpression with BodyCodegen {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(u: Any): Any = {

@@ -382,8 +382,15 @@ object HtmlParser {
     * scaffolding, which the reference's merge also skips — `ops.rs:443-452`). */
   def parseFragment(html: String): Arena = build(html, fragment = true)
 
-  private def build(html: String, fragment: Boolean): Arena =
-    new TreeBuilder(html, fragment).run()
+  private def build(html: String, fragment: Boolean): Arena = buildFlagged(html, fragment)._1
+
+  /** The arena, and whether every node of it was attached in preorder
+    * (then [[Renumber.isPreorder]] holds without its walk). */
+  private[graft] def buildFlagged(html: String, fragment: Boolean): (Arena, Boolean) = {
+    val b = new TreeBuilder(html, fragment)
+    val a = b.run()
+    (a, b.inPreorder && b.last == a.size - 1)
+  }
 
   /** Quirks-mode determination from the doctype (html5ever `QuirksMode`;
     * reference surfaces it as `Document.quirks_mode`, `document.rs:22-32`). */
@@ -486,7 +493,21 @@ object HtmlParser {
 
     // --- pointer surgery -----------------------------------------------------
 
+    /** Ids are still preorder: each node so far was attached in id order as
+      * the last child of `last` (the last node in preorder) or of one of its
+      * ancestors. A node inserted any other way breaks the id sequence, and
+      * a detach clears the flag. */
+    var inPreorder = true
+    var last = 0
+    private def attached(parentId: Int, id: Int): Unit = if (inPreorder) {
+      var a = last
+      while (a != -1 && a != parentId) a = arena(a).parent
+      inPreorder = a == parentId && id == last + 1
+      last = id
+    }
+
     private def detach(id: Int): Unit = {
+      inPreorder = false
       val nd = arena(id)
       val p = nd.parent
       if (p != -1) {
@@ -500,6 +521,7 @@ object HtmlParser {
     }
 
     private def appendChild(parentId: Int, id: Int): Unit = {
+      attached(parentId, id)
       val p = arena(parentId)
       val nd = arena(id)
       nd.parent = parentId
@@ -1059,6 +1081,7 @@ object HtmlParser {
       if (tag == Template) {
         val frag = arena.create(new MutNode(NodeKind.Fragment))
         arena(id).templateContents = frag
+        attached(id, frag)
         push(frag, name, Template)
         afe += null // marker
       } else if ((bits & Formatting) != 0) {
@@ -1172,6 +1195,7 @@ object HtmlParser {
               if (tag == Template) {
                 val frag = arena.create(new MutNode(NodeKind.Fragment))
                 arena(id).templateContents = frag
+                attached(id, frag)
                 push(frag, name, Template)
                 afe += null
               } else if ((bits & Void) == 0) {
@@ -1263,8 +1287,10 @@ object HtmlParser {
 
   /** Parse a document or fragment and renumber it to preorder — the ingest
     * path behind `parse_html`, `parse_html_meta` and `Doc.parse`. */
-  def parse(html: String, fragment: Boolean): Arena =
-    Renumber.preorder(build(html, fragment))
+  def parse(html: String, fragment: Boolean): Arena = {
+    val (a, inPreorder) = buildFlagged(html, fragment)
+    if (inPreorder) a else Renumber.preorder(a)
+  }
 }
 
 /**
@@ -1272,7 +1298,8 @@ object HtmlParser {
  * parses are naturally preorder-numbered for non-reparented content; our
  * builder can create nodes out of order (implicit scaffolding, foster
  * parenting), so we canonicalize once at ingest — this is what makes
- * `subtree_end` a contiguous range (SURVEY.md §2.4 T4).
+ * `subtree_end` a contiguous range (SURVEY.md §2.4 T4). `HtmlParser.parse`
+ * skips it when the builder attached every node in preorder.
  */
 object Renumber {
   /** Is arena id order already preorder? True for almost every fresh parse

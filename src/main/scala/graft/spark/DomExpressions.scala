@@ -7,7 +7,8 @@ import graft.sources.{HtmlParser, Serializer}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,10 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * [[ArrayDataAccess]] — no Row/encoder conversion in the hot path, which is
  * why they beat Scala UDFs (preference order per the Spark guide:
  * built-ins > custom Expression > UDF). All are deterministic and null-safe.
- * They are `CodegenFallback`, and `CollapseCodegenStages` rejects any
- * non-leaf `CodegenFallback`, so a `Project` that holds one of them runs
- * interpreted, outside whole-stage codegen, together with every other
- * expression in that `Project` (ROADMAP item 7).
+ * They run inside whole-stage codegen through [[BodyCodegen]], so a chain
+ * such as parse → select → explode → `canonicalize_url` is one fused stage
+ * and a parsed `nodes` array passes between them as a local value, never
+ * written into an `UnsafeRow`.
  *
  * The selector string must be a foldable literal — the plan compiles ONCE on
  * first evaluation (the reference's reusable-Matcher pattern,
@@ -33,7 +34,40 @@ import org.apache.spark.unsafe.types.UTF8String
   * array: deterministic, and costly enough per evaluation that
   * [[PushDomBelowGenerate]] evaluates one once per document, below a
   * `Generate`, when it reads only the generator's input row. */
-trait DomExpression extends Expression
+trait DomExpression extends BodyCodegen
+
+/** Whole-stage codegen that calls the interpreted body: the generated code
+  * evaluates the children, then passes their values to this expression
+  * through a reference object. A unary, binary or ternary form is null when
+  * any input is, and the call is its `nullSafeEval`; any other form handles
+  * nulls itself, defines `eval` as [[evalValues]] over all its children's
+  * values, and the call is `evalValues`. */
+trait BodyCodegen extends Expression {
+  def evalValues(values: Array[Any]): Any =
+    throw new UnsupportedOperationException(s"$prettyName evaluates through nullSafeEval")
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj(prettyName, this)
+    val ins = children.map(_.genCode(ctx))
+    val (call, anyNull) = this match {
+      case _: UnaryExpression | _: BinaryExpression | _: TernaryExpression =>
+        (ins.map(_.value).mkString("nullSafeEval(", ", ", ")"), ins.map(_.isNull).mkString(" || "))
+      case _ =>
+        (ins.map(i => s"${i.isNull} ? null : (Object) ${i.value}")
+          .mkString("evalValues(new Object[] {", ", ", "})"), "false")
+    }
+    val out = ctx.freshName("out")
+    ev.copy(code = code"""
+      ${ins.map(_.code).mkString("\n")}
+      boolean ${ev.isNull} = true;
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      if (!($anyNull)) {
+        Object $out = $self.$call;
+        ${ev.isNull} = $out == null;
+        if (!${ev.isNull}) ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $out;
+      }""")
+  }
+}
 
 object DomExprUtil {
   def compile(e: Expression): List[SelectorAst.Complex] =
@@ -66,7 +100,7 @@ object DomExprUtil {
   * §1.4 / reference `Document { errors, quirks_mode }` (`document.rs:22-32`);
   * errors and quirks mode are converted only then. */
 case class ParseHtml(child: Expression, fragment: Boolean, meta: Boolean = false)
-    extends UnaryExpression with CodegenFallback with DomExpression {
+    extends UnaryExpression with DomExpression {
   override def dataType: DataType =
     if (!meta) NodeSchema.nodesArrayType
     else StructType(Seq(
@@ -88,7 +122,7 @@ case class ParseHtml(child: Expression, fragment: Boolean, meta: Boolean = false
 
 /** `css_select(nodes, 'css')` → ARRAY<INT> of matches under the root (Q1). */
 case class CssSelect(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(right)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(right)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -104,7 +138,7 @@ case class CssSelect(left: Expression, right: Expression)
 
 /** `css_select_first(nodes, 'css')` → INT index of first match or -1 (Q2). */
 case class CssSelectFirst(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(right)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(right)
   override def dataType: DataType = IntegerType
@@ -120,7 +154,7 @@ case class CssSelectFirst(left: Expression, right: Expression)
 /** `css_select_under(nodes, ids, 'css')` → chained sub-select (Q3);
   * roots themselves never match. */
 case class CssSelectUnder(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(third)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -136,7 +170,7 @@ case class CssSelectUnder(first: Expression, second: Expression, third: Expressi
 
 /** `css_filter(nodes, ids, 'css')` → ids whose node matches (Q4, is-semantics). */
 case class CssFilter(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(third)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -152,7 +186,7 @@ case class CssFilter(first: Expression, second: Expression, third: Expression)
 
 /** `css_is(nodes, ids, 'css')` → BOOLEAN: any selected node matches (Q8). */
 case class CssIs(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   @transient private lazy val plan = DomExprUtil.compile(third)
   override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.checkSelector(third)
   override def dataType: DataType = BooleanType
@@ -170,7 +204,7 @@ case class CssIs(first: Expression, second: Expression, third: Expression)
   * walk (F1, reference `dom_tree/traversal.rs:90-138`) — the reference's own
   * benches show it ~5× faster than full CSS select for tag-only paths. */
 case class DomFind(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   @transient private lazy val path: Seq[String] =
     right.eval(InternalRow.empty).toString.split(",").map(_.trim).toSeq
   override def checkInputDataTypes(): TypeCheckResult =
@@ -191,7 +225,7 @@ case class DomFind(left: Expression, right: Expression)
   * subtrees deep-copied (id-remapped) into/over every target match — the
   * cross-tree copy surface (M11/M12/C1/C2, reference `selection.rs:445-486`). */
 case class DomCopySelection(children: Seq[Expression])
-    extends Expression with CodegenFallback with DomExpression {
+    extends Expression with DomExpression {
   require(children.length == 5,
     "dom_copy_selection(target_nodes, target_css, source_nodes, source_css, mode)")
   @transient private lazy val targetPlan = DomExprUtil.compile(children(1))
@@ -204,9 +238,9 @@ case class DomCopySelection(children: Seq[Expression])
   override def dataType: DataType = NodeSchema.nodesArrayType
   override def nullable: Boolean = children.head.nullable || children(2).nullable
   override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val targetVal = children.head.eval(input)
-    val sourceVal = children(2).eval(input)
+  override def eval(input: InternalRow): Any = evalValues(children.map(_.eval(input)).toArray)
+  override def evalValues(vs: Array[Any]): Any = {
+    val (targetVal, sourceVal) = (vs(0), vs(2))
     if (targetVal == null || sourceVal == null) return null
     val target = new ArrayDataAccess(targetVal.asInstanceOf[ArrayData]).toArena
     val source = new ArrayDataAccess(sourceVal.asInstanceOf[ArrayData]).toArena
@@ -235,7 +269,7 @@ case class DomCopySelection(children: Seq[Expression])
   * `UTF8String.concat` — the old StringBuilder path decoded every text node
   * UTF8→String and re-encoded the result. */
 case class DomText(left: Expression, right: Expression, immediate: Boolean = false)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -258,7 +292,7 @@ case class DomText(left: Expression, right: Expression, immediate: Boolean = fal
   * X6 — lets a whole selection be extracted in one projection and exploded
   * WITHOUT duplicating the nodes array per output row). */
 case class DomTextEach(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -278,7 +312,7 @@ case class DomTextEach(left: Expression, right: Expression)
 
 /** `dom_attr_each(nodes, ids, 'key')` → ARRAY<STRING>: attr per id (batched X1). */
 case class DomAttrEach(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullSafeEval(nodes: Any, ids: Any, key: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -299,7 +333,7 @@ case class DomAttrEach(first: Expression, second: Expression, third: Expression)
 
 /** `dom_attr(nodes, ids, 'key')` → attr of FIRST id, null if absent (X1). */
 case class DomAttr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any, ids: Any, key: Any): Any = {
@@ -318,7 +352,7 @@ case class DomAttr(first: Expression, second: Expression, third: Expression)
   * value: distinguishes `attr=""` from absent, which `dom_attr IS NOT NULL`
   * cannot). False on an empty selection. */
 case class DomHasAttr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   override def dataType: DataType = BooleanType
   override def nullSafeEval(nodes: Any, ids: Any, key: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -334,7 +368,7 @@ case class DomHasAttr(first: Expression, second: Expression, third: Expression)
   * ≡ `Doc.htmlRoot`, both [[graft.css.NodeAccess.htmlRoot]]), -1 when the
   * document has none. */
 case class DomHtmlRoot(child: Expression)
-    extends UnaryExpression with CodegenFallback with DomExpression {
+    extends UnaryExpression with DomExpression {
   override def dataType: DataType = IntegerType
   override def nullSafeEval(nodes: Any): Any =
     new ArrayDataAccess(nodes.asInstanceOf[ArrayData]).htmlRoot
@@ -344,7 +378,7 @@ case class DomHtmlRoot(child: Expression)
 
 /** `dom_html(nodes, ids, include_root)` → HTML of first id (S4/X9). */
 case class DomHtml(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any, ids: Any, includeRoot: Any): Any = {
@@ -362,7 +396,7 @@ case class DomHtml(first: Expression, second: Expression, third: Expression)
 
 /** `dom_formatted_text(nodes, ids)` → formatted text of all ids (S6/X8). */
 case class DomFormattedText(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -379,7 +413,7 @@ case class DomFormattedText(left: Expression, right: Expression)
 
 /** `dom_md(nodes, ids)` → markdown of first id (S5). */
 case class DomMd(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
@@ -397,7 +431,7 @@ case class DomMd(left: Expression, right: Expression)
 
 /** `dom_norm_char_count(nodes, ids)` → X11 streaming fold. */
 case class DomNormCharCount(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   override def dataType: DataType = LongType
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -428,7 +462,7 @@ case class DomNormCharCount(left: Expression, right: Expression)
  * contiguity — ids stay stable like the reference, `ops.rs:350-383`).
  */
 case class DomMutateOps(children: Seq[Expression])
-    extends Expression with CodegenFallback with DomExpression {
+    extends Expression with DomExpression {
   require(children.length > 1 && (children.length - 1) % 4 == 0,
     "dom_mutate_ops(nodes, (css, op, arg1, arg2)+)")
   private def opCount = (children.length - 1) / 4
@@ -444,14 +478,13 @@ case class DomMutateOps(children: Seq[Expression])
   override def dataType: DataType = NodeSchema.nodesArrayType
   override def nullable: Boolean = children.head.nullable
   override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val nodesVal = children.head.eval(input)
-    if (nodesVal == null) return null
-    var arena = new ArrayDataAccess(nodesVal.asInstanceOf[ArrayData]).toArena
+  override def eval(input: InternalRow): Any = evalValues(children.map(_.eval(input)).toArray)
+  override def evalValues(vs: Array[Any]): Any = {
+    if (vs(0) == null) return null
+    var arena = new ArrayDataAccess(vs(0).asInstanceOf[ArrayData]).toArena
     var i = 0
     while (i < opCount) {
-      val a1 = children(3 + 4 * i).eval(input)
-      val a2 = children(4 + 4 * i).eval(input)
+      val (a1, a2) = (vs(3 + 4 * i), vs(4 + 4 * i))
       arena = DomMutateOps.applyOp(arena, plans(i), opNames(i),
         if (a1 == null) null else a1.toString,
         if (a2 == null) null else a2.toString)
@@ -549,7 +582,7 @@ object DomMutateOps {
  * `src/node/iters.rs:142-200`.
  */
 case class DomSpans(child: Expression)
-    extends UnaryExpression with CodegenFallback with DomExpression {
+    extends UnaryExpression with DomExpression {
   import org.apache.spark.sql.types._
   private val mediaElems = Set("img", "audio", "video", "source", "track", "embed")
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -587,7 +620,7 @@ case class DomSpans(child: Expression)
   * `Sel.ancestors` ([[graft.css.NodeAccess.foreachAncestor]]), but every id
   * is kept, the document node included. */
 case class DomAncestors(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with DomExpression {
+    extends TernaryExpression with DomExpression {
   private lazy val maxDepth: Int = third.eval(InternalRow.empty).asInstanceOf[Int]
   override def checkInputDataTypes(): TypeCheckResult =
     DomExprUtil.checkLiteral(third, "max_depth")(_ => third.dataType == IntegerType)
@@ -612,7 +645,7 @@ case class DomAncestors(first: Expression, second: Expression, third: Expression
   * in document order — the T1 traversal surface (reference `children()`,
   * `src/node/iters.rs:64-94` ChildNodes pointer walk). */
 case class DomChildren(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with DomExpression {
+    extends BinaryExpression with DomExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(nodes: Any, ids: Any): Any = {
     val acc = new ArrayDataAccess(nodes.asInstanceOf[ArrayData])
@@ -627,7 +660,7 @@ case class DomChildren(left: Expression, right: Expression)
 
 /** `dom_validate(nodes)` → NULL if structurally valid else the violation (C4). */
 case class DomValidate(child: Expression)
-    extends UnaryExpression with CodegenFallback with DomExpression {
+    extends UnaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any): Any = {
@@ -642,7 +675,7 @@ case class DomValidate(child: Expression)
 
 /** `dom_base_uri(nodes)` → the cached `html>head>base[href]` walk (F5). */
 case class DomBaseUri(child: Expression)
-    extends UnaryExpression with CodegenFallback with DomExpression {
+    extends UnaryExpression with DomExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(nodes: Any): Any = {

@@ -14,19 +14,9 @@ import graft.spark.NodeSchema
  */
 class DeepNestingSpec extends AnyFunSuite {
 
-  val Levels = 100000
-  val WallBoundMs = 10000L
+  import DeepNestingSpec._
 
-  private def deep(open: String, close: String, text: String): String = {
-    val sb = new java.lang.StringBuilder((open.length + close.length) * Levels + 64)
-    sb.append("<!DOCTYPE html><html><body>")
-    var i = 0
-    while (i < Levels) { sb.append(open); i += 1 }
-    sb.append(text)
-    i = 0
-    while (i < Levels) { sb.append(close); i += 1 }
-    sb.append("</body></html>").toString
-  }
+  val WallBoundMs = 10000L
 
   /** Parse + encode `html`; returns (elements named `tag`, depth of the
     * text node, wall ms). */
@@ -67,4 +57,26 @@ class DeepNestingSpec extends AnyFunSuite {
     info(s"nested blockquote: $ms ms")
     assert(ms < WallBoundMs, s"nested blockquote took $ms ms")
   }
+}
+
+object DeepNestingSpec {
+
+  val Levels = 100000
+
+  def deep(open: String, close: String, text: String): String = {
+    val sb = new java.lang.StringBuilder((open.length + close.length) * Levels + 64)
+    sb.append("<!DOCTYPE html><html><body>")
+    var i = 0
+    while (i < Levels) { sb.append(open); i += 1 }
+    sb.append(text)
+    i = 0
+    while (i < Levels) { sb.append(close); i += 1 }
+    sb.append("</body></html>").toString
+  }
+
+  /** The three nested shapes the spec parses. */
+  def shapes: Seq[String] = Seq(
+    deep("<div>", "</div>", "core"),
+    deep("<ul><li>", "</li></ul>", "core"),
+    deep("<blockquote>", "</blockquote>", "core"))
 }

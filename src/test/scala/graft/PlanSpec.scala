@@ -333,6 +333,25 @@ class PlanSpec extends AnyFunSuite {
     assert(got == rows(reference))
   }
 
+  test("dom_links shape and q_links: DOM expressions and the Generate run inside whole-stage codegen") {
+    import graft.spark.{GraftFunctions => F}
+    F.register(spark)
+    val n = col("n")
+    val links = linkPages(spark)
+      .select(F.dom_base_uri(n).as("base"),
+        explode(F.dom_attr_each(n, F.css_select_under(n, F.css_select(n, "div.row"), "a[href]"),
+          "href")).as("href"))
+      .select(F.canonicalize_url(col("href"), col("base")).as("url"))
+      .agg(count(col("url")), countDistinct(col("url")))
+    for ((name, q) <- Seq("dom_links" -> links, "q_links" -> SparkEntry.queries("q_links")(spark, sf))) {
+      q.collect()
+      val p = q.queryExecution.executedPlan
+      assert(p.toString.contains("parse_html"), p)
+      val outside = PlanSpec.domOutsideCodegen(p)
+      assert(outside.isEmpty, s"$name: outside whole-stage codegen:\n${outside.mkString("\n")}\n$p")
+    }
+  }
+
   test("bucketed tables co-locate the seen join: zero exchanges in the join plan") {
     import spark.implicits._
     // the 100 TB lever for the recurring frontier-vs-seen join: both sides
@@ -445,5 +464,28 @@ class PlanSpec extends AnyFunSuite {
     val windows = "Window".r.findAllIn(p).length
     assert(windows >= 2, s"expected the two-phase top-B windows:\n$p")
     assert(p.contains("host") && p.contains("salt"), p)
+  }
+}
+
+object PlanSpec {
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+  def isDom(e: Expression): Boolean = e.isInstanceOf[graft.spark.DomExpression] ||
+    e.isInstanceOf[graft.crawl.CanonicalizeUrl] || e.isInstanceOf[graft.crawl.UrlHostExpr]
+
+  /** The operators of an executed plan that are `Generate`s or hold a DOM or
+    * URL expression, but run outside any whole-stage codegen stage. Reads
+    * the final adaptive plan, query stages included. */
+  def domOutsideCodegen(p: SparkPlan, fused: Boolean = false): Seq[String] = {
+    val dom = p.isInstanceOf[GenerateExec] || p.expressions.exists(_.exists(isDom))
+    (if (dom && !fused) Seq(p.simpleString(200)) else Nil) ++ (p match {
+      case w: WholeStageCodegenExec => domOutsideCodegen(w.child, fused = true)
+      case i: InputAdapter => domOutsideCodegen(i.child)
+      case a: AdaptiveSparkPlanExec => domOutsideCodegen(a.executedPlan)
+      case s: QueryStageExec => domOutsideCodegen(s.plan)
+      case _ => p.children.flatMap(domOutsideCodegen(_, fused))
+    })
   }
 }

@@ -180,6 +180,32 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("the tree builder's preorder flag is conservative: flagged arenas pass isPreorder") {
+    import graft.sources.{HtmlParser, Renumber}
+    val fixtures = Seq(Fixtures.ANCESTORS, Fixtures.LIST, Fixtures.HEADING, Fixtures.LINKS,
+      Fixtures.SIMPLE_LIST, Fixtures.EMPTY_HEADINGS, Fixtures.ATTRS, Fixtures.README_PAGE)
+    val benchPages = graftbench.Gen.pages(seed = 1L, n = 64).map(_.html).toSeq
+    val corpora = Seq(
+      "fixtures" -> (fixtures ++ ParseFingerprintSpec.HandPages),
+      "tag soup" -> ParseFingerprintSpec.tagSoup(seed = 8L, n = 300),
+      "perfbench pages" -> benchPages,
+      "deep nesting" -> DeepNestingSpec.shapes,
+      "fuzz" -> (samples(genSoup, 300) ++ samples(genRichSoup, 200) ++ samples(genHtml, 100)))
+    for ((name, pages) <- corpora) {
+      var (preorder, flagged) = (0, 0)
+      for (html <- pages; fragment <- Seq(false, true)) {
+        val (a, inPreorder) = HtmlParser.buildFlagged(html, fragment)
+        val isPreorder = Renumber.isPreorder(a)
+        assert(isPreorder || !inPreorder, s"$name: flagged preorder but is not: $html")
+        if (isPreorder) preorder += 1
+        if (inPreorder) flagged += 1
+      }
+      info(s"$name: ${pages.length * 2} parses, $preorder preorder, $flagged of them flagged")
+    }
+    // every generated page parses in preorder, so the flag skips the walk for all of them
+    assert(benchPages.forall(HtmlParser.buildFlagged(_, fragment = false)._2))
+  }
+
   test("random mutation sequences keep the tree structurally valid (C4)") {
     forAll(genHtml, Gen.listOfN(12, genOp)) { (html, ops) =>
       val doc = Doc.parse(html)

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** No operator leaves state behind between calls: running and collecting
   * any of the `SparkEntry.queries` at sf0.001 leaves the session's
   * CacheManager, persistent RDDs, temp views and catalog tables, conf and
-  * active streams as it found them.
+  * active streams as it found them. The session runs with codegen fallback
+  * off, so a query whose generated code does not compile fails here
+  * instead of silently running interpreted.
   *
   * Named exemptions:
   *  - `minhashPairsIncremental` (`q_dedup_minhash_inc`, `q_stream_dedup`)
@@ -25,6 +27,7 @@ class SessionHygieneSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.codegen.fallback", "false")
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
