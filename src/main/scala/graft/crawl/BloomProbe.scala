@@ -1,9 +1,8 @@
 package graft.crawl
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /**
@@ -27,27 +26,20 @@ import org.apache.spark.util.sketch.BloomFilter
  * Literal is not just slow but impossible; a broadcast is the only shape
  * that survives. This expression keeps BOTH properties: broadcast transport
  * (small task binaries, torrent distribution, one deserialize per executor)
- * AND whole-stage codegen (the generated code hoists `bc.value()` into a
- * mutable-state init and probes `mightContainLong` per row — no UDF
- * boundary, unlike the r3 shape).
+ * AND whole-stage codegen ([[graft.spark.BodyCodegen]] calls `nullSafeEval`,
+ * which probes `mightContainLong` on the filter its `@transient lazy val`
+ * reads from `bc.value` once per task — no UDF boundary, unlike the r3
+ * shape).
  */
 case class BloomMightContainBc(child: Expression, bc: Broadcast[BloomFilter])
-    extends UnaryExpression {
+    extends UnaryExpression with graft.spark.BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
 
   @transient private lazy val filter = bc.value
 
-  override protected def nullSafeEval(h: Any): Any =
+  override def nullSafeEval(h: Any): Any =
     filter.mightContainLong(h.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("seenBloomBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
-    val f = ctx.addMutableState("org.apache.spark.util.sketch.BloomFilter",
-      "seenBloom",
-      v => s"$v = (org.apache.spark.util.sketch.BloomFilter) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, h => s"${ev.value} = $f.mightContainLong($h);")
-  }
 
   override def prettyName: String = "bloom_might_contain_bc"
   override protected def withNewChildInternal(c: Expression): BloomMightContainBc =

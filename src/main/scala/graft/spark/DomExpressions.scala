@@ -7,8 +7,6 @@ import graft.sources.{HtmlParser, Serializer}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,39 +33,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[PushDomBelowGenerate]] evaluates one once per document, below a
   * `Generate`, when it reads only the generator's input row. */
 trait DomExpression extends BodyCodegen
-
-/** Whole-stage codegen that calls the interpreted body: the generated code
-  * evaluates the children, then passes their values to this expression
-  * through a reference object. A unary, binary or ternary form is null when
-  * any input is, and the call is its `nullSafeEval`; any other form handles
-  * nulls itself, defines `eval` as [[evalValues]] over all its children's
-  * values, and the call is `evalValues`. */
-trait BodyCodegen extends Expression {
-  def evalValues(values: Array[Any]): Any =
-    throw new UnsupportedOperationException(s"$prettyName evaluates through nullSafeEval")
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj(prettyName, this)
-    val ins = children.map(_.genCode(ctx))
-    val (call, anyNull) = this match {
-      case _: UnaryExpression | _: BinaryExpression | _: TernaryExpression =>
-        (ins.map(_.value).mkString("nullSafeEval(", ", ", ")"), ins.map(_.isNull).mkString(" || "))
-      case _ =>
-        (ins.map(i => s"${i.isNull} ? null : (Object) ${i.value}")
-          .mkString("evalValues(new Object[] {", ", ", "})"), "false")
-    }
-    val out = ctx.freshName("out")
-    ev.copy(code = code"""
-      ${ins.map(_.code).mkString("\n")}
-      boolean ${ev.isNull} = true;
-      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-      if (!($anyNull)) {
-        Object $out = $self.$call;
-        ${ev.isNull} = $out == null;
-        if (!${ev.isNull}) ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $out;
-      }""")
-  }
-}
 
 object DomExprUtil {
   def compile(e: Expression): List[SelectorAst.Complex] =

@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -12,11 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * [[graft.pipeline.TextPipeline]] (asserted by PipelineSpec's differential),
  * so the DuckDB oracles are unchanged — only the per-row cost drops.
  *
- * Each expression implements `doGenCode` (VERDICT r2 ask #7): the kernel
- * lives in [[PipelineExprOps]] as a static call shared by the interpreted
- * eval and the generated code, so a projection containing these stays inside
- * ONE WholeStageCodegen bracket instead of falling back to interpreted
- * `CodegenFallback` rows around every call.
+ * The kernels live in [[PipelineExprOps]] (and [[IvfQuantizer.assign]]).
+ * Each expression's `nullSafeEval` calls one, and [[BodyCodegen]] calls that
+ * `nullSafeEval` from the generated code, so a projection containing these
+ * stays inside ONE whole-stage codegen stage. Each declares its input types
+ * (`ExpectsInputTypes`), so a wrongly typed argument fails analysis instead
+ * of a task.
  */
 object PipelineExprOps {
   private final val P = graft.pipeline.TextPipeline.P
@@ -379,15 +380,14 @@ object PipelineExprOps {
   * The HOF form runs 16 interpreted `transform`+`array_min` passes and
   * allocates 16 intermediate arrays per row; this is one pass, zero
   * allocation beyond the result. */
-case class MinhashSig(child: Expression) extends UnaryExpression {
+case class MinhashSig(child: Expression) extends UnaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     PipelineExprOps.minhashSig(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PipelineExprOps.minhashSig($c)")
 
   override def prettyName: String = "minhash_sig"
   override protected def withNewChildInternal(c: Expression): MinhashSig =
@@ -398,15 +398,14 @@ case class MinhashSig(child: Expression) extends UnaryExpression {
   * (2×30-bit halves) in one pass instead of 60 interpreted `filter` scans.
   * Token hashes are non-negative (mod P), so the HOF's integer `div` equals
   * the unsigned shift used here. */
-case class SimhashBits(child: Expression) extends UnaryExpression {
+case class SimhashBits(child: Expression) extends UnaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     PipelineExprOps.simhashBits(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PipelineExprOps.simhashBits($c)")
 
   override def prettyName: String = "simhash_bits"
   override protected def withNewChildInternal(c: Expression): SimhashBits =
@@ -416,15 +415,14 @@ case class SimhashBits(child: Expression) extends UnaryExpression {
 /** `norm_fingerprint(text)` ≡ `TextPipeline.fingerprintSql`: the char fold
   * over the whitespace-normalized text in one streaming pass — the HOF form
   * materializes a one-char string per character. */
-case class NormFingerprint(child: Expression) extends UnaryExpression {
+case class NormFingerprint(child: Expression) extends UnaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     PipelineExprOps.normFingerprint(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PipelineExprOps.normFingerprint($c)")
 
   override def prettyName: String = "norm_fingerprint"
   override protected def withNewChildInternal(c: Expression): NormFingerprint =
@@ -436,20 +434,19 @@ case class NormFingerprint(child: Expression) extends UnaryExpression {
   * pass instead of `nBits` interpreted `aggregate(zip_with(...))` folds —
   * the ANN signature map side stays inside whole-stage codegen. */
 case class LshBitsExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends TernaryExpression with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), IntegerType, IntegerType)
+  override def checkInputDataTypes(): TypeCheckResult = DomExprUtil.firstFailure(
+    super.checkInputDataTypes(),
+    DomExprUtil.checkLiteral(second, "lsh_bits jStart")(_.toIntOption.exists(_ >= 0)),
+    DomExprUtil.checkLiteral(third, "lsh_bits nBits")(
+      _.toIntOption.exists(b => b >= 1 && b <= 63)))
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  @transient private lazy val jStart =
-    second.eval(null).asInstanceOf[Number].intValue()
-  @transient private lazy val nBits =
-    third.eval(null).asInstanceOf[Number].intValue()
 
   override def nullSafeEval(a: Any, j: Any, b: Any): Any =
-    PipelineExprOps.lshBits(a.asInstanceOf[ArrayData], jStart, nBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, j, b) =>
-      s"graft.spark.PipelineExprOps.lshBits($a, (int)$j, (int)$b)")
+    PipelineExprOps.lshBits(a.asInstanceOf[ArrayData], j.asInstanceOf[Int], b.asInstanceOf[Int])
 
   override def prettyName: String = "lsh_bits"
   override protected def withNewChildrenInternal(f: Expression, s2: Expression,
@@ -459,7 +456,9 @@ case class LshBitsExpr(first: Expression, second: Expression, third: Expression)
 /** `text_profile(text)` → the full q_text_analysis per-row struct in ONE
   * native pass (see [[PipelineExprOps.textProfile]] for the exact SQL forms
   * each field reproduces; PipelineSpec differential per column). */
-case class TextProfile(child: Expression) extends UnaryExpression {
+case class TextProfile(child: Expression) extends UnaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_chars_norm", LongType, nullable = false),
@@ -473,9 +472,6 @@ case class TextProfile(child: Expression) extends UnaryExpression {
   override def nullSafeEval(input: Any): Any =
     PipelineExprOps.textProfile(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PipelineExprOps.textProfile($c)")
-
   override def prettyName: String = "text_profile"
   override protected def withNewChildInternal(c: Expression): TextProfile =
     copy(child = c)
@@ -485,15 +481,14 @@ case class TextProfile(child: Expression) extends UnaryExpression {
   * differential): tokenize + md5-derived word hash in one native pass —
   * the map side of every shingle/simhash signature stays in codegen
   * instead of running an interpreted digest→hex→conv lambda per token. */
-case class WordHashes(child: Expression) extends UnaryExpression {
+case class WordHashes(child: Expression) extends UnaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     PipelineExprOps.wordHashes(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PipelineExprOps.wordHashes($c)")
 
   override def prettyName: String = "word_hashes"
   override protected def withNewChildInternal(c: Expression): WordHashes =
@@ -504,19 +499,15 @@ case class WordHashes(child: Expression) extends UnaryExpression {
   * (PipelineSpec differential): exact cosine in one native pass — the ANN
   * re-rank and brute-force scoring stay inside whole-stage codegen instead
   * of running three interpreted `aggregate(zip_with(...))` folds per pair. */
-case class CosSim(left: Expression, right: Expression) extends BinaryExpression {
+case class CosSim(left: Expression, right: Expression) extends BinaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any =
     PipelineExprOps.cosSim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""java.lang.Double ${ev.value}_r = graft.spark.PipelineExprOps.cosSim($a, $b);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin
-    })
 
   override def prettyName: String = "cos_sim"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosSim =
@@ -530,7 +521,9 @@ case class CosSim(left: Expression, right: Expression) extends BinaryExpression 
   * — up to ~30 interpreted `filter` array passes per row, the dominant term
   * of q_text_analysis' wall time (0.37 s of 0.70 s at sf0.1 on the round-3
   * host, BASELINE.md "Measurement history"); this is one token pass. */
-case class TextLangStats(child: Expression) extends UnaryExpression {
+case class TextLangStats(child: Expression) extends UnaryExpression
+    with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("lang_guess", StringType, nullable = false),
     StructField("n_stopwords", LongType, nullable = false)))
@@ -538,9 +531,6 @@ case class TextLangStats(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(toks: Any): Any =
     PipelineExprOps.langStats(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PipelineExprOps.langStats($c)")
 
   override def prettyName: String = "text_lang_stats"
   override protected def withNewChildInternal(c: Expression): TextLangStats =
@@ -605,22 +595,14 @@ object IvfBroadcasts extends graft.crawl.BroadcastSlots[IvfQuantizer]("IVF quant
   * doubled q_ann_ivf's wall) becomes a static JVM loop. */
 case class IvfAssignBc(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[IvfQuantizer])
-    extends UnaryExpression {
+    extends UnaryExpression with BodyCodegen with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = LongType
 
   @transient private lazy val quant = bc.value
 
-  override protected def nullSafeEval(e: Any): Any =
+  override def nullSafeEval(e: Any): Any =
     IvfQuantizer.assign(e.asInstanceOf[ArrayData], quant)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("ivfQuantBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
-    val q = ctx.addMutableState("graft.spark.IvfQuantizer", "ivfQuant",
-      v => s"$v = (graft.spark.IvfQuantizer) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, e =>
-      s"${ev.value} = graft.spark.IvfQuantizer.assign($e, $q);")
-  }
 
   override def prettyName: String = "ivf_assign_bc"
   override protected def withNewChildInternal(c: Expression): IvfAssignBc =

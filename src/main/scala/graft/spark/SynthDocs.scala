@@ -31,8 +31,10 @@ object SynthDocs {
       lit("<div id=\"main\" class=\"part "), brandCls(brand), lit("\">"),
       lit("<a href=\"/part/"), partkey, lit("\" class=\"plink\">"), ptype, lit("</a>"),
       lit("<ul class=\"words\">"),
-      concat_ws("", transform(split(name, " "),
-        w => concat(lit("<li>"), w, lit("</li>")))),
+      // one <li> per space-separated word, null name → no <li>; built
+      // without a lambda so the parse projection stays in whole-stage codegen
+      coalesce(concat(lit("<li>"), replace(name, lit(" "), lit("</li><li>")), lit("</li>")),
+        lit("")),
       lit("</ul><p class=\"sz\">size "), size, lit("</p></div></body></html>")
     )
 

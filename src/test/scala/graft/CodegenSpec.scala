@@ -1,15 +1,17 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import graft.PlanSpec.{domOutsideCodegen, isDom}
+import org.apache.spark.sql.types._
+import graft.PlanSpec.{domOutsideCodegen, isGraft}
 import graft.spark.{GraftFunctions => F}
 
 /**
- * Codegen vs interpreted differential for every DOM expression and for
- * `canonicalize_url` / `url_host`: each case runs in a session that compiles
+ * Codegen vs interpreted differential for every graft expression — the DOM
+ * expressions, `canonicalize_url` / `url_host`, the pipeline kernels and the
+ * two broadcast probes (`ivf_assign_bc`, `bloom_might_contain_bc`): each case runs in a session that compiles
  * everything (whole-stage codegen on, `CODEGEN_ONLY` projections) and in one
  * that compiles nothing (whole-stage codegen off, `NO_CODEGEN`), and the two
  * must give the same rows. Both sessions set `spark.sql.codegen.fallback=false`:
@@ -21,7 +23,9 @@ import graft.spark.{GraftFunctions => F}
  *
  * Inputs: the hand-written recovery pages of [[ParseFingerprintSpec]], a few
  * link pages, a null html and an empty document; ids, attribute keys, bases
- * and mutation arguments come from nullable columns, not literals.
+ * and mutation arguments come from nullable columns, not literals. The
+ * kernels read null and empty text and arrays, vectors of unequal length,
+ * zero vectors and a vector with a null element.
  */
 class CodegenSpec extends AnyFunSuite {
 
@@ -122,30 +126,94 @@ class CodegenSpec extends AnyFunSuite {
     "url_host" -> F.url_host(F.canonicalize_url(col("key"), col("base")))
   )
 
-  /** The DOM and URL expression classes of the SQL function table. */
+  /** Kernel inputs: text `t`, token hashes `h`, tokens `w`, embeddings `e`
+    * and `f`, hash `k`. Row 0 is all null, row 1 all empty; `f` differs from
+    * `e` in length on row 4, both are zero vectors on row 3, and `e` holds a
+    * null element on row 5. */
+  private def kernelDocs(s: SparkSession): DataFrame = {
+    def vec(seed: Int, n: Int): Seq[Any] =
+      (0 until n).map(d => ((seed * 131 + d * 37) % 23 - 11) / 7.0f)
+    val rows = Seq(
+      Row(0, null, null, null, null, null, null),
+      Row(1, "", Seq(), Seq(), Seq(), Seq(), 0L),
+      Row(2, "  The quick  brown\tfox jumps über the lazy dog  ", Seq(3L, 99L, 1000000006L, 3L),
+        Seq("the", "and", "der", "le", "y"), vec(2, 64), vec(5, 64), 42L),
+      Row(3, "Le chat et le chien sont dans la maison", Seq(5L), Seq(null, "la", "et"),
+        Seq.fill(64)(0.0f), Seq.fill(64)(0.0f), -7L),
+      Row(4, "Der Hund und die Katze 12 3!! \u00a0 x\n", Seq(7L, 7L), Seq("und", "die"),
+        vec(4, 64), vec(4, 32), 1L << 40),
+      Row(5, "a", Seq(0L), Seq(""), vec(1, 63) :+ null, vec(3, 64), null))
+    val schema = StructType(Seq(
+      StructField("i", IntegerType),
+      StructField("t", StringType),
+      StructField("h", ArrayType(LongType)),
+      StructField("w", ArrayType(StringType)),
+      StructField("e", ArrayType(FloatType)),
+      StructField("f", ArrayType(FloatType)),
+      StructField("k", LongType)))
+    s.createDataFrame(s.sparkContext.parallelize(rows, 2), schema).repartition(2)
+  }
+
+  /** name → column over [[kernelDocs]]. */
+  private val kernelCases: Seq[(String, Column)] = Seq(
+    "minhash_sig" -> F.minhash_sig(col("h")),
+    "simhash_bits" -> F.simhash_bits(col("h")),
+    "simhash_bits of word_hashes" -> F.simhash_bits(F.word_hashes(col("t"))),
+    "norm_fingerprint" -> F.norm_fingerprint(col("t")),
+    "text_profile" -> F.text_profile(col("t")),
+    "word_hashes" -> F.word_hashes(col("t")),
+    "text_lang_stats" -> F.text_lang_stats(col("w")),
+    "cos_sim" -> F.cos_sim(col("e"), col("f")),
+    "cos_sim of a vector with itself" -> F.cos_sim(col("e"), col("e")),
+    "lsh_bits 1 bit" -> F.lsh_bits(col("e"), 0, 1),
+    "lsh_bits 12 bits" -> F.lsh_bits(col("e"), 5, 12)
+  )
+
+  /** The graft expression classes of the SQL function table that build from
+    * literals (the two broadcast probes need a registered broadcast). */
   private lazy val registered: Set[Class[_]] = F.functions.flatMap { case (_, _, build) =>
-    scala.util.Try(build(Seq.fill(5)(Literal("a")))).toOption.filter(isDom).map(_.getClass)
+    scala.util.Try(build(Seq.fill(5)(Literal("a")))).toOption.filter(isGraft).map(_.getClass)
   }.toSet
 
-  private def rows(s: SparkSession, c: Column): Seq[String] =
-    docs(s).select(col("i"), c.as("v")).collect()
-      .sortBy(_.getInt(0)).map(_.toString).toSeq
-
   test("the cases cover every DOM and URL expression of the function table") {
-    val covered = cases.flatMap { case (_, c) =>
-      docs(interpretedSession).select(c).queryExecution.analyzed.expressions
-        .flatMap(_.collect { case e if isDom(e) => e.getClass })
-    }.toSet
-    assert(registered.size == 26, registered)
+    def classes(frame: DataFrame, cs: Seq[(String, Column)]) = cs.flatMap { case (_, c) =>
+      frame.select(c).queryExecution.analyzed.expressions
+        .flatMap(_.collect { case e if isGraft(e) => e.getClass })
+    }
+    val covered = (classes(docs(interpretedSession), cases) ++
+      classes(kernelDocs(interpretedSession), kernelCases)).toSet
+    assert(registered.size == 34, registered)
     assert(registered -- covered == Set.empty)
   }
 
-  for ((name, c) <- cases) test(s"$name: codegen gives the interpreted rows, inside whole-stage codegen") {
-    val got = rows(compiledSession, c)
-    assert(got == rows(interpretedSession, c))
-    assert(got.length == pages.length)
-    val plan = docs(compiledSession).select(col("i"), c.as("v")).queryExecution.executedPlan
-    val outside = domOutsideCodegen(plan)
-    assert(outside.isEmpty, s"$name runs outside whole-stage codegen:\n$plan")
+  /** The compiled rows equal the interpreted ones, and the compiled plan
+    * runs every graft expression inside whole-stage codegen. */
+  private def differential(name: String, frame: SparkSession => DataFrame)(c: => Column): Unit =
+    test(s"$name: codegen gives the interpreted rows, inside whole-stage codegen") {
+      val v = c
+      def q(s: SparkSession) = frame(s).select(col("i"), v.as("v"))
+      def rows(s: SparkSession) = q(s).collect().sortBy(_.getInt(0)).map(_.toString).toSeq
+      val got = rows(compiledSession)
+      assert(got == rows(interpretedSession))
+      assert(got.length == frame(interpretedSession).count())
+      val plan = q(compiledSession).queryExecution.executedPlan
+      val outside = domOutsideCodegen(plan)
+      assert(outside.isEmpty, s"$name runs outside whole-stage codegen:\n$plan")
+    }
+
+  for ((name, c) <- cases) differential(name, docs)(c)
+  for ((name, c) <- kernelCases) differential(name, kernelDocs)(c)
+
+  differential("ivf_assign_bc", kernelDocs) {
+    val cents = Array(Array.fill(64)(1.0f), Array.tabulate(64)(d => if (d % 2 == 0) 1.0f else -1.0f),
+      Array.fill(32)(-0.5f))
+    F.ivf_assign_bc(spark, "codegen-spec", graft.spark.IvfQuantizer.build(Array(3L, 8L, 11L), cents),
+      col("e"))
+  }
+
+  differential("bloom_might_contain_bc", kernelDocs) {
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100)
+    Seq(0L, 42L, 1L << 40).foreach(bloom.putLong)
+    F.bloom_probe_bc(spark, "codegen-spec", bloom, col("k"))
   }
 }

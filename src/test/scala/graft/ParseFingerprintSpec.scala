@@ -44,6 +44,36 @@ class ParseFingerprintSpec extends AnyFunSuite {
     check("synth_part", pages)
   }
 
+  test("SynthDocs part-catalog html equals the lambda-built <li> list, byte for byte") {
+    import org.apache.spark.sql.functions._
+    val s = spark
+    import s.implicits._
+    // the earlier form of partHtml: one <li> per split word, through a lambda
+    def lambdaHtml(name: org.apache.spark.sql.Column) = concat(
+      lit("<html><head><title>Part "), col("p_partkey"),
+      lit("</title><base href=\"https://parts.example/catalog/\"></head><body>"),
+      lit("<div id=\"main\" class=\"part "), lower(regexp_replace(col("p_brand"), "#", "-")),
+      lit("\">"), lit("<a href=\"/part/"), col("p_partkey"), lit("\" class=\"plink\">"),
+      col("p_type"), lit("</a>"), lit("<ul class=\"words\">"),
+      concat_ws("", transform(split(name, " "), w => concat(lit("<li>"), w, lit("</li>")))),
+      lit("</ul><p class=\"sz\">size "), col("p_size"), lit("</p></div></body></html>"))
+    val edge = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "a  b"), (4L, " a "), (5L, "x"))
+      .toDF("p_partkey", "p_name")
+      .select(col("p_partkey"), col("p_name"), lit("Brand#13").as("p_brand"),
+        lit("STANDARD TIN").as("p_type"), lit(7).as("p_size"))
+    val part = spark.read.parquet("/root/testdata/sf0.01/part.parquet")
+      .select("p_partkey", "p_name", "p_brand", "p_type", "p_size")
+    for (t <- Seq(part, edge)) {
+      val both = t.select(
+        SynthDocs.partHtml(col("p_partkey"), col("p_name"), col("p_brand"), col("p_type"),
+          col("p_size")).as("a"),
+        lambdaHtml(col("p_name")).as("b"))
+      assert(t.count() > 0)
+      val differ = both.filter(!col("a").eqNullSafe(col("b")))
+      assert(differ.count() == 0, differ.limit(3).collect().mkString("\n"))
+    }
+  }
+
   test("SynthDocs hacker-news pages (single and multi story) parse to the pinned fingerprint") {
     val one = SynthDocs.hnDocs(spark, sf).select("doc_id", "html")
       .orderBy("doc_id").collect().map(_.getString(1)).toSeq

@@ -526,6 +526,65 @@ class PipelineSpec extends AnyFunSuite {
     assert(out == 1)
   }
 
+  /** `frame.select(c)` fails analysis with a message holding `msg`, and no
+    * job ran. */
+  private def rejectedBeforeAnyJob(frame: org.apache.spark.sql.DataFrame,
+      c: org.apache.spark.sql.Column, msg: String): Unit = {
+    val group = s"analysis-${java.util.UUID.randomUUID}"
+    spark.sparkContext.setJobGroup(group, "analysis check")
+    val e = try intercept[org.apache.spark.sql.AnalysisException](frame.select(c))
+      finally spark.sparkContext.clearJobGroup()
+    assert(e.getMessage.contains(msg), e.getMessage)
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+      s"a job ran before $c failed")
+  }
+
+  /** One row: embedding `e` (64 floats), int column `j`, string `s`,
+    * token hashes `h`. */
+  private def kernelInputs = spark.range(1).select(
+    array((0 until 64).map(d => lit(d - 31.5f)): _*).as("e"),
+    col("id").cast("int").as("j"), lit("abc").as("s"), array(lit(7L)).as("h"))
+
+  test("lsh_bits with a column, null or out-of-range jStart / nBits fails at analysis, before any job runs") {
+    import graft.spark.{GraftFunctions => F}
+    F.register(spark)
+    val in = kernelInputs
+    val e = col("e")
+    rejectedBeforeAnyJob(in, call_function("lsh_bits", e, col("j"), lit(3)),
+      "lsh_bits jStart must be a literal")
+    rejectedBeforeAnyJob(in, call_function("lsh_bits", e, lit(0), col("j")),
+      "lsh_bits nBits must be a literal")
+    rejectedBeforeAnyJob(in, call_function("lsh_bits", e, lit(0), lit(null).cast("int")),
+      "lsh_bits nBits must not be null")
+    rejectedBeforeAnyJob(in, F.lsh_bits(e, -1, 3), "invalid lsh_bits jStart '-1'")
+    rejectedBeforeAnyJob(in, F.lsh_bits(e, 0, 0), "invalid lsh_bits nBits '0'")
+    rejectedBeforeAnyJob(in, F.lsh_bits(e, 0, 64), "invalid lsh_bits nBits '64'")
+    // the SQL surface gets the same check
+    in.createOrReplaceTempView("lsh_inputs")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT lsh_bits(e, j, 3) FROM lsh_inputs"))
+    assert(err.getMessage.contains("lsh_bits jStart must be a literal"), err.getMessage)
+    spark.catalog.dropTempView("lsh_inputs")
+    // the bounds themselves analyze and run
+    assert(in.select(F.lsh_bits(e, 0, 1), F.lsh_bits(e, 0, 63)).head().toSeq.forall(_ != null))
+  }
+
+  test("a pipeline kernel given a wrongly typed argument fails at analysis, before any job runs") {
+    import graft.spark.{GraftFunctions => F}
+    F.register(spark)
+    val in = kernelInputs
+    val (e, s, h) = (col("e"), col("s"), col("h"))
+    val quant = graft.spark.IvfQuantizer.build(Array(1L), Array(Array.fill(64)(1.0f)))
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(10)
+    for (c <- Seq(F.minhash_sig(s), F.minhash_sig(e), F.simhash_bits(s), F.norm_fingerprint(h),
+        F.text_profile(h), F.word_hashes(e), F.text_lang_stats(s), F.cos_sim(h, e),
+        F.cos_sim(e, s), F.lsh_bits(s, 0, 3), F.ivf_assign_bc(spark, "type-check", quant, s),
+        F.bloom_probe_bc(spark, "type-check", bloom, s)))
+      rejectedBeforeAnyJob(in, c, "UNEXPECTED_INPUT_TYPE")
+    val err = intercept[org.apache.spark.sql.AnalysisException](spark.sql("SELECT minhash_sig('abc')"))
+    assert(err.getMessage.contains("UNEXPECTED_INPUT_TYPE"), err.getMessage)
+  }
+
   test("a GraftExtensions session resolves every function of the table") {
     import graft.spark.{GraftExtensions, GraftFunctions => F}
     // a second session on the shared context, built WITHOUT register: with

@@ -352,6 +352,15 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("q_dom_parse_count: parse_html of the part-catalog pages runs inside whole-stage codegen") {
+    val q = SparkEntry.queries("q_dom_parse_count")(spark, sf)
+    q.collect()
+    val p = q.queryExecution.executedPlan
+    assert(p.toString.contains("parse_html"), p)
+    val outside = PlanSpec.domOutsideCodegen(p)
+    assert(outside.isEmpty, s"outside whole-stage codegen:\n${outside.mkString("\n")}\n$p")
+  }
+
   test("bucketed tables co-locate the seen join: zero exchanges in the join plan") {
     import spark.implicits._
     // the 100 TB lever for the recurring frontier-vs-seen join: both sides
@@ -472,14 +481,16 @@ object PlanSpec {
   import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
   import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-  def isDom(e: Expression): Boolean = e.isInstanceOf[graft.spark.DomExpression] ||
-    e.isInstanceOf[graft.crawl.CanonicalizeUrl] || e.isInstanceOf[graft.crawl.UrlHostExpr]
+  /** The graft expressions: the DOM and URL expressions, the pipeline
+    * kernels and the broadcast probes — every expression class of this
+    * project, whatever codegen path it takes. */
+  def isGraft(e: Expression): Boolean = e.getClass.getName.startsWith("graft.")
 
-  /** The operators of an executed plan that are `Generate`s or hold a DOM or
-    * URL expression, but run outside any whole-stage codegen stage. Reads
-    * the final adaptive plan, query stages included. */
+  /** The operators of an executed plan that are `Generate`s or hold a graft
+    * expression, but run outside any whole-stage codegen stage. Reads the
+    * final adaptive plan, query stages included. */
   def domOutsideCodegen(p: SparkPlan, fused: Boolean = false): Seq[String] = {
-    val dom = p.isInstanceOf[GenerateExec] || p.expressions.exists(_.exists(isDom))
+    val dom = p.isInstanceOf[GenerateExec] || p.expressions.exists(_.exists(isGraft))
     (if (dom && !fused) Seq(p.simpleString(200)) else Nil) ++ (p match {
       case w: WholeStageCodegenExec => domOutsideCodegen(w.child, fused = true)
       case i: InputAdapter => domOutsideCodegen(i.child)
